@@ -144,9 +144,8 @@ class Client:
         (python-api.md prepared_statement_stream; like the reference,
         prepared statements are primarily for schema discovery — this
         offers no performance edge over query_stream)."""
-        # the STATEMENT's sql drives view registration (lazy query_log /
-        # catalog views key on the text) and the audit record; resolve()
-        # makes register+analyze atomic under concurrency
+        # the STATEMENT's sql drives view binding (views key on the
+        # text) and the audit record
         from micromegas_spark.engine import attributed_iter
 
         df = self.engine.resolve(statement.sql, begin_ns, end_ns, args=params or {})
@@ -226,11 +225,12 @@ class Client:
         ``warehouse/ingest/<table>`` and (re)registers the table as a
         queryable view over the whole directory. Returns rows ingested.
         Append-only and atomic per call (parquet files land whole), like
-        the reference's replication endpoint."""
-        import pandas as pd
+        the reference's replication endpoint. Arrow input goes to Spark
+        as Arrow, so column types such as MAP<STRING,STRING> survive."""
+        import pyarrow as pa
 
-        if not isinstance(data, pd.DataFrame):
-            data = data.to_pandas()  # pyarrow Table / RecordBatch
+        if isinstance(data, pa.RecordBatch):
+            data = pa.Table.from_batches([data])
         sdf = self.engine.spark.createDataFrame(data)
         out = self.engine.fs.url("ingest", table_name)
         sdf.write.mode("append").parquet(out)
@@ -277,8 +277,9 @@ class Client:
         from micromegas_spark.timeutils import to_epoch_ns
 
         self.engine.require_admin("materialize_partitions")
-        return self.engine.lakehouse.materialize_range(
-            self.engine.batch_view(view_name),
+        spec = self.engine.batch_view(view_name)
+        return self.engine.lakehouse_for(spec).materialize_range(
+            spec,
             to_epoch_ns(begin),
             to_epoch_ns(end),
             partition_delta_seconds * 1_000_000_000,
@@ -292,8 +293,9 @@ class Client:
         from micromegas_spark.timeutils import to_epoch_ns
 
         self.engine.require_admin("regenerate_partitions")
-        return self.engine.lakehouse.regenerate_partitions(
-            self.engine.batch_view(view_name),
+        spec = self.engine.batch_view(view_name)
+        return self.engine.lakehouse_for(spec).regenerate_partitions(
+            spec,
             to_epoch_ns(begin),
             to_epoch_ns(end),
             partition_delta_seconds * 1_000_000_000,
@@ -311,8 +313,8 @@ class PreparedStatement:
         begin_ns: int | None = None,
         end_ns: int | None = None,
     ) -> "pd.DataFrame":
-        # re-register range-bounded views (keyed on THIS statement's sql),
-        # then run with bound parameters; audit-logged like query()
+        # bind range-bounded views (keyed on THIS statement's sql), then
+        # run with bound parameters; audit-logged like query()
         from micromegas_spark.engine import job_group
 
         df = self.client.engine.resolve(self.sql, begin_ns, end_ns, args=params or {})
@@ -328,13 +330,9 @@ class PreparedStatement:
 
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        from micromegas_spark.engine import _PLAN_LOCK
-
-        eng = self.client.engine
         names = set(_re.findall(r":(\w+)", self.sql))
-        # same register+analyze atomicity as resolve(), minus the audit
-        # record (schema discovery is not an executed statement)
-        with _PLAN_LOCK:
-            eng.prepare_views(self.sql, None, None)
-            df = eng.spark.sql(self.sql, args={n: None for n in names})
+        # bound and analyzed like resolve(), minus the audit record
+        # (schema discovery is not an executed statement)
+        spark = self.client.engine.prepare_views(self.sql)
+        df = spark.sql(self.sql, args={n: None for n in names})
         return to_arrow_schema(df.schema)

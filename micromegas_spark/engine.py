@@ -2,11 +2,13 @@
 (rust/analytics/src/lakehouse/query.rs:207-256 make_session_context +
 flight_sql_service_impl.rs query-range headers).
 
-``Engine.query(sql, begin_ns, end_ns)`` is the client surface: every
-registered view is (re)registered as a temp view bounded to the query range
-before ``spark.sql`` runs — the Spark-idiomatic equivalent of the
-reference's TableScanRewrite analyzer rule (table_scan_rewrite.rs:59-72,
-SURVEY §4: option (a), bake the range into the view DataFrames).
+``Engine.query(sql, begin_ns, end_ns)`` is the client surface: each
+registered view the statement names is bound, bounded to the query range,
+as a temp view of the planning thread's own cloned session before
+``spark.sql`` runs — the Spark-idiomatic equivalent of the reference's
+fresh SessionContext per query (query.rs:207-256) and its
+TableScanRewrite analyzer rule (table_scan_rewrite.rs:59-72, SURVEY §4:
+option (a), bake the range into the view DataFrames).
 
 ``Engine.view_instance(view_set, instance, begin, end)`` is the JIT path
 (SURVEY §3.2): a manifest-checked lazy materialization keyed by
@@ -21,6 +23,7 @@ from micromegas_spark.flightsql.errors import InvalidArgument
 
 import json
 import os
+import re
 import threading
 import time
 import uuid
@@ -36,18 +39,6 @@ from micromegas_spark.session import configure
 
 # builder(begin_ns|None, end_ns|None) -> DataFrame
 ViewBuilder = Callable[[int | None, int | None], DataFrame]
-
-# Temp views are SESSION-global, so two Engines (or two threads on one
-# Engine) planning concurrently on one SparkSession could resolve each
-# other's range-bounded views. Spark analyzes eagerly inside spark.sql()
-# — each temp view's logical plan is SUBSTITUTED into the returned
-# DataFrame at that moment — so holding this lock across
-# (prepare_views → spark.sql) makes register+analyze atomic: once
-# resolve() returns, later view replacement cannot retarget the plan.
-# The lock serializes only ms-scale driver planning, never execution
-# (the reference gets the same isolation from a fresh SessionContext
-# per query, rust/analytics/src/lakehouse/query.rs:207-256).
-_PLAN_LOCK = threading.RLock()
 
 
 @contextmanager
@@ -189,6 +180,17 @@ def _sql_data_spans(sql: str) -> list[bool]:
         else:
             i += 1
     return data
+
+
+def _literal_ns(lit: str) -> int:
+    """An admin call's timestamp literal (SQL '' escaping undone) → epoch
+    ns: raw epoch-ns integer spellings or ISO strings."""
+    from micromegas_spark.timeutils import to_epoch_ns
+
+    lit = lit.replace("''", "'").strip()
+    if re.fullmatch(r"-?\d+", lit):
+        return int(lit)
+    return to_epoch_ns(lit)
 
 
 @dataclass
@@ -348,6 +350,8 @@ class Engine:
         from collections import deque
 
         self._query_log: "deque[tuple]" = deque(maxlen=self.QUERY_LOG_MAX)
+        # per planning thread: its cloned session (see _session)
+        self._local = threading.local()
 
     # -- global views --------------------------------------------------------
 
@@ -369,46 +373,75 @@ class Engine:
     def register_table(self, name: str, df: DataFrame, time_column: str | None = None) -> None:
         self.register_view(name, lambda b, e, _df=df: _df, time_column)
 
+    def _session(self) -> SparkSession:
+        """This thread's planning session: a clone of ``self.spark``, made
+        on the thread's first statement. A clone shares the SparkContext,
+        the cache, the registered functions and the conf and temp views
+        the parent had when it was made, but has a temp-view catalog of
+        its own — so threads bind their statements' views without seeing
+        each other's, and need no lock. On one thread spark.sql analyses
+        eagerly, so a later rebinding cannot retarget a plan already
+        returned. One clone per thread, never per statement: the JVM
+        keeps every clone's session state alive."""
+        spark = getattr(self._local, "spark", None)
+        if spark is None:
+            spark = self._local.spark = SparkSession(
+                self.spark.sparkContext, self.spark._jsparkSession.cloneSession()
+            )
+        return spark
+
+    @staticmethod
+    def _bind(spark: SparkSession, name: str, df: DataFrame) -> None:
+        """Register ``df``, built on any session of this SparkContext, as
+        temp view ``name`` of ``spark``: its analyzed plan moves across
+        sessions, so view builders keep building on ``self.spark``."""
+        spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, df._jdf.queryExecution().analyzed()
+        ).createOrReplaceTempView(name)
+
     def prepare_views(
         self, sql: str, begin_ns: int | None = None, end_ns: int | None = None
-    ) -> None:
-        """(Re)register every view the statement may read, range-bounded.
-        Factored out of query() so the prepared-statement paths (which
-        must run spark.sql themselves to bind parameters) get IDENTICAL
-        resolution — including the lazy query_log and admin-catalog
-        views keyed on the statement's OWN text, not a placeholder."""
-        # lazy: materializing the log view costs O(len(log)) driver work,
-        # so only refresh it when the statement can actually read it
-        # (case-insensitive: Spark resolves view names case-insensitively;
-        # word-bounded so 'my_query_log_2' or a string literal containing
-        # the token doesn't trigger the O(len(log)) refresh — a FALSE
-        # positive only wastes work, a quoted-identifier miss is benign)
-        import re as _re
-
+    ) -> SparkSession:
+        """Bind the views ``sql`` names into this thread's session (see
+        _session), range-bounded, and return that session. Every path
+        that plans — resolve(), the prepared-statement schema lookup, the
+        admin ops — binds through here, keyed on the statement's OWN
+        text. A view counts as named when its name appears word-bounded,
+        case-insensitively (as Spark resolves view names): a false
+        positive only wastes a build, and a view the statement does not
+        name is never built. Temp views of ``self.spark`` the statement
+        names are copied in as they are now, not as they were when the
+        clone was made."""
+        spark = self._session()
         low = sql.lower()
-        if _re.search(r"\bquery_log\b", low):
-            self._register_query_log_view()
-        # SQL spellings of the catalog introspection functions: the
-        # reference registers list_partitions/list_view_sets for EVERY
-        # session (query.rs:113-120 — OUTSIDE the is_admin block; its
-        # functions-reference.md marks only retire/materialize/regenerate/
-        # retire_partition_by_file as 'Requires admin'). Registered lazily
-        # on reference so unrelated statements never pay the catalog scan;
-        # the admin gate lives solely on the mutating surface
-        # (require_admin in client.py / Lakehouse).
-        for name, build in (
-            ("list_partitions", lambda: self.lakehouse.partitions_df()),
-            (
-                "list_view_sets",
-                lambda: self.spark.createDataFrame(
-                    [(v,) for v in self.lakehouse.list_view_sets()],
-                    "view_set_name STRING",
-                ),
+
+        def named(name: str) -> bool:
+            return re.search(rf"(?<!\w){re.escape(name.lower())}(?!\w)", low) is not None
+
+        parent = self.spark._jsparkSession.sessionState().catalog()
+        mine = spark._jsparkSession.sessionState().catalog()
+        for name in parent.getTempViewNames().mkString("\n").split("\n"):
+            if name and named(name):
+                mine.createTempView(name, parent.getRawTempView(name).get(), True)
+        # query_log costs O(len(log)) driver work; list_partitions and
+        # list_view_sets are the SQL spellings of the catalog functions the
+        # reference registers for EVERY session (query.rs:113-120 — OUTSIDE
+        # the is_admin block; its functions-reference.md marks only
+        # retire/materialize/regenerate/retire_partition_by_file as
+        # 'Requires admin'), so the admin gate lives solely on the mutating
+        # surface (require_admin in client.py / Lakehouse)
+        builtin = {
+            "query_log": lambda b, e: self._query_log_df(),
+            "list_partitions": lambda b, e: self.lakehouse.partitions_df(),
+            "list_view_sets": lambda b, e: self.spark.createDataFrame(
+                [(v,) for v in self.lakehouse.list_view_sets()],
+                "view_set_name STRING",
             ),
-        ):
-            if _re.search(rf"\b{name}\b", low):
-                build().createOrReplaceTempView(name)
-        for name, builder in self._views.items():
+        }
+        # {**...} snapshots: a concurrent DoPut may register_table meanwhile
+        for name, builder in {**builtin, **self._views}.items():
+            if not named(name):
+                continue
             df = builder(begin_ns, end_ns)
             tc = self._time_columns.get(name)
             if tc is not None:
@@ -416,7 +449,8 @@ class Engine:
                     df = df.where(F.col(tc) >= begin_ns)
                 if end_ns is not None:
                     df = df.where(F.col(tc) < end_ns)
-            df.createOrReplaceTempView(name)
+            self._bind(spark, name, df)
+        return spark
 
     def log_query(
         self,
@@ -454,8 +488,9 @@ class Engine:
         two args at plan time from literals exactly like this). Each
         distinct literal call materializes through the existing Python
         view_instance() (manifest-cached parquet, block-aware when the
-        view set declares blocks), registers a deterministic temp view,
-        and the call text is substituted with the view name — the scan
+        view set declares blocks), is bound as a deterministic temp view
+        of the thread's session (_session), and the call text is
+        substituted with the view name — the scan
         never routes through a Python UDTF (udtfs.py:11 documents why
         that spelling is the scale anti-pattern).
 
@@ -469,14 +504,11 @@ class Engine:
         the rewrite lexes those spans first and touches only live text.
         Call detection is identifier-anchored so e.g.
         my_view_instance(...) is someone else's function, never rewritten
-        mid-identifier. Runs under _PLAN_LOCK like all planning; the
-        temp-view name is keyed on (set, instance) — sanitized + a short
-        stable hash so distinct keys can never alias one slot — and
-        repeat queries reuse one registration (register+analyze is
-        atomic under the lock, so a later re-register cannot retarget an
-        already-analyzed plan)."""
+        mid-identifier. The temp-view name is keyed on (set, instance) —
+        sanitized + a short stable hash so distinct keys can never alias
+        one slot — and repeat queries on a thread reuse one slot (a later
+        rebinding cannot retarget an already-analyzed plan)."""
         import hashlib as _hashlib
-        import re as _re
 
         if "view_instance" not in sql.lower():
             return sql
@@ -484,14 +516,14 @@ class Engine:
         in_data = _sql_data_spans(sql)
         # one arg literal = single-quoted with '' escaping (Spark grammar)
         _arg = r"'((?:[^']|'')*)'"
-        lit = _re.compile(
+        lit = re.compile(
             r"(?<![A-Za-z0-9_])view_instance\s*\(\s*%s\s*,\s*%s\s*\)" % (_arg, _arg),
-            _re.I,
+            re.I,
         )
         calls = [
             m
-            for m in _re.finditer(
-                r"(?<![A-Za-z0-9_])view_instance\s*\(", sql, _re.I
+            for m in re.finditer(
+                r"(?<![A-Za-z0-9_])view_instance\s*\(", sql, re.I
             )
             if not in_data[m.start()]
         ]
@@ -521,10 +553,10 @@ class Engine:
                 tag = _hashlib.sha1(
                     ("\x00".join(key)).encode("utf-8")
                 ).hexdigest()[:8]
-                name = "_vi_" + _re.sub(
+                name = "_vi_" + re.sub(
                     r"[^A-Za-z0-9_]", "_", f"{key[0]}__{key[1]}"
                 ) + "_" + tag
-                df.createOrReplaceTempView(name)
+                self._bind(self._session(), name, df)
                 made[key] = name
             return made[key]
 
@@ -603,18 +635,14 @@ class Engine:
         reference's spawner writes the task error as the last log entry,
         materialize_partitions_table_function.rs). Admin gating is
         require_admin's "not found" parity: a non-admin session never has
-        these functions registered. Timestamps accept ISO strings or raw
-        epoch-ns integer spellings; materialize/regenerate take a
-        trailing positive integer partition delta in seconds. Each log's
-        temp view is recorded in ``created_views`` so resolve() can drop
-        it once the statement is analyzed — the log must not stay
-        queryable by later statements (or by a non-admin Engine sharing
-        the SparkSession)."""
+        these functions registered. Arguments are checked by _admin_op,
+        which the streamed spelling shares. Each log's temp view is
+        recorded in ``created_views`` so resolve() can drop it once the
+        statement is analyzed — the log must not stay queryable by later
+        statements on the thread."""
         import hashlib as _hashlib
-        import re as _re
 
         from micromegas_spark.materialize.tasklog import TaskLog
-        from micromegas_spark.timeutils import to_epoch_ns
 
         low = sql.lower()
         live = [f for f in self._ADMIN_TABLE_FNS if f in low]
@@ -623,27 +651,21 @@ class Engine:
         self._reject_escaped_string_literals("partition-admin table functions")
         _arg = r"'((?:[^']|'')*)'"
 
-        def _ns(lit: str) -> int:
-            lit = lit.replace("''", "'").strip()
-            if _re.fullmatch(r"-?\d+", lit):
-                return int(lit)
-            return to_epoch_ns(lit)
-
         in_data = _sql_data_spans(sql)
         matches: list[tuple] = []  # (match, fn)
         for fn in live:
             calls = [
                 m
-                for m in _re.finditer(rf"(?<![A-Za-z0-9_]){fn}\s*\(", sql, _re.I)
+                for m in re.finditer(rf"(?<![A-Za-z0-9_]){fn}\s*\(", sql, re.I)
                 if not in_data[m.start()]
             ]
             if not calls:
                 continue
             self.require_admin(fn)
             tail = r"" if fn == "retire_partitions" else r"\s*,\s*(-?\d+)"
-            lit = _re.compile(
+            lit = re.compile(
                 rf"(?<![A-Za-z0-9_]){fn}\s*\(\s*{_arg}\s*,\s*{_arg}\s*,\s*{_arg}{tail}\s*\)",
-                _re.I,
+                re.I,
             )
             found = [m for m in lit.finditer(sql) if not in_data[m.start()]]
             if len(calls) != len(found):
@@ -659,32 +681,12 @@ class Engine:
 
         # validation pass: every call's arguments check out before ANY op
         # runs, so a bad third call can't leave the first two half-applied
-        todo = []
-        for m, fn in matches:
-            view = m.group(1).replace("''", "'")
-            begin_ns, end_ns = _ns(m.group(2)), _ns(m.group(3))
-            if fn == "retire_partitions":
-                todo.append((m, fn, (view, begin_ns, end_ns)))
-                continue
-            delta = int(m.group(4))
-            if delta <= 0:
-                # materialize_range's bucket loop requires a positive
-                # stride — 0 would divide by zero, negative never ends
-                raise InvalidArgument(
-                    f"{fn}(): partition_delta_seconds must be a positive "
-                    f"integer, got {delta}"
-                )
-            spec = self.batch_view(view)  # unknown view raises at plan time
-            todo.append((m, fn, (spec, begin_ns, end_ns, delta * 1_000_000_000)))
+        todo = [(m, fn, *self._admin_op(fn, m.groups())) for m, fn in matches]
 
+        spark = self._session()
         pieces, last = [], 0
-        for i, (m, fn, op_args) in enumerate(todo):
+        for i, (m, fn, op, op_args) in enumerate(todo):
             log = TaskLog()
-            op = {
-                "retire_partitions": self.lakehouse.retire_partitions,
-                "materialize_partitions": self.lakehouse.materialize_range,
-                "regenerate_partitions": self.lakehouse.regenerate_partitions,
-            }[fn]
             try:
                 op(*op_args, log)
             except Exception as e:
@@ -696,7 +698,7 @@ class Engine:
                 f"{fn}\x00{m.group(0)}\x00{i}".encode("utf-8")
             ).hexdigest()[:8]
             name = f"_tasklog_{fn}_{tag}"
-            log.to_df(self.spark).createOrReplaceTempView(name)
+            log.to_df(spark).createOrReplaceTempView(name)
             if created_views is not None:
                 created_views.append(name)
             pieces.append(sql[last : m.start()])
@@ -705,34 +707,60 @@ class Engine:
         pieces.append(sql[last:])
         return "".join(pieces)
 
+    def _admin_op(self, fn: str, args: tuple) -> tuple:
+        """One admin call's SQL literal arguments — (view, begin, end),
+        plus the partition delta in seconds for materialize/regenerate —
+        checked and turned into ``(op, op_args)``, ready to run with a
+        TaskLog. Both SQL spellings (the rewrite and the streamed DoGet
+        path) go through here, so they cannot drift apart. Timestamps
+        accept ISO strings or raw epoch-ns integer spellings; the delta
+        must be positive and the view registered, both checked at plan
+        time. materialize/regenerate run on lakehouse_for(spec), which
+        binds the views the op reads in this thread's session."""
+        view = args[0].replace("''", "'")
+        begin_ns, end_ns = _literal_ns(args[1]), _literal_ns(args[2])
+        if fn == "retire_partitions":
+            return self.lakehouse.retire_partitions, (view, begin_ns, end_ns)
+        delta = int(args[3])
+        if delta <= 0:
+            # materialize_range's bucket loop requires a positive
+            # stride — 0 would divide by zero, negative never ends
+            raise InvalidArgument(
+                f"{fn}(): partition_delta_seconds must be a positive "
+                f"integer, got {delta}"
+            )
+        spec = self.batch_view(view)  # unknown view raises at plan time
+        lake = self.lakehouse_for(spec)
+        op = (
+            lake.materialize_range
+            if fn == "materialize_partitions"
+            else lake.regenerate_partitions
+        )
+        return op, (spec, begin_ns, end_ns, delta * 1_000_000_000)
+
     def parse_streamable_admin_call(self, sql: str):
         """The served path's STREAMING-eligible admin spelling: a statement
         that is exactly one admin table-function call selected whole —
         ``SELECT * FROM <fn>('view', 'begin', 'end'[, delta])`` — parsed,
-        validated and returned as ``(fn, op, op_args)`` ready to run with
-        a caller-provided TaskLog; ``None`` for anything else (projections,
+        validated and returned as ``(op, op_args)`` ready to run with a
+        caller-provided TaskLog; ``None`` for anything else (projections,
         joins, WHERE, composed statements), which falls back to the
         at-completion rewrite (_rewrite_admin_calls). This mirrors the
         reference, whose TaskLogExecPlan streams exactly when the admin
         call IS the plan root (task_log_exec_plan.rs:35-60); a composed
         statement needs the full relation before Spark can plan over it.
 
-        Validation parity with the rewrite: admin gating first ("not
-        found" for non-admin), positive delta, view resolved at plan
-        time. Arity mismatches (materialize without a delta, retire with
-        one) return None so the rewrite raises its single authoritative
-        literal-arguments error."""
-        import re as _re
-
-        from micromegas_spark.timeutils import to_epoch_ns
-
+        Admin gating comes first ("not found" for non-admin), then the
+        rewrite's own argument checks (_admin_op). Arity mismatches
+        (materialize without a delta, retire with one) return None so the
+        rewrite raises its single authoritative literal-arguments error."""
         _a = r"'((?:[^']|'')*)'"
-        m = _re.fullmatch(
+        m = re.fullmatch(
             r"\s*SELECT\s+\*\s+FROM\s+"
             r"(materialize_partitions|regenerate_partitions|retire_partitions)"
             rf"\s*\(\s*{_a}\s*,\s*{_a}\s*,\s*{_a}\s*(?:,\s*(-?\d+)\s*)?\)\s*;?\s*",
             sql,
-            _re.I,
+            re.I,
         )
         if not m:
             return None
@@ -741,30 +769,7 @@ class Engine:
         if (fn == "retire_partitions") == has_delta:
             return None  # wrong arity → the rewrite's error path owns it
         self.require_admin(fn)
-
-        def _ns(lit: str) -> int:
-            lit = lit.replace("''", "'").strip()
-            if _re.fullmatch(r"-?\d+", lit):
-                return int(lit)
-            return to_epoch_ns(lit)
-
-        view = m.group(2).replace("''", "'")
-        begin_ns, end_ns = _ns(m.group(3)), _ns(m.group(4))
-        if fn == "retire_partitions":
-            return fn, self.lakehouse.retire_partitions, (view, begin_ns, end_ns)
-        delta = int(m.group(5))
-        if delta <= 0:
-            raise InvalidArgument(
-                f"{fn}(): partition_delta_seconds must be a positive "
-                f"integer, got {delta}"
-            )
-        op = (
-            self.lakehouse.materialize_range
-            if fn == "materialize_partitions"
-            else self.lakehouse.regenerate_partitions
-        )
-        spec = self.batch_view(view)  # unknown view raises at plan time
-        return fn, op, (spec, begin_ns, end_ns, delta * 1_000_000_000)
+        return self._admin_op(fn, m.groups()[1:])
 
     def resolve(
         self,
@@ -774,12 +779,12 @@ class Engine:
         args: dict | None = None,
         query_id: str | None = None,
     ) -> DataFrame:
-        """Atomically bind views to [begin, end) and analyze the statement.
-        Every execution path (query(), the client's prepared-statement and
-        convenience lookups) funnels here so concurrent queries with
-        different ranges each resolve against their OWN bounds — see
-        _PLAN_LOCK. Returns the eagerly-analyzed DataFrame; execution
-        stays lazy and unserialized."""
+        """Bind the statement's views to [begin, end) in this thread's
+        session (_session) and analyze it there. Every execution path
+        (query(), the client's prepared-statement and convenience lookups)
+        funnels here, so concurrent queries with different ranges each
+        resolve against their OWN bounds without waiting on each other.
+        Returns the eagerly-analyzed DataFrame; execution stays lazy."""
         query_id = query_id or uuid.uuid4().hex[:16]
         # job-group attribution for the per-query resource audit
         # (reference #1406 QueryAuditRecord): the group opens BEFORE
@@ -789,9 +794,10 @@ class Engine:
         # never inherit a stale id. Execution-time jobs re-attribute at
         # the call sites that actually collect (job_group(df) in
         # Client/server/CLI paths, keyed off df._mm_query_id).
-        with _PLAN_LOCK, job_group(self.spark.sparkContext, query_id, sql):
+        with job_group(self.spark.sparkContext, query_id, sql):
             t0 = time.time()
             tasklog_views: list[str] = []
+            spark = self._session()
             try:
                 # the reference's primary documented UX is SQL-spelled
                 # view_instance (view_instance_table_function.rs:49-70,
@@ -803,11 +809,7 @@ class Engine:
                 # are substituted with their task-log relations
                 exec_sql = self._rewrite_admin_calls(exec_sql, tasklog_views)
                 self.prepare_views(exec_sql, begin_ns, end_ns)
-                out = (
-                    self.spark.sql(exec_sql, args=args)
-                    if args
-                    else self.spark.sql(exec_sql)
-                )
+                out = spark.sql(exec_sql, args=args) if args else spark.sql(exec_sql)
             except Exception as e:
                 # failed plans still leave an audit record with the #1435
                 # classification, so query_failed-style monitoring can key
@@ -823,11 +825,10 @@ class Engine:
                 # task-log temp views are statement-scoped: the analyzed
                 # plan above holds the resolved LocalRelation, so the
                 # catalog name can (and must) go away — otherwise the
-                # admin op's output stays queryable by later statements,
-                # including by a non-admin Engine on the same session
+                # admin op's output stays queryable by later statements
                 for name in tasklog_views:
                     try:
-                        self.spark.catalog.dropTempView(name)
+                        spark.catalog.dropTempView(name)
                     except Exception:
                         pass
             # self-observability: the reference's analytics service emits a
@@ -944,7 +945,7 @@ class Engine:
                 f"{self.max_spill_mb} MB budget"
             )
 
-    def _register_query_log_view(self) -> DataFrame:
+    def _query_log_df(self) -> DataFrame:
         from pyspark.sql.types import (
             DoubleType,
             LongType,
@@ -976,9 +977,8 @@ class Engine:
                 StructField("msg", StringType()),
             ]
         )
-        metrics = self._metrics_by_query_id(
-            {rec[5] for rec in self._query_log if rec[5]}
-        )
+        log = list(self._query_log)  # other threads append meanwhile
+        metrics = self._metrics_by_query_id({rec[5] for rec in log if rec[5]})
         zero = {
             "peak_execution_memory_bytes": 0,
             "memory_spill_bytes": 0,
@@ -1017,23 +1017,19 @@ class Engine:
                     separators=(",", ":"),
                 ),
             )
-            for (t, sql, b, e, ms, qid, ecls) in self._query_log
+            for (t, sql, b, e, ms, qid, ecls) in log
             for m in (metrics.get(qid, zero),)
         ]
-        df = self.spark.createDataFrame(rows, schema)
-        df.createOrReplaceTempView("query_log")
-        return df
+        return self.spark.createDataFrame(rows, schema)
 
     def query_log(self) -> DataFrame:
         """Query history as a DataFrame (time_ns, sql, begin_ns, end_ns,
-        plan_ms), also registered as the ``query_log`` temp view. The
-        view is refreshed lazily — at the start of any query() whose SQL
-        references query_log, and on every query_log() call — so SQL
-        over it always sees all prior queries without paying the
-        O(len(log)) materialization on unrelated statements. The log
-        rotates at QUERY_LOG_MAX entries; the in-flight query itself is
-        appended after it is planned."""
-        return self._register_query_log_view()
+        plan_ms), also the ``query_log`` view of every statement that
+        names it — built then, so SQL over it always sees all prior
+        queries without paying the O(len(log)) materialization on
+        unrelated statements. The log rotates at QUERY_LOG_MAX entries;
+        the in-flight query itself is appended after it is planned."""
+        return self._query_log_df()
 
     def failure_counters(self) -> dict[str, int]:
         """The #1435 monitoring contract over the audit log:
@@ -1046,7 +1042,7 @@ class Engine:
         query_failed/query_failed_user/query_failed_resource split).
         Driver-side scan of the bounded in-memory log: O(QUERY_LOG_MAX)."""
         counts = {"query_failed": 0, "query_failed_user": 0, "query_failed_resource": 0}
-        for rec in self._query_log:
+        for rec in list(self._query_log):
             cls = rec[6]
             if cls == "internal":
                 counts["query_failed"] += 1
@@ -1093,6 +1089,17 @@ class Engine:
 
             self._lakehouse = Lakehouse(self.spark, self.warehouse)
         return self._lakehouse
+
+    def lakehouse_for(self, spec):
+        """The catalog over this thread's session, with the views
+        ``spec``'s count and extract queries name bound fresh and
+        unbounded — what every materialize/regenerate op runs on, so a
+        tick reads the views as they are now, whatever statement (if any)
+        ran before it."""
+        from micromegas_spark.materialize import Lakehouse
+
+        spark = self.prepare_views(f"{spec.count_query}\n{spec.extract_query}")
+        return Lakehouse(spark, self.warehouse)
 
     def register_batch_view(self, spec) -> None:
         """Register a BatchViewSpec so client admin calls can address it by

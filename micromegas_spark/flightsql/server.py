@@ -17,10 +17,10 @@ client can consume a result larger than the driver heap. Spark remains the
 execution engine; this is purely the transport the rebuild was missing
 (in-process ``client.Client`` covers the same surface without a network).
 
-Scale shape: one server process fronts one SparkSession; concurrent gRPC
-calls funnel through ``Engine.resolve`` whose plan lock serializes only
-ANALYSIS (execution and result streaming overlap freely across calls) —
-same contract the reference gets from per-query SessionContexts.
+Scale shape: one server process fronts one SparkSession; each gRPC
+serving thread plans in its own clone of it (``Engine.resolve``), so
+concurrent calls never wait on each other's planning — the contract the
+reference gets from per-query SessionContexts.
 """
 
 from __future__ import annotations
@@ -435,7 +435,7 @@ class FlightSQLServer:
         from micromegas_spark.materialize.tasklog import TaskLog
 
         flight = _flight()
-        fn, op, op_args = parsed
+        op, op_args = parsed
         q: _queue.SimpleQueue = _queue.SimpleQueue()
         done = object()
 
@@ -449,20 +449,11 @@ class FlightSQLServer:
 
         def run() -> None:
             try:
-                # attribute the op's Spark jobs to this request (#1406),
-                # and serialize the catalog mutation under _PLAN_LOCK like
-                # the embedded rewrite path does — an admin op must not
-                # interleave with a concurrent resolve()'s view
-                # registration (ADVICE r10; the per-view flock protects
-                # the catalog files, this protects the session's planner
-                # state). Progress rows still stream mid-run: the lock
-                # holder is the worker, the generator only drains the
-                # queue.
-                from micromegas_spark.engine import _PLAN_LOCK
-
-                with _PLAN_LOCK, job_group(
-                    self.engine.spark.sparkContext, query_id, sql
-                ):
+                # attribute the op's Spark jobs to this request (#1406).
+                # The op runs on the session the handler thread bound its
+                # views in; that thread only drains the queue until the
+                # op is done, so nothing rebinds them meanwhile.
+                with job_group(self.engine.spark.sparkContext, query_id, sql):
                     op(*op_args, log)
             except Exception as e:
                 log.write(f"error: {e}")

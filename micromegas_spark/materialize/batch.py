@@ -319,10 +319,8 @@ class Lakehouse:
     # (partition_cache.rs:329-466). At fleet scale (10⁶ partitions) a
     # columnar manifest loads in milliseconds and predicate-prunes;
     # sub-file row groups keep even a giant view's catalog scannable.
-    # Atomicity: one atomic swap of the per-view file (tmp+move on
-    # POSIX/HDFS, single PUT on object stores — fslayer.py) — the
-    # transactional retire+insert. Legacy JSON manifests are still read
-    # (and upgraded on the next save).
+    # Atomicity: a compare-and-swap claim of the next generation file
+    # (_commit_manifest) — the transactional retire+insert.
 
     _MANIFEST_FIELDS = [
         "begin_insert_ns",
@@ -334,12 +332,6 @@ class Lakehouse:
         "updated_unix",
         "schema_hash",
     ]
-
-    def _manifest_path(self, view: str) -> str:
-        return self.fs.url("_partitions", f"{view}.parquet")
-
-    def _legacy_manifest_path(self, view: str) -> str:
-        return self.fs.url("_partitions", f"{view}.json")
 
     def _manifest_candidates(self, view: str) -> list[tuple[int, str]]:
         """(generation, filename) of every generation-numbered manifest
@@ -369,9 +361,8 @@ class Lakehouse:
         commit (read(v) → claim(v+1), VERDICT r10 #1). Winner among
         generation files: highest generation, then lexicographically
         smallest name (ties only possible on object stores, where names
-        carry a random token — see _commit_manifest). Pre-CAS manifests
-        (<view>.parquet / <view>.json) read as generation 0, so the first
-        CAS commit upgrades them in place. Retries the list+read when a
+        carry a random token — see _commit_manifest); no file reads as
+        the empty generation 0. Retries the list+read when a
         concurrent committer's old-generation sweep removes the chosen
         file between our list and open (needs ≥ _MANIFEST_KEEP_GENS
         commits inside that window)."""
@@ -381,14 +372,6 @@ class Lakehouse:
                 if cands:
                     gen, fname = min(cands, key=lambda c: (-c[0], c[1]))
                     return self._read_manifest_file(fname), gen
-                if self.fs.exists(self._manifest_path(view)):
-                    return self._read_manifest_file(f"{view}.parquet"), 0
-                legacy = self._legacy_manifest_path(view)
-                if self.fs.exists(legacy):
-                    return [
-                        Partition(**row)
-                        for row in json.loads(self.fs.read_bytes(legacy))
-                    ], 0
                 return [], 0
             except (FileNotFoundError, OSError):
                 continue
@@ -481,22 +464,18 @@ class Lakehouse:
     def _sweep_manifest_gens(self, view: str, new_gen: int) -> None:
         """Post-commit hygiene: drop generations old enough that no
         in-flight reader can still want them (losers at those generations
-        included), plus the pre-CAS legacy files — the generation chain
-        now wins. Best-effort: a sweep that loses a race to another
+        included). Best-effort: a sweep that loses a race to another
         sweep just finds the file already gone."""
         for g, name in self._manifest_candidates(view):
             if g <= new_gen - 1 - _MANIFEST_KEEP_GENS:
                 self.fs.delete_file(self.fs.url("_partitions", name))
-        for legacy in (self._manifest_path(view), self._legacy_manifest_path(view)):
-            if self.fs.exists(legacy):
-                self.fs.delete_file(legacy)
 
     def _save_manifest(self, view: str, parts: list[Partition]) -> None:
         """Unconditional catalog save: CAS-retried until this exact
-        ``parts`` list is the committed state (tests and the legacy
-        upgrade path use it). Catalog MUTATORS never call this — they go
-        through _commit_delta so a lost race re-applies their DELTA on
-        the winner's state instead of overwriting it."""
+        ``parts`` list is the committed state (tests use it). Catalog
+        MUTATORS never call this — they go through _commit_delta so a
+        lost race re-applies their DELTA on the winner's state instead
+        of overwriting it."""
         for _ in range(_COMMIT_RETRIES):
             _, gen = self._manifest_state(view)
             if self._commit_manifest(view, parts, gen):
@@ -531,22 +510,14 @@ class Lakehouse:
     )
 
     def _winner_manifest_files(self) -> dict[str, str]:
-        """view → its winning manifest FILE name: the generation chain's
-        head if one exists, else the pre-CAS single parquet. One listdir
-        serves every view."""
+        """view → its winning manifest FILE name, the head of its
+        generation chain. One listdir serves every view."""
         best: dict[str, tuple] = {}
         for name in self.fs.listdir(self.fs.url("_partitions")):
             m = _MANIFEST_GEN_RE.search(name)
-            if m:
-                view, key = name[: m.start()], (-int(m.group(1)), name)
-            elif (
-                name.endswith(".parquet")
-                and ".tmp" not in name
-                and ".claim" not in name
-            ):
-                view, key = name[: -len(".parquet")], (0, name)
-            else:
+            if not m:
                 continue
+            view, key = name[: m.start()], (-int(m.group(1)), name)
             if view not in best or key < best[view][0]:
                 best[view] = (key, name)
         return {v: n for v, (_k, n) in best.items()}
@@ -555,42 +526,17 @@ class Lakehouse:
         """The entire partition catalog as a DataFrame (every view's
         winning manifest file is one parquet table under _partitions/) —
         the queryable-catalog property of the reference's Postgres-backed
-        list_partitions, without a serving database. Views still on the
-        legacy JSON manifest (not yet upgraded by a save) are included
-        via driver-side rows, so a pre-upgrade warehouse reports its
-        full catalog."""
-        winners = self._winner_manifest_files()
-        files = [self.fs.url("_partitions", n) for n in winners.values()]
-        pq_views = set(winners)
-        legacy_rows = [
-            (
-                v,
-                int(p.begin_insert_ns),
-                int(p.end_insert_ns),
-                int(p.source_hash),
-                int(p.min_event_ns),
-                int(p.max_event_ns),
-                p.path,
-                float(p.updated_unix),
-                p.schema_hash,
-                json.dumps(p.column_stats or {}),
-            )
-            for v in self.list_view_sets()
-            if v not in pq_views
-            for p in self.list_partitions(v)
+        list_partitions, without a serving database."""
+        files = [
+            self.fs.url("_partitions", n)
+            for n in self._winner_manifest_files().values()
         ]
-        out = None
-        if files:
-            # column order differs between writes only by schema, fixed here
-            out = self.spark.read.parquet(*files).select(
-                *[c.split()[0] for c in self._MANIFEST_DDL.split(", ")]
-            )
-        if legacy_rows:
-            legacy_df = self.spark.createDataFrame(legacy_rows, self._MANIFEST_DDL)
-            out = legacy_df if out is None else out.unionByName(legacy_df)
-        if out is None:
+        if not files:
             return self.spark.createDataFrame([], self._MANIFEST_DDL)
-        return out
+        # column order differs between writes only by schema, fixed here
+        return self.spark.read.parquet(*files).select(
+            *[c.split()[0] for c in self._MANIFEST_DDL.split(", ")]
+        )
 
     # -- materialization ---------------------------------------------------
 
@@ -734,9 +680,13 @@ class Lakehouse:
         ]
         if len(inside) <= 1:
             return "abort"
-        src = self.spark.read.parquet(*[p.path for p in inside])
-        src.createOrReplaceTempView("source")
-        merged = self.spark.sql(spec.merge_query)
+        # `source` is bound in a clone made for this merge, never in the
+        # shared session: concurrent merges and statements cannot see it
+        spark = SparkSession(
+            self.spark.sparkContext, self.spark._jsparkSession.cloneSession()
+        )
+        spark.read.parquet(*[p.path for p in inside]).createOrReplaceTempView("source")
+        merged = spark.sql(spec.merge_query)
         # unique write-once path; the manifest swap below is the commit
         out_dir = self.fs.unique_dir_url(spec.name, f"{begin_ns}_{end_ns}")
         # recompute column stats from the MERGED rows — child stats can't
@@ -882,10 +832,6 @@ class Lakehouse:
             m = _MANIFEST_GEN_RE.search(f)
             if m:
                 names.add(f[: m.start()])
-            elif f.endswith(".parquet") and ".tmp" not in f and ".claim" not in f:
-                names.add(f[: -len(".parquet")])
-            elif f.endswith(".json"):
-                names.add(f[: -len(".json")])
         return sorted(names)
 
     def retire_partitions(
@@ -1117,23 +1063,12 @@ class Lakehouse:
         table) while a bounded query's survivors are typically a few
         hundred rows — this keeps query planning over a giant view's
         catalog in milliseconds. Semantics identical to filtering
-        list_partitions in Python (equivalence is test-pinned); legacy
-        JSON manifests take the Python path."""
+        list_partitions in Python (equivalence is test-pinned)."""
         for _ in range(4):
             cands = self._manifest_candidates(view)
-            if cands:
-                _, fname = min(cands, key=lambda c: (-c[0], c[1]))
-            elif self.fs.exists(self._manifest_path(view)):
-                fname = f"{view}.parquet"
-            else:
-                parts = self.list_partitions(view)  # legacy JSON or empty
-                if schema_hash is not None:
-                    parts = [p for p in parts if p.schema_hash == schema_hash]
-                if begin_event_ns is not None:
-                    parts = [p for p in parts if p.max_event_ns >= begin_event_ns]
-                if end_event_ns is not None:
-                    parts = [p for p in parts if p.min_event_ns < end_event_ns]
-                return parts
+            if not cands:
+                return []
+            _, fname = min(cands, key=lambda c: (-c[0], c[1]))
             try:
                 tbl = self.fs.read_parquet_table(
                     self.fs.url("_partitions", fname)
@@ -1222,7 +1157,13 @@ class Lakehouse:
                     return True
             parts = [p for p in parts if can_match(p)]
         if not parts:
-            return self.spark.range(0).select()  # empty, schema-less guard
+            # typed empty result: the schema of one live partition (one
+            # footer read), every row filtered out — column references
+            # still resolve; schema-less only when the view has none
+            live = self._pruned_partitions(view, schema_hash, None, None)
+            if not live:
+                return self.spark.range(0).select()
+            return self.spark.read.parquet(live[0].path).where(F.lit(False))
         df = self.spark.read.parquet(*[p.path for p in parts])
         if time_column:
             if begin_event_ns is not None:

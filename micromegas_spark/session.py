@@ -2,7 +2,8 @@
 
 The reference builds a DataFusion SessionContext per query with UDFs and view
 providers registered (rust/analytics/src/lakehouse/query.rs:207-256). Our
-equivalent is one long-lived SparkSession with:
+equivalent is one long-lived SparkSession, cloned once per planning thread by
+``Engine`` (each clone binds its own statements' views), with:
 
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing) — this
   is what makes the same code survive a 100x scale-up without manual tuning;

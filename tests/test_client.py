@@ -329,13 +329,12 @@ def test_prepared_statement_reaches_lazy_views_and_audit(spark, tmp_path):
 
 
 def test_concurrent_engine_queries_keep_own_bounds(spark):
-    """Two threads querying ONE Engine with different [begin, end) ranges
-    must each resolve against their own bounds — temp views are
-    session-global, so without register+analyze atomicity (Engine.resolve
-    under _PLAN_LOCK) one thread's createOrReplaceTempView could retarget
-    the other's in-flight plan (the reference avoids this with a fresh
-    SessionContext per query, query.rs:207-256). Many iterations per
-    thread to actually exercise the interleaving."""
+    """Threads querying ONE Engine with different [begin, end) ranges must
+    each resolve against their own bounds — each thread binds its views in
+    its own cloned session (Engine._session), so one thread's binding
+    can never retarget another's in-flight plan (the reference gets the
+    same from a fresh SessionContext per query, query.rs:207-256). Many
+    iterations per thread to actually exercise the interleaving."""
     import threading
 
     from micromegas_spark.engine import Engine

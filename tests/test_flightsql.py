@@ -241,6 +241,29 @@ def test_bulk_ingest_do_put_round_trip(spark, tmp_path_factory):
     assert list(got["process_id"]) == ["p1", "p2", "p3"]
 
 
+def test_bulk_ingest_keeps_map_column_type(spark, tmp_path_factory):
+    """DoPut hands the Arrow table to Spark as Arrow: a MAP<STRING,STRING>
+    properties column stays a map, so property_get reads it back."""
+    wh = str(tmp_path_factory.mktemp("flight_map"))
+    eng = Engine(spark, warehouse=wh)
+    table = pa.table(
+        {
+            "id": pa.array([1, 2], pa.int64()),
+            "properties": pa.array(
+                [[("error_code", "7")], [("host", "a")]],
+                pa.map_(pa.string(), pa.string()),
+            ),
+        }
+    )
+    with FlightSQLServer(eng) as srv, FlightSQLClient(srv.uri) as c:
+        assert c.bulk_ingest("props", table) == 2
+        got = c.query(
+            "SELECT id, property_get(properties, 'error_code') AS code "
+            "FROM props ORDER BY id"
+        )
+    assert list(got["code"]) == ["7", None]
+
+
 def test_bulk_ingest_rejects_non_table(client):
     with pytest.raises(TypeError):
         client.bulk_ingest("t", [{"a": 1}])

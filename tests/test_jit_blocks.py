@@ -411,8 +411,14 @@ def test_view_instance_rewrite_comment_and_boundary_awareness(spark, tmp_path):
 
     from micromegas_spark.flightsql.errors import InvalidArgument
 
+    builds = []
+
     def build(instance, block_ids):
+        builds.append(instance)
         return spark.createDataFrame([(5,), (7,)], ["begin_ns"]).coalesce(1)
+
+    def vi_views(session):
+        return {t.name for t in session.catalog.listTables() if t.name.startswith("_vi_")}
 
     eng = _mini_jit_engine(spark, tmp_path, build)
     # commented-out NON-literal call: previously raised InvalidArgument
@@ -422,15 +428,18 @@ def test_view_instance_rewrite_comment_and_boundary_awareness(spark, tmp_path):
     ).collect()[0]
     assert row["n"] == 2
     # block comment (nested, Spark 3.0+ grammar) around a literal call:
-    # must NOT materialize a second temp view
-    before = {t.name for t in spark.catalog.listTables() if t.name.startswith("_vi_")}
+    # must NOT materialize a second view; the statement rebinds the one
+    # `_vi_` slot of this thread's session without rebuilding it, and no
+    # slot ever lands in the parent session
+    before = vi_views(eng._session())
     row2 = eng.query(
         "SELECT /* view_instance('no_such_set', 'x') /* nested */ still "
         "comment */ SUM(begin_ns) AS s FROM view_instance('ordered_view', 's1')"
     ).collect()[0]
     assert row2["s"] == 12
-    after = {t.name for t in spark.catalog.listTables() if t.name.startswith("_vi_")}
-    assert after == before  # reused the one slot; the commented set never built
+    assert len(before) == 1 and vi_views(eng._session()) == before
+    assert builds == ["s1"]  # cached partition reused; commented set never built
+    assert vi_views(spark) == set()
     # identifier boundary: my_view_instance is not our function — the
     # rewrite must leave it alone (Spark then fails resolution, a user
     # error, but NOT an InvalidArgument from the rewrite and NOT '_vi_'

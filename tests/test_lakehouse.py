@@ -384,9 +384,7 @@ def test_engine_query_log_self_observability(spark, telemetry):
 def test_manifest_is_a_queryable_parquet_table(spark, tmp_path):
     """Round-3: the partition catalog is parquet, one file per view with a
     shared schema — the whole catalog is queryable as a table
-    (partitions_table), and a legacy JSON manifest is still readable and
-    upgraded to parquet on the next save."""
-    import json as _json
+    (partitions_table)."""
     import os
 
     from micromegas_spark.materialize import BatchViewSpec, Lakehouse
@@ -416,30 +414,36 @@ def test_manifest_is_a_queryable_parquet_table(spark, tmp_path):
     parts = lake.list_partitions("pm_view")
     assert all("v" in p.column_stats for p in parts)
 
-    # legacy JSON manifest: readable, then upgraded on next save
-    legacy = lake._legacy_manifest_path("legacy_view")
-    _json.dump(
-        [
-            {
-                "begin_insert_ns": 0,
-                "end_insert_ns": HOUR,
-                "source_hash": 1,
-                "min_event_ns": 1,
-                "max_event_ns": 2,
-                "path": str(tmp_path / "nowhere"),
-                "updated_unix": 1.0,
-                "schema_hash": "abc",
-                "column_stats": {"v": [0, 2]},
-            }
-        ],
-        open(legacy, "w"),
+
+def test_read_of_a_window_with_no_partitions_is_typed(spark, tmp_path):
+    """When pruning leaves no partition, Lakehouse.read returns an empty
+    frame with the view's schema, so an aggregate over the window still
+    plans (a schema-less frame failed with UNRESOLVED_COLUMN)."""
+    import dataclasses
+
+    eng = Engine(spark, warehouse=str(tmp_path / "wh_empty"))
+    spark.createDataFrame(
+        [(1, 5 * 60 * 10**9, 10, "p", 4, "t", ["log"])],
+        "nb_objects bigint, insert_time_ns bigint, time_ns bigint, "
+        "process_id string, level int, target string, tags array<string>",
+    ).createOrReplaceTempView("empty_src")
+    spec = dataclasses.replace(
+        LOG_STATS,
+        name="log_stats_empty",
+        count_query=LOG_STATS.count_query.replace("blocks", "empty_src"),
+        extract_query=LOG_STATS.extract_query.replace("log_entries", "empty_src"),
     )
-    assert len(lake.list_partitions("legacy_view")) == 1
-    assert "legacy_view" in lake.list_view_sets()
-    lake._save_manifest("legacy_view", lake.list_partitions("legacy_view"))
-    assert not os.path.exists(legacy)
-    assert len(lake.list_partitions("legacy_view")) == 1
-    assert lake.list_partitions("legacy_view")[0].column_stats == {"v": [0, 2]}
+    eng.lakehouse.materialize_range(spec, 0, HOUR, HOUR)
+    eng.register_view(
+        "log_stats_empty",
+        lambda b, e: eng.lakehouse.read("log_stats_empty", b, e, time_column="time_bin_ns"),
+    )
+    sql = (
+        "SELECT time_bin_ns, SUM(count) AS n FROM log_stats_empty "
+        "GROUP BY 1 ORDER BY 1"
+    )
+    assert eng.query(sql, 10**12, 2 * 10**12).collect() == []
+    assert [tuple(r) for r in eng.query(sql, 0, 10**12).collect()] == [(0, 1)]
 
 
 def test_retire_partition_by_file(spark, tmp_path):

@@ -362,27 +362,6 @@ def test_band_store_backfills_preexisting_sig_store(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
-def test_partitions_table_includes_legacy_json_views(spark, tmp_path):
-    import json as _json
-
-    from micromegas_spark.materialize import Lakehouse
-
-    lake = Lakehouse(spark, str(tmp_path / "wh_lj"))
-    _json.dump(
-        [
-            {
-                "begin_insert_ns": 0, "end_insert_ns": 10, "source_hash": 1,
-                "min_event_ns": 1, "max_event_ns": 2, "path": "/nowhere",
-                "updated_unix": 1.0, "schema_hash": "abc",
-                "column_stats": {"v": [0, 2]},
-            }
-        ],
-        open(lake._legacy_manifest_path("only_json"), "w"),
-    )
-    rows = lake.partitions_table().collect()
-    assert [(r.view, r.begin_insert_ns) for r in rows] == [("only_json", 0)]
-
-
 def test_jsonb_path_string_literal_full_escape_semantics(spark):
     """JSON-path predicate string literals decode with FULL JSON escape
     semantics: \\n/\\t/\\uXXXX are the control/unicode characters, not the

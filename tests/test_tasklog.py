@@ -153,9 +153,8 @@ def test_iso_timestamp_arguments(admin_engine):
 
 def test_non_positive_delta_rejected_before_any_op_runs(admin_engine):
     """ADVICE r9: a negative delta previously never terminated the bucket
-    loop (b decreases forever) and 0 hit ZeroDivisionError — both inside
-    _PLAN_LOCK, hanging every concurrent planner. Must raise a clean
-    InvalidArgument at plan time, with the catalog untouched."""
+    loop (b decreases forever) and 0 hit ZeroDivisionError. Must raise a
+    clean InvalidArgument at plan time, with the catalog untouched."""
     eng, lo, hi = admin_engine
     for bad in (-1, 0):
         with pytest.raises(InvalidArgument, match="positive"):
@@ -195,17 +194,19 @@ def test_mixed_functions_execute_in_statement_order(admin_engine):
 def test_tasklog_temp_views_are_statement_scoped(admin_engine):
     """ADVICE r9: the _tasklog_* temp views must not outlive their
     statement — otherwise the admin op's output stays queryable by later
-    statements (including by a non-admin Engine on the same session)."""
+    statements on the thread — and never reach the parent session, which
+    other Engines (a non-admin one included) share."""
     eng, lo, hi = admin_engine
     df = eng.query(
         f"SELECT * FROM materialize_partitions('log_stats', '{lo}', '{hi}', 3600)"
     )
-    leftovers = [
-        t.name
-        for t in eng.spark.catalog.listTables()
-        if t.name.startswith("_tasklog_")
-    ]
-    assert leftovers == []
+    for session in (eng._session(), eng.spark):
+        leftovers = [
+            t.name
+            for t in session.catalog.listTables()
+            if t.name.startswith("_tasklog_")
+        ]
+        assert leftovers == []
     # the analyzed plan holds the resolved relation: still collectable
     assert len(df.collect()) >= 1
 
