@@ -278,12 +278,13 @@ class Client:
 
         self.engine.require_admin("materialize_partitions")
         spec = self.engine.batch_view(view_name)
-        return self.engine.lakehouse_for(spec).materialize_range(
-            spec,
-            to_epoch_ns(begin),
-            to_epoch_ns(end),
-            partition_delta_seconds * 1_000_000_000,
-        )
+        with self.engine.lakehouse_for(spec) as lake:
+            return lake.materialize_range(
+                spec,
+                to_epoch_ns(begin),
+                to_epoch_ns(end),
+                partition_delta_seconds * 1_000_000_000,
+            )
 
     def regenerate_partitions(
         self, view_name: str, begin, end, partition_delta_seconds: int
@@ -294,12 +295,13 @@ class Client:
 
         self.engine.require_admin("regenerate_partitions")
         spec = self.engine.batch_view(view_name)
-        return self.engine.lakehouse_for(spec).regenerate_partitions(
-            spec,
-            to_epoch_ns(begin),
-            to_epoch_ns(end),
-            partition_delta_seconds * 1_000_000_000,
-        )
+        with self.engine.lakehouse_for(spec) as lake:
+            return lake.regenerate_partitions(
+                spec,
+                to_epoch_ns(begin),
+                to_epoch_ns(end),
+                partition_delta_seconds * 1_000_000_000,
+            )
 
 
 class PreparedStatement:
@@ -333,6 +335,8 @@ class PreparedStatement:
         names = set(_re.findall(r":(\w+)", self.sql))
         # bound and analyzed like resolve(), minus the audit record
         # (schema discovery is not an executed statement)
-        spark = self.client.engine.prepare_views(self.sql)
-        df = spark.sql(self.sql, args={n: None for n in names})
+        engine = self.client.engine
+        with engine.planning_session():
+            spark = engine.prepare_views(self.sql)
+            df = spark.sql(self.sql, args={n: None for n in names})
         return to_arrow_schema(df.schema)

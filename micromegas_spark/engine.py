@@ -4,7 +4,7 @@ flight_sql_service_impl.rs query-range headers).
 
 ``Engine.query(sql, begin_ns, end_ns)`` is the client surface: each
 registered view the statement names is bound, bounded to the query range,
-as a temp view of the planning thread's own cloned session before
+as a temp view of a cloned planning session the call holds before
 ``spark.sql`` runs — the Spark-idiomatic equivalent of the reference's
 fresh SessionContext per query (query.rs:207-256) and its
 TableScanRewrite analyzer rule (table_scan_rewrite.rs:59-72, SURVEY §4:
@@ -23,6 +23,7 @@ from micromegas_spark.flightsql.errors import InvalidArgument
 
 import json
 import os
+import queue
 import re
 import threading
 import time
@@ -35,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from micromegas_spark.functions import register_all
-from micromegas_spark.session import configure
+from micromegas_spark.session import clone_session, configure
 
 # builder(begin_ns|None, end_ns|None) -> DataFrame
 ViewBuilder = Callable[[int | None, int | None], DataFrame]
@@ -350,7 +351,9 @@ class Engine:
         from collections import deque
 
         self._query_log: "deque[tuple]" = deque(maxlen=self.QUERY_LOG_MAX)
-        # per planning thread: its cloned session (see _session)
+        # idle planning sessions, and the one this thread holds (see
+        # planning_session)
+        self._idle: "queue.SimpleQueue[SparkSession]" = queue.SimpleQueue()
         self._local = threading.local()
 
     # -- global views --------------------------------------------------------
@@ -373,22 +376,47 @@ class Engine:
     def register_table(self, name: str, df: DataFrame, time_column: str | None = None) -> None:
         self.register_view(name, lambda b, e, _df=df: _df, time_column)
 
-    def _session(self) -> SparkSession:
-        """This thread's planning session: a clone of ``self.spark``, made
-        on the thread's first statement. A clone shares the SparkContext,
-        the cache, the registered functions and the conf and temp views
-        the parent had when it was made, but has a temp-view catalog of
-        its own — so threads bind their statements' views without seeing
-        each other's, and need no lock. On one thread spark.sql analyses
-        eagerly, so a later rebinding cannot retarget a plan already
-        returned. One clone per thread, never per statement: the JVM
-        keeps every clone's session state alive."""
-        spark = getattr(self._local, "spark", None)
-        if spark is None:
-            spark = self._local.spark = SparkSession(
-                self.spark.sparkContext, self.spark._jsparkSession.cloneSession()
-            )
-        return spark
+    @contextmanager
+    def planning_session(self):
+        """Hold a planning session for the duration of the block: an idle
+        clone of ``self.spark`` (session.clone_session), or a new one when
+        every clone is held. A held session is this call's alone, so
+        concurrent calls bind their statements' views without seeing each
+        other's and need no lock; spark.sql analyses eagerly, so the
+        session can go back to the pool as soon as the statement is
+        analyzed — a later rebinding cannot retarget a plan already
+        returned. Clones are pooled, not kept per thread: FlightSQL
+        handlers run on gRPC threads that keep no Python thread state
+        between calls, and the JVM keeps every clone's session state
+        alive, so the number made is bounded by the peak number of
+        concurrent calls. Nested use on one thread yields the session
+        already held.
+
+        On checkout the session's SQL conf is made the parent's as it is
+        now, so a conf set on ``self.spark`` reaches every statement
+        planned after it, and a SET run inside a statement does not
+        outlive the call."""
+        held = getattr(self._local, "spark", None)
+        if held is not None:
+            yield held
+            return
+        try:
+            spark = self._idle.get_nowait()
+        except queue.Empty:
+            spark = clone_session(self.spark)
+        mine = spark._jsparkSession.sessionState().conf().settings()
+        parent = self.spark._jsparkSession.sessionState().conf().settings()
+        if not mine.equals(parent):
+            # overwrite, then drop extras: plans of earlier calls may
+            # still be running on this session and read its conf
+            mine.putAll(parent)
+            mine.keySet().retainAll(parent.keySet())
+        self._local.spark = spark
+        try:
+            yield spark
+        finally:
+            self._local.spark = None
+            self._idle.put(spark)
 
     @staticmethod
     def _bind(spark: SparkSession, name: str, df: DataFrame) -> None:
@@ -402,8 +430,9 @@ class Engine:
     def prepare_views(
         self, sql: str, begin_ns: int | None = None, end_ns: int | None = None
     ) -> SparkSession:
-        """Bind the views ``sql`` names into this thread's session (see
-        _session), range-bounded, and return that session. Every path
+        """Bind the views ``sql`` names into the planning session this
+        call holds, range-bounded, and return that session; call it inside
+        planning_session() to keep using the session. Every path
         that plans — resolve(), the prepared-statement schema lookup, the
         admin ops — binds through here, keyed on the statement's OWN
         text. A view counts as named when its name appears word-bounded,
@@ -412,44 +441,44 @@ class Engine:
         name is never built. Temp views of ``self.spark`` the statement
         names are copied in as they are now, not as they were when the
         clone was made."""
-        spark = self._session()
-        low = sql.lower()
+        with self.planning_session() as spark:
+            low = sql.lower()
 
-        def named(name: str) -> bool:
-            return re.search(rf"(?<!\w){re.escape(name.lower())}(?!\w)", low) is not None
+            def named(name: str) -> bool:
+                return re.search(rf"(?<!\w){re.escape(name.lower())}(?!\w)", low) is not None
 
-        parent = self.spark._jsparkSession.sessionState().catalog()
-        mine = spark._jsparkSession.sessionState().catalog()
-        for name in parent.getTempViewNames().mkString("\n").split("\n"):
-            if name and named(name):
-                mine.createTempView(name, parent.getRawTempView(name).get(), True)
-        # query_log costs O(len(log)) driver work; list_partitions and
-        # list_view_sets are the SQL spellings of the catalog functions the
-        # reference registers for EVERY session (query.rs:113-120 — OUTSIDE
-        # the is_admin block; its functions-reference.md marks only
-        # retire/materialize/regenerate/retire_partition_by_file as
-        # 'Requires admin'), so the admin gate lives solely on the mutating
-        # surface (require_admin in client.py / Lakehouse)
-        builtin = {
-            "query_log": lambda b, e: self._query_log_df(),
-            "list_partitions": lambda b, e: self.lakehouse.partitions_df(),
-            "list_view_sets": lambda b, e: self.spark.createDataFrame(
-                [(v,) for v in self.lakehouse.list_view_sets()],
-                "view_set_name STRING",
-            ),
-        }
-        # {**...} snapshots: a concurrent DoPut may register_table meanwhile
-        for name, builder in {**builtin, **self._views}.items():
-            if not named(name):
-                continue
-            df = builder(begin_ns, end_ns)
-            tc = self._time_columns.get(name)
-            if tc is not None:
-                if begin_ns is not None:
-                    df = df.where(F.col(tc) >= begin_ns)
-                if end_ns is not None:
-                    df = df.where(F.col(tc) < end_ns)
-            self._bind(spark, name, df)
+            parent = self.spark._jsparkSession.sessionState().catalog()
+            mine = spark._jsparkSession.sessionState().catalog()
+            for name in parent.getTempViewNames().mkString("\n").split("\n"):
+                if name and named(name):
+                    mine.createTempView(name, parent.getRawTempView(name).get(), True)
+            # query_log costs O(len(log)) driver work; list_partitions and
+            # list_view_sets are the SQL spellings of the catalog functions the
+            # reference registers for EVERY session (query.rs:113-120 — OUTSIDE
+            # the is_admin block; its functions-reference.md marks only
+            # retire/materialize/regenerate/retire_partition_by_file as
+            # 'Requires admin'), so the admin gate lives solely on the mutating
+            # surface (require_admin in client.py / Lakehouse)
+            builtin = {
+                "query_log": lambda b, e: self._query_log_df(),
+                "list_partitions": lambda b, e: self.lakehouse.partitions_df(),
+                "list_view_sets": lambda b, e: self.spark.createDataFrame(
+                    [(v,) for v in self.lakehouse.list_view_sets()],
+                    "view_set_name STRING",
+                ),
+            }
+            # {**...} snapshots: a concurrent DoPut may register_table meanwhile
+            for name, builder in {**builtin, **self._views}.items():
+                if not named(name):
+                    continue
+                df = builder(begin_ns, end_ns)
+                tc = self._time_columns.get(name)
+                if tc is not None:
+                    if begin_ns is not None:
+                        df = df.where(F.col(tc) >= begin_ns)
+                    if end_ns is not None:
+                        df = df.where(F.col(tc) < end_ns)
+                self._bind(spark, name, df)
         return spark
 
     def log_query(
@@ -489,7 +518,7 @@ class Engine:
         distinct literal call materializes through the existing Python
         view_instance() (manifest-cached parquet, block-aware when the
         view set declares blocks), is bound as a deterministic temp view
-        of the thread's session (_session), and the call text is
+        of the held planning session, and the call text is
         substituted with the view name — the scan
         never routes through a Python UDTF (udtfs.py:11 documents why
         that spelling is the scale anti-pattern).
@@ -506,7 +535,7 @@ class Engine:
         my_view_instance(...) is someone else's function, never rewritten
         mid-identifier. The temp-view name is keyed on (set, instance) —
         sanitized + a short stable hash so distinct keys can never alias
-        one slot — and repeat queries on a thread reuse one slot (a later
+        one slot — and repeat queries on a session reuse one slot (a later
         rebinding cannot retarget an already-analyzed plan)."""
         import hashlib as _hashlib
 
@@ -556,7 +585,8 @@ class Engine:
                 name = "_vi_" + re.sub(
                     r"[^A-Za-z0-9_]", "_", f"{key[0]}__{key[1]}"
                 ) + "_" + tag
-                self._bind(self._session(), name, df)
+                with self.planning_session() as spark:
+                    self._bind(spark, name, df)
                 made[key] = name
             return made[key]
 
@@ -586,13 +616,11 @@ class Engine:
         the docstring caveat promoted to an error. Checked whenever the
         rewritten function name appears at all: the scanner itself is
         what decides whether an occurrence is live, and under the
-        unsupported mode its verdict can't be trusted."""
-        if (
-            self.spark.conf.get(
-                "spark.sql.parser.escapedStringLiterals", "false"
-            ).lower()
-            == "true"
-        ):
+        unsupported mode its verdict can't be trusted. Read from the
+        planning session, which is the one that parses the statement."""
+        with self.planning_session() as spark:
+            escaped = spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
+        if escaped.lower() == "true":
             raise InvalidArgument(
                 f"{what} cannot be rewritten under "
                 "spark.sql.parser.escapedStringLiterals=true — the "
@@ -639,7 +667,7 @@ class Engine:
         which the streamed spelling shares. Each log's temp view is
         recorded in ``created_views`` so resolve() can drop it once the
         statement is analyzed — the log must not stay queryable by later
-        statements on the thread."""
+        statements on that session."""
         import hashlib as _hashlib
 
         from micromegas_spark.materialize.tasklog import TaskLog
@@ -683,7 +711,6 @@ class Engine:
         # runs, so a bad third call can't leave the first two half-applied
         todo = [(m, fn, *self._admin_op(fn, m.groups())) for m, fn in matches]
 
-        spark = self._session()
         pieces, last = [], 0
         for i, (m, fn, op, op_args) in enumerate(todo):
             log = TaskLog()
@@ -698,7 +725,8 @@ class Engine:
                 f"{fn}\x00{m.group(0)}\x00{i}".encode("utf-8")
             ).hexdigest()[:8]
             name = f"_tasklog_{fn}_{tag}"
-            log.to_df(spark).createOrReplaceTempView(name)
+            with self.planning_session() as spark:
+                log.to_df(spark).createOrReplaceTempView(name)
             if created_views is not None:
                 created_views.append(name)
             pieces.append(sql[last : m.start()])
@@ -716,7 +744,8 @@ class Engine:
         accept ISO strings or raw epoch-ns integer spellings; the delta
         must be positive and the view registered, both checked at plan
         time. materialize/regenerate run on lakehouse_for(spec), which
-        binds the views the op reads in this thread's session."""
+        binds the views the op reads when the op starts, in the planning
+        session of the thread that runs it."""
         view = args[0].replace("''", "'")
         begin_ns, end_ns = _literal_ns(args[1]), _literal_ns(args[2])
         if fn == "retire_partitions":
@@ -730,12 +759,14 @@ class Engine:
                 f"integer, got {delta}"
             )
         spec = self.batch_view(view)  # unknown view raises at plan time
-        lake = self.lakehouse_for(spec)
-        op = (
-            lake.materialize_range
-            if fn == "materialize_partitions"
-            else lake.regenerate_partitions
+        method = (
+            "materialize_range" if fn == "materialize_partitions" else "regenerate_partitions"
         )
+
+        def op(*op_args):
+            with self.lakehouse_for(spec) as lake:
+                return getattr(lake, method)(*op_args)
+
         return op, (spec, begin_ns, end_ns, delta * 1_000_000_000)
 
     def parse_streamable_admin_call(self, sql: str):
@@ -779,8 +810,8 @@ class Engine:
         args: dict | None = None,
         query_id: str | None = None,
     ) -> DataFrame:
-        """Bind the statement's views to [begin, end) in this thread's
-        session (_session) and analyze it there. Every execution path
+        """Bind the statement's views to [begin, end) in a planning
+        session (planning_session) and analyze it there. Every execution path
         (query(), the client's prepared-statement and convenience lookups)
         funnels here, so concurrent queries with different ranges each
         resolve against their OWN bounds without waiting on each other.
@@ -794,10 +825,12 @@ class Engine:
         # never inherit a stale id. Execution-time jobs re-attribute at
         # the call sites that actually collect (job_group(df) in
         # Client/server/CLI paths, keyed off df._mm_query_id).
-        with job_group(self.spark.sparkContext, query_id, sql):
+        with (
+            job_group(self.spark.sparkContext, query_id, sql),
+            self.planning_session() as spark,
+        ):
             t0 = time.time()
             tasklog_views: list[str] = []
-            spark = self._session()
             try:
                 # the reference's primary documented UX is SQL-spelled
                 # view_instance (view_instance_table_function.rs:49-70,
@@ -1090,16 +1123,18 @@ class Engine:
             self._lakehouse = Lakehouse(self.spark, self.warehouse)
         return self._lakehouse
 
+    @contextmanager
     def lakehouse_for(self, spec):
-        """The catalog over this thread's session, with the views
-        ``spec``'s count and extract queries name bound fresh and
+        """Hold a planning session and yield the catalog over it, with the
+        views ``spec``'s count and extract queries name bound fresh and
         unbounded — what every materialize/regenerate op runs on, so a
         tick reads the views as they are now, whatever statement (if any)
         ran before it."""
         from micromegas_spark.materialize import Lakehouse
 
-        spark = self.prepare_views(f"{spec.count_query}\n{spec.extract_query}")
-        return Lakehouse(spark, self.warehouse)
+        with self.planning_session():
+            spark = self.prepare_views(f"{spec.count_query}\n{spec.extract_query}")
+            yield Lakehouse(spark, self.warehouse)
 
     def register_batch_view(self, spec) -> None:
         """Register a BatchViewSpec so client admin calls can address it by

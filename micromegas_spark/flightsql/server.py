@@ -17,10 +17,11 @@ client can consume a result larger than the driver heap. Spark remains the
 execution engine; this is purely the transport the rebuild was missing
 (in-process ``client.Client`` covers the same surface without a network).
 
-Scale shape: one server process fronts one SparkSession; each gRPC
-serving thread plans in its own clone of it (``Engine.resolve``), so
-concurrent calls never wait on each other's planning — the contract the
-reference gets from per-query SessionContexts.
+Scale shape: one server process fronts one SparkSession; each call plans
+in a clone of it that it holds alone while planning, taken from the
+engine's pool (``Engine.planning_session``), so concurrent calls never wait
+on each other's planning — the contract the reference gets from per-query
+SessionContexts.
 """
 
 from __future__ import annotations
@@ -450,9 +451,8 @@ class FlightSQLServer:
         def run() -> None:
             try:
                 # attribute the op's Spark jobs to this request (#1406).
-                # The op runs on the session the handler thread bound its
-                # views in; that thread only drains the queue until the
-                # op is done, so nothing rebinds them meanwhile.
+                # The op binds its views and holds the planning session
+                # they live in for its whole run, on this worker thread.
                 with job_group(self.engine.spark.sparkContext, query_id, sql):
                     op(*op_args, log)
             except Exception as e:

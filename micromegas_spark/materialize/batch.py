@@ -56,6 +56,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from micromegas_spark.session import clone_session
+
 
 @dataclass
 class BatchViewSpec:
@@ -251,6 +253,10 @@ _MANIFEST_KEEP_GENS = 2
 _VIEW_LOCKS: dict = {}
 _VIEW_LOCK_DEPTH: dict = {}
 _VIEW_LOCKS_GUARD = threading.Lock()
+# Per-(warehouse, view) session a merge binds `source` in, made on the
+# view's first merge and reused: merges of one view run under its view
+# lock, so they never race on that binding.
+_MERGE_SESSIONS: dict = {}
 
 
 class Lakehouse:
@@ -680,11 +686,12 @@ class Lakehouse:
         ]
         if len(inside) <= 1:
             return "abort"
-        # `source` is bound in a clone made for this merge, never in the
-        # shared session: concurrent merges and statements cannot see it
-        spark = SparkSession(
-            self.spark.sparkContext, self.spark._jsparkSession.cloneSession()
-        )
+        # `source` is bound in the view's merge session, never in the
+        # shared one: other views' merges and statements cannot see it
+        key = (self.fs.root_url, spec.name)
+        spark = _MERGE_SESSIONS.get(key)
+        if spark is None or spark.sparkContext is not self.spark.sparkContext:
+            spark = _MERGE_SESSIONS[key] = clone_session(self.spark)
         spark.read.parquet(*[p.path for p in inside]).createOrReplaceTempView("source")
         merged = spark.sql(spec.merge_query)
         # unique write-once path; the manifest swap below is the commit

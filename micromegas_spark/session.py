@@ -2,8 +2,9 @@
 
 The reference builds a DataFusion SessionContext per query with UDFs and view
 providers registered (rust/analytics/src/lakehouse/query.rs:207-256). Our
-equivalent is one long-lived SparkSession, cloned once per planning thread by
-``Engine`` (each clone binds its own statements' views), with:
+equivalent is one long-lived SparkSession, cloned by ``Engine`` into a pool
+of planning sessions (a call checks one out and binds its own statement's
+views there; see ``clone_session``), with:
 
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing) — this
   is what makes the same code survive a 100x scale-up without manual tuning;
@@ -82,6 +83,15 @@ def configure(spark: SparkSession) -> SparkSession:
             pass
     _ship_package(spark)
     return spark
+
+
+def clone_session(spark: SparkSession) -> SparkSession:
+    """A clone of ``spark``: it shares the SparkContext, the cache and the
+    registered functions, copies the conf and temp views ``spark`` has
+    now, and keeps a temp-view catalog of its own. The JVM keeps every
+    clone's session state alive, so callers reuse clones rather than make
+    one per statement."""
+    return SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
 
 
 def _shuffle_partitions(cpus: str) -> str:

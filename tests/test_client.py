@@ -330,9 +330,9 @@ def test_prepared_statement_reaches_lazy_views_and_audit(spark, tmp_path):
 
 def test_concurrent_engine_queries_keep_own_bounds(spark):
     """Threads querying ONE Engine with different [begin, end) ranges must
-    each resolve against their own bounds — each thread binds its views in
-    its own cloned session (Engine._session), so one thread's binding
-    can never retarget another's in-flight plan (the reference gets the
+    each resolve against their own bounds — each call binds its views in
+    a cloned session it holds alone (Engine.planning_session), so one
+    call's binding can never retarget another's in-flight plan (the reference gets the
     same from a fresh SessionContext per query, query.rs:207-256). Many
     iterations per thread to actually exercise the interleaving."""
     import threading

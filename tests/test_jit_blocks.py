@@ -429,15 +429,17 @@ def test_view_instance_rewrite_comment_and_boundary_awareness(spark, tmp_path):
     assert row["n"] == 2
     # block comment (nested, Spark 3.0+ grammar) around a literal call:
     # must NOT materialize a second view; the statement rebinds the one
-    # `_vi_` slot of this thread's session without rebuilding it, and no
-    # slot ever lands in the parent session
-    before = vi_views(eng._session())
+    # `_vi_` slot of the engine's planning session without rebuilding it,
+    # and no slot ever lands in the parent session
+    with eng.planning_session() as session:
+        before = vi_views(session)
     row2 = eng.query(
         "SELECT /* view_instance('no_such_set', 'x') /* nested */ still "
         "comment */ SUM(begin_ns) AS s FROM view_instance('ordered_view', 's1')"
     ).collect()[0]
     assert row2["s"] == 12
-    assert len(before) == 1 and vi_views(eng._session()) == before
+    with eng.planning_session() as session:
+        assert len(before) == 1 and vi_views(session) == before
     assert builds == ["s1"]  # cached partition reused; commented set never built
     assert vi_views(spark) == set()
     # identifier boundary: my_view_instance is not our function — the

@@ -1,6 +1,7 @@
-"""Each planning thread binds its statements' views in its own cloned
-session (Engine._session): admin ticks read fresh views with no statement
-before them, and one thread's planning never waits on another's."""
+"""Each call binds its statement's views in a cloned planning session it
+holds alone (Engine.planning_session): admin ticks read fresh views with no
+statement before them, one call's planning never waits on another's, and
+clones are pooled, so their number follows concurrency, not calls."""
 
 from __future__ import annotations
 
@@ -12,13 +13,18 @@ HOUR = 3_600 * 10**9
 
 
 def test_private_session_apis_the_engine_uses(spark):
-    """Pin the private Spark APIs the design rests on: cloneSession (one
-    clone per thread, sharing the SparkContext and the parent's functions),
+    """Pin the private Spark APIs the design rests on: cloneSession (a
+    clone shares the SparkContext and the parent's functions),
     classic.Dataset.ofRows (a plan built on the parent binds into the
-    clone) and the catalog calls that copy a parent temp view in."""
+    clone), the catalog calls that copy a parent temp view in and the
+    SQLConf settings map a checkout syncs from the parent."""
     eng = Engine(spark)
-    clone = eng._session()
-    assert clone is not spark and clone is eng._session()
+    with eng.planning_session() as clone:
+        assert clone is not spark
+        with eng.planning_session() as nested:
+            assert nested is clone
+    with eng.planning_session() as again:
+        assert again is clone
     assert clone.sparkContext is spark.sparkContext
     assert clone.sql("SELECT property_get(map('k', 'v'), 'k') AS v").first().v == "v"
 
@@ -31,8 +37,23 @@ def test_private_session_apis_the_engine_uses(spark):
     spark.range(2).createOrReplaceTempView("pin_parent")
     eng.prepare_views("SELECT * FROM pin_parent")
     spark.range(5).createOrReplaceTempView("pin_parent")
-    assert eng.prepare_views("SELECT * FROM pin_parent").table("pin_parent").count() == 5
+    with eng.planning_session():
+        assert eng.prepare_views("SELECT * FROM pin_parent").table("pin_parent").count() == 5
     spark.catalog.dropTempView("pin_parent")
+
+    # a conf set on the parent reaches the next checkout; a conf set in
+    # the clone does not outlive its checkout
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        with eng.planning_session() as s:
+            assert s.conf.get(key) == "3"
+            s.conf.set("spark.sql.pin.leftover", "x")
+        with eng.planning_session() as s:
+            assert s.conf.get("spark.sql.pin.leftover", None) is None
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_admin_tick_right_after_doput_counts_every_row(spark, tmp_path):
@@ -135,25 +156,119 @@ def test_statement_plans_while_another_threads_admin_op_is_parked(spark, tmp_pat
     assert not admin.is_alive()
 
 
-def test_threads_reuse_their_clone(spark):
-    """One clone per planning thread, never one per statement: the JVM
-    keeps every clone's session state alive."""
+def _count_clones(monkeypatch, module) -> list:
+    made: list = []
+    real = module.clone_session
+
+    def counted(spark):
+        made.append(1)
+        return real(spark)
+
+    monkeypatch.setattr(module, "clone_session", counted)
+    return made
+
+
+def test_clones_are_bounded_by_concurrent_calls(spark, monkeypatch):
+    """Calls from 4 threads make at most 4 clones, whatever the number of
+    statements: the JVM keeps every clone's session state alive."""
+    import micromegas_spark.engine as engine_mod
+
+    made = _count_clones(monkeypatch, engine_mod)
     eng = Engine(spark)
     eng.register_table("reuse_src", spark.range(2).toDF("x"))
-    seen: dict[int, list] = {i: [] for i in range(4)}
 
-    def worker(i):
-        for _ in range(3):
-            eng.query("SELECT COUNT(*) FROM reuse_src").collect()
-            seen[i].append(eng._session())
+    def worker():
+        for _ in range(5):
+            assert eng.query("SELECT COUNT(*) AS n FROM reuse_src").first().n == 2
 
-    ts = [threading.Thread(target=worker, args=(i,)) for i in seen]
+    ts = [threading.Thread(target=worker) for _ in range(4)]
     for t in ts:
         t.start()
     for t in ts:
         t.join(timeout=120)
-    assert all(len(v) == 3 and len({id(s) for s in v}) == 1 for v in seen.values())
-    assert len({id(v[0]) for v in seen.values()}) == len(seen)
+    assert not any(t.is_alive() for t in ts)
+    assert 1 <= len(made) <= 4
+
+
+def test_served_calls_reuse_pooled_clones(spark, tmp_path, monkeypatch):
+    """gRPC handler threads keep no Python thread state between calls, so
+    a per-thread clone would be one clone per call. Served statements,
+    schema lookups and streamed admin ticks from 3 concurrent clients
+    make at most one clone per concurrent call."""
+    import micromegas_spark.engine as engine_mod
+    from micromegas_spark.flightsql.client import FlightSQLClient
+    from micromegas_spark.flightsql.server import FlightSQLServer
+
+    from micromegas_spark.materialize import BatchViewSpec
+
+    made = _count_clones(monkeypatch, engine_mod)
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"))
+    eng.register_table("served_src", spark.range(3).toDF("x"))
+    eng.register_batch_view(
+        BatchViewSpec(
+            name="served_view",
+            count_query="SELECT COUNT(*) FROM served_src",
+            extract_query="SELECT x AS t FROM served_src WHERE {begin} < {end}",
+            merge_query="SELECT * FROM source",
+            time_column="t",
+        )
+    )
+    tick = f"SELECT * FROM materialize_partitions('served_view', '0', '{HOUR}', 3600)"
+    errors: list = []
+
+    def worker(uri):
+        try:
+            with FlightSQLClient(uri) as c:
+                for _ in range(4):
+                    assert c.query("SELECT COUNT(*) AS n FROM served_src")["n"][0] == 3
+                    schema = c.prepare_statement("SELECT x FROM served_src").dataset_schema
+                    assert schema.names == ["x"]
+                    msgs = list(c.query(tick)["msg"])
+                    assert not [m for m in msgs if m.startswith("error")], msgs
+        except Exception as e:  # pragma: no cover - failure path
+            errors.append(e)
+
+    with FlightSQLServer(eng) as srv:
+        ts = [threading.Thread(target=worker, args=(srv.uri,)) for _ in range(3)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=300)
+    assert not any(t.is_alive() for t in ts)
+    assert errors == []
+    assert 1 <= len(made) <= 3, f"{len(made)} clones for 36 served calls"
+    assert [t.name for t in spark.catalog.listTables() if t.name == "served_src"] == []
+
+
+def test_merges_of_a_view_reuse_one_session(spark, tmp_path, monkeypatch):
+    """A view's merges bind `source` in one session made on its first
+    merge, never in the parent and never in a clone per merge."""
+    import micromegas_spark.materialize.batch as batch
+    from micromegas_spark.materialize import BatchViewSpec, Lakehouse
+
+    made = _count_clones(monkeypatch, batch)
+    spark.range(0, 4 * HOUR, HOUR // 4).selectExpr("id AS t").createOrReplaceTempView(
+        "merge_src"
+    )
+    window = "FROM merge_src WHERE t >= {begin} AND t < {end}"
+    spec = BatchViewSpec(
+        name="merge_reuse",
+        count_query=f"SELECT COUNT(*) {window}",
+        extract_query=f"SELECT t {window}",
+        merge_query="SELECT * FROM source",
+        time_column="t",
+    )
+    lake = Lakehouse(spark, str(tmp_path / "wh"))
+    try:
+        for lo in (0, 2 * HOUR):
+            lake.materialize_range(spec, lo, lo + 2 * HOUR, HOUR)
+            assert lake.merge_partitions(spec, lo, lo + 2 * HOUR) == "merged"
+    finally:
+        spark.catalog.dropTempView("merge_src")
+    assert len(made) == 1
+    assert len(lake.list_partitions("merge_reuse")) == 2
+    assert lake.read("merge_reuse").count() == 16
+    assert not spark.catalog.tableExists("source")
 
 
 def test_concurrent_planning_stress(spark):

@@ -200,13 +200,14 @@ def test_tasklog_temp_views_are_statement_scoped(admin_engine):
     df = eng.query(
         f"SELECT * FROM materialize_partitions('log_stats', '{lo}', '{hi}', 3600)"
     )
-    for session in (eng._session(), eng.spark):
-        leftovers = [
-            t.name
-            for t in session.catalog.listTables()
-            if t.name.startswith("_tasklog_")
-        ]
-        assert leftovers == []
+    with eng.planning_session() as planning:
+        for session in (planning, eng.spark):
+            leftovers = [
+                t.name
+                for t in session.catalog.listTables()
+                if t.name.startswith("_tasklog_")
+            ]
+            assert leftovers == []
     # the analyzed plan holds the resolved relation: still collectable
     assert len(df.collect()) >= 1
 
