@@ -5,7 +5,8 @@ out, with the out-of-band query time range.
 The reference client talks FlightSQL to a server; here the "server" is the
 Engine in-process, and the Arrow hop is Spark's native Arrow collect path
 (spark.sql.execution.arrow.pyspark.enabled). ``query_stream`` mirrors the
-DoGet record-batch stream with ``toArrow`` batch iteration.
+DoGet record-batch stream: both yield the per-partition Arrow batches
+Spark encodes itself (``_stream_batches``).
 """
 
 from __future__ import annotations
@@ -20,57 +21,42 @@ if TYPE_CHECKING:  # pragma: no cover
     import pyarrow as pa
 
 
-def _stream_batches(df, batch_rows: int) -> Iterator["pa.RecordBatch"]:
-    """DataFrame → Arrow record batches, pulled partition-by-partition via
-    toLocalIterator (executors keep later partitions until requested), so
-    driver memory holds one batch, not the whole result. The Arrow schema
-    comes from the SPARK schema (to_arrow_schema) — inferring it from an
-    empty pandas frame types every string/decimal column as null and
-    crashes on the first real batch."""
-    import pandas as pd
-    import pyarrow as pa
-    from pyspark.sql import functions as F
+def _arrow_schema(df) -> "pa.Schema":
+    """The Arrow schema Spark encodes ``df``'s batches in: string and
+    binary columns are large_* when the session sets
+    spark.sql.execution.arrow.useLargeVarTypes (decoding those buffers
+    against the plain types would misread them)."""
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import TimestampType
 
-    schema = to_arrow_schema(df.schema)
-    # TimestampType values collected through toLocalIterator are NAIVE
-    # wall-clock datetimes in the driver PROCESS timezone — re-localizing
-    # them is fragile (DST, process-vs-session tz). Ship the INSTANT
-    # instead: replace each top-level timestamp column with unix_micros
-    # on the Spark side and rebuild tz-aware values from epoch micros —
-    # no wall-clock round trip. (TimestampNTZ stays naive by design.
-    # KNOWN LIMIT: timestamps NESTED inside struct/array columns are not
-    # rewritten and keep the process-tz wall-clock caveat — flatten them
-    # in the SQL if the stream must cross timezones.)
-    ts_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampType)]
-    if ts_cols:
-        def q(name: str) -> str:
-            return "`" + name.replace("`", "``") + "`"
+    return to_arrow_schema(
+        df.schema,
+        prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes(),
+    )
 
-        df = df.select(
-            *[
-                F.unix_micros(F.col(q(c))).alias(c)
-                if c in ts_cols
-                else F.col(q(c)).alias(c)
-                for c in df.columns
-            ]
-        )
 
-    def to_batch(rows: list) -> "pa.RecordBatch":
-        pdf = pd.DataFrame(rows)
-        for c in ts_cols:
-            pdf[c] = pd.to_datetime(pdf[c], unit="us", utc=True)
-        return pa.RecordBatch.from_pandas(pdf, schema=schema, preserve_index=False)
+def _stream_batches(df) -> Iterator["pa.RecordBatch"]:
+    """DataFrame → the Arrow record batches Spark's executors encode
+    (``toArrowBatchRdd``: each partition cut into batches of at most
+    spark.sql.execution.arrow.maxRecordsPerBatch rows), pulled one
+    partition at a time (executors keep later partitions until
+    requested), so driver memory holds one batch, not the whole result.
+    Timestamps, nested ones included, stay UTC instants end to end. The
+    IPC messages carry no schema: it comes from the Spark schema
+    (_arrow_schema), as it does for every other Arrow surface here."""
+    import pyarrow as pa
+    from pyspark.rdd import RDD
+    from pyspark.serializers import NoOpSerializer
 
-    buf: list = []
-    for row in df.toLocalIterator(prefetchPartitions=True):
-        buf.append(row.asDict(recursive=True))
-        if len(buf) >= batch_rows:
-            yield to_batch(buf)
-            buf = []
-    if buf:
-        yield to_batch(buf)
+    schema = _arrow_schema(df)
+    # toArrowBatchRdd is private Spark API, pinned by
+    # tests/test_flightsql.py::test_prepare_statement_schema_discovery
+    messages = RDD(
+        df._jdf.toArrowBatchRdd().toJavaRDD(),
+        df.sparkSession.sparkContext,
+        NoOpSerializer(),
+    )
+    for buf in messages.toLocalIterator(prefetchPartitions=True):
+        yield pa.ipc.read_record_batch(buf, schema)
 
 
 class Client:
@@ -103,7 +89,6 @@ class Client:
         sql: str,
         begin_ns: int | None = None,
         end_ns: int | None = None,
-        batch_rows: int = 10_000,
     ) -> Iterator["pa.RecordBatch"]:
         """SQL → stream of Arrow record batches (FlightSQL DoGet analogue).
 
@@ -118,7 +103,7 @@ class Client:
             df.sparkSession.sparkContext,
             df._mm_query_id,
             sql,
-            _stream_batches(df, batch_rows),
+            _stream_batches(df),
             check=lambda: self.engine.check_spill_budget(df._mm_query_id),
         )
 
@@ -138,7 +123,6 @@ class Client:
         params: dict | None = None,
         begin_ns: int | None = None,
         end_ns: int | None = None,
-        batch_rows: int = 10_000,
     ) -> Iterator["pa.RecordBatch"]:
         """Execute a prepared statement as a record-batch stream
         (python-api.md prepared_statement_stream; like the reference,
@@ -153,7 +137,7 @@ class Client:
             df.sparkSession.sparkContext,
             df._mm_query_id,
             statement.sql,
-            _stream_batches(df, batch_rows),
+            _stream_batches(df),
             check=lambda: self.engine.check_spill_budget(df._mm_query_id),
         )
 
@@ -330,8 +314,6 @@ class PreparedStatement:
         an empty pandas frame would type every string column as null."""
         import re as _re
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         names = set(_re.findall(r":(\w+)", self.sql))
         # bound and analyzed like resolve(), minus the audit record
         # (schema discovery is not an executed statement)
@@ -339,4 +321,4 @@ class PreparedStatement:
         with engine.planning_session():
             spark = engine.prepare_views(self.sql)
             df = spark.sql(self.sql, args={n: None for n in names})
-        return to_arrow_schema(df.schema)
+        return _arrow_schema(df)

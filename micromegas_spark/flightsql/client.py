@@ -46,11 +46,11 @@ def make_call_headers(begin=None, end=None, preserve_dictionary=False) -> list:
 
 def _decode_dictionaries(table: "pa.Table") -> "pa.Table":
     """Dictionary columns → plain values for pandas conversion (the
-    reference's _prepare_table_for_pandas role). Chunks arriving over the
-    wire carry per-batch dictionaries (the server encodes each batch
-    independently), and pandas' categorical conversion assumes one shared
-    dictionary — so decode every dictionary column before to_pandas. The
-    Arrow path (query_arrow) keeps the encoding."""
+    reference's _prepare_table_for_pandas role), so ``query`` returns the
+    same plain string columns with or without preserve_dictionary rather
+    than pandas categoricals. The server sends one dictionary per column
+    for the whole stream; the Arrow path (query_arrow) keeps the
+    encoding."""
     import pyarrow as pa
 
     cols, changed = [], False

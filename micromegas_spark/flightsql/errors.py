@@ -144,8 +144,9 @@ def _classify_one(e: BaseException) -> str | None:
     ):
         return UNIMPLEMENTED
     # executor-side Python failures surface either as a captured
-    # PythonException or (through toLocalIterator's socket server) as a
-    # bare Py4JJavaError whose message embeds the worker traceback; the
+    # PythonException or, from a result stream (client._stream_batches
+    # pulls partitions through an RDD socket server), as a bare
+    # Py4JJavaError whose message embeds the worker traceback; the
     # UDF body ran user-supplied expressions, so its builtins ARE
     # argument errors (reference #1435's exec_err reclassification) —
     # unlike driver-side bare builtins, which stay internal

@@ -11,11 +11,12 @@ schema-discovery actions (:1098-1141), and bulk ingest is a DoPut with a
 
 This module serves the same wire surface from ``pyarrow.flight`` (which
 bundles its own gRPC — no external wheel needed) on top of the in-process
-``Engine``: DoGet streams Arrow record batches straight off
-``toLocalIterator`` (one batch in driver memory at a time), so a network
-client can consume a result larger than the driver heap. Spark remains the
-execution engine; this is purely the transport the rebuild was missing
-(in-process ``client.Client`` covers the same surface without a network).
+``Engine``: DoGet streams the Arrow record batches Spark's executors
+encode, pulled one partition at a time (``client._stream_batches``; one
+batch in driver memory at a time), so a network client can consume a
+result larger than the driver heap. Spark remains the execution engine;
+this is purely the transport the rebuild was missing (in-process
+``client.Client`` covers the same surface without a network).
 
 Scale shape: one server process fronts one SparkSession; each call plans
 in a clone of it that it holds alone while planning, taken from the
@@ -85,7 +86,12 @@ def _make_middleware(flight):
     return _Factory
 
 
-def dictionary_encode_stream(df, schema, batches, max_dictionary_values: int = 4096):
+# preserve_dictionary encodes a string column only up to this many
+# distinct values; above it the column streams as plain strings
+MAX_DICTIONARY_VALUES = 4096
+
+
+def dictionary_encode_stream(df, schema, batches):
     """(schema, batch-iter) → same stream with low-cardinality string
     columns dictionary-encoded, mirroring the reference's
     preserve_dictionary response path (flight_sql_service_impl.rs:693).
@@ -111,7 +117,7 @@ def dictionary_encode_stream(df, schema, batches, max_dictionary_values: int = 4
     ).collect()[0]
     # 2x margin: approx_count_distinct under-counting must not let a
     # too-big dictionary through to collect_set
-    maybe = [c for i, c in enumerate(str_cols) if approx[f"c{i}"] <= 2 * max_dictionary_values]
+    maybe = [c for i, c in enumerate(str_cols) if approx[f"c{i}"] <= 2 * MAX_DICTIONARY_VALUES]
     dictionaries: dict[str, "pa.Array"] = {}
     if maybe:
         sets = df.agg(
@@ -119,7 +125,7 @@ def dictionary_encode_stream(df, schema, batches, max_dictionary_values: int = 4
         ).collect()[0]
         for i, c in enumerate(maybe):
             values = sorted(sets[f"c{i}"])
-            if len(values) <= max_dictionary_values:
+            if len(values) <= MAX_DICTIONARY_VALUES:
                 dictionaries[c] = pa.array(values, type=pa.string())
     if not dictionaries:
         return schema, batches
@@ -173,9 +179,7 @@ class FlightSQLServer:
         self,
         engine: "Engine",
         location: str = "grpc://127.0.0.1:0",
-        batch_rows: int = 10_000,
         auth_token: str | None = None,
-        max_dictionary_values: int = 4096,
         key_store=None,
     ):
         flight = _flight()
@@ -189,8 +193,6 @@ class FlightSQLServer:
                 "(hashed API keys), not both"
             )
         self.engine = engine
-        self.batch_rows = batch_rows
-        self.max_dictionary_values = max_dictionary_values
         # the admin mint/list/revoke actions manage this same store —
         # the reference's #1383 "mint keys without redeploy" loop (its
         # OIDC-gated /auth/api_keys HTTP routes; here the admin-gated
@@ -319,18 +321,19 @@ class FlightSQLServer:
     def _do_get(self, context, ticket):
         import uuid
 
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from micromegas_spark.client import _stream_batches
+        from micromegas_spark.client import _arrow_schema, _stream_batches
+        from micromegas_spark.engine import attributed_iter, job_group
         from micromegas_spark.flightsql.errors import to_flight_error
 
         flight = _flight()
+        sc = self.engine.spark.sparkContext
         sql = self._ticket_sql(ticket.ticket)
         begin_ns, end_ns, preserve = self._call_options(context)
         # #1435: one query_id per request — it rides every client-facing
         # error message, the query_log audit record, and the job group
         # (so query_metrics attributes this request's task metrics)
         query_id = uuid.uuid4().hex[:16]
+        df = None
         try:
             # S11 streaming (VERDICT r9 #3): a pure admin-call statement
             # streams its task log per bucket WHILE the op runs — the
@@ -340,66 +343,39 @@ class FlightSQLServer:
             if parsed is not None:
                 return self._stream_task_log(parsed, sql, query_id)
             df = self.engine.resolve(sql, begin_ns, end_ns, query_id=query_id)
+            schema = _arrow_schema(df)
+            if preserve:
+                from pyspark import StorageLevel
+
+                # ONE execution feeds both the dictionary aggregates and
+                # the batch stream: without the persist, a
+                # non-deterministic query (LIMIT without ORDER BY, rand())
+                # could stream values absent from the collected dictionary
+                # — which the transport would deliver as NULLs
+                df.persist(StorageLevel.MEMORY_AND_DISK)
+                with job_group(sc, query_id, sql):
+                    schema, batches = dictionary_encode_stream(
+                        df, schema, _stream_batches(df)
+                    )
+            else:
+                batches = _stream_batches(df)
         except Exception as e:
             # classify: caller mistakes surface as gRPC InvalidArgument
             # (pyarrow ArrowInvalid client-side), not Internal
+            if preserve and df is not None:
+                df.unpersist()
             _cls, err = to_flight_error(e, query_id)
             raise err from None
-        schema = to_arrow_schema(df.schema)
-        if preserve:
-            import pyarrow as pa
-            from pyspark import StorageLevel
 
-            # ONE execution feeds both the dictionary aggregates and the
-            # batch stream: without the persist, a non-deterministic query
-            # (LIMIT without ORDER BY, rand()) could stream values absent
-            # from the collected dictionary — which the transport would
-            # deliver as NULLs
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                schema, raw = dictionary_encode_stream(
-                    df, schema, _stream_batches(df, self.batch_rows),
-                    self.max_dictionary_values,
-                )
-            except BaseException:
-                # the batch generator (whose finally owns the unpersist)
-                # doesn't exist yet — don't leave the result cached in the
-                # long-lived server session
-                df.unpersist()
-                raise
-
-            def batches(d=df, inner=raw):
-                # see attributed(): pin the query's job group around each
-                # pull, cleared between pulls (other queries may run on
-                # this gRPC thread mid-stream)
-                from micromegas_spark.engine import attributed_iter
-
-                try:
-                    yield from attributed_iter(
-                        self.engine.spark.sparkContext, query_id, sql, inner,
-                        check=lambda: self.engine.check_spill_budget(query_id),
-                    )
-                finally:
-                    d.unpersist()
-
-            # GeneratorStream's writer doesn't emit the dictionary batches
-            # a dictionary-typed schema requires; a RecordBatchReader-backed
-            # stream goes through the full IPC dictionary path
-            return flight.RecordBatchStream(
-                pa.RecordBatchReader.from_batches(schema, batches())
-            )
-
-        def attributed(inner):
+        def served():
             # job groups are THREAD-local and Flight pulls the generator on
             # a gRPC serving thread, not the do_get handler thread that ran
-            # resolve() — re-pin the group around EACH pull (and clear it
-            # between pulls) so the streaming jobs are attributed to this
-            # query_id and nothing else's (#1406 audit)
-            from micromegas_spark.engine import attributed_iter
-
+            # resolve() — attributed_iter re-pins the group around EACH pull
+            # (and clears it between pulls) so the streaming jobs are
+            # attributed to this query_id and nothing else's (#1406 audit)
             try:
                 yield from attributed_iter(
-                    self.engine.spark.sparkContext, query_id, sql, inner,
+                    sc, query_id, sql, batches,
                     check=lambda: self.engine.check_spill_budget(query_id),
                 )
             except Exception as e:
@@ -409,10 +385,22 @@ class FlightSQLServer:
                 # InvalidArgument, not Internal
                 _cls, err = to_flight_error(e, query_id)
                 raise err from None
+            finally:
+                if preserve:
+                    # don't leave the result cached in the long-lived
+                    # server session
+                    df.unpersist()
 
-        return flight.GeneratorStream(
-            schema, attributed(_stream_batches(df, self.batch_rows))
-        )
+        if preserve:
+            import pyarrow as pa
+
+            # GeneratorStream's writer doesn't emit the dictionary batches
+            # a dictionary-typed schema requires; a RecordBatchReader-backed
+            # stream goes through the full IPC dictionary path
+            return flight.RecordBatchStream(
+                pa.RecordBatchReader.from_batches(schema, served())
+            )
+        return flight.GeneratorStream(schema, served())
 
     def _stream_task_log(self, parsed, sql: str, query_id: str):
         """Stream an admin op's (time, msg) log per bucket AS IT RUNS —

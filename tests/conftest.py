@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -18,6 +19,23 @@ SF_CORRECT = os.path.join(TESTDATA, "sf0.01")
 def spark():
     s = get_spark("micromegas-spark-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     yield s
+
+
+@contextmanager
+def arrow_batch_rows(spark, n: int):
+    """Cap result-stream batches at ``n`` rows (Spark's
+    spark.sql.execution.arrow.maxRecordsPerBatch) inside the block, then
+    restore the session-wide setting."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 @pytest.fixture(scope="session")

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from micromegas_spark.client import Client
 from micromegas_spark.engine import Engine
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, arrow_batch_rows
 
 
 def test_client_query_surfaces(spark):
@@ -165,7 +165,8 @@ def test_prepared_statement_stream_and_schema(spark):
     stmt = c.prepare("SELECT event_id, value FROM events WHERE value > :lo")
     sch = stmt.schema()
     assert [f.name for f in sch] == ["event_id", "value"]
-    batches = list(c.prepared_statement_stream(stmt, params={"lo": 0.5}, batch_rows=100))
+    with arrow_batch_rows(spark, 100):
+        batches = list(c.prepared_statement_stream(stmt, params={"lo": 0.5}))
     assert batches and all(b.schema.names == ["event_id", "value"] for b in batches)
     total = sum(b.num_rows for b in batches)
     want = c.query("SELECT COUNT(*) AS n FROM events WHERE value > 0.5").n[0]
@@ -209,14 +210,14 @@ def test_stream_batches_carry_string_columns(spark):
     from tests.conftest import SF_SMOKE
 
     c = Client(Engine.from_test_tables(spark, SF_SMOKE))
-    batches = list(
-        c.query_stream("SELECT event_id, event_type FROM events", batch_rows=400)
-    )
+    with arrow_batch_rows(spark, 400):
+        batches = list(c.query_stream("SELECT event_id, event_type FROM events"))
     assert batches and str(batches[0].schema.field("event_type").type) == "string"
     assert sum(b.num_rows for b in batches) == 1000
     stmt = c.prepare("SELECT event_type FROM events WHERE value > :lo")
     assert str(stmt.schema().field("event_type").type) == "string"
-    got = list(c.prepared_statement_stream(stmt, params={"lo": 0.5}, batch_rows=300))
+    with arrow_batch_rows(spark, 300):
+        got = list(c.prepared_statement_stream(stmt, params={"lo": 0.5}))
     assert got and all(str(b.schema.field("event_type").type) == "string" for b in got)
 
 
@@ -274,11 +275,11 @@ def test_admin_catalog_sql_spellings(spark, tmp_path):
 
 
 def test_stream_batches_timestamps_survive_non_utc_process(spark):
-    """TimestampType rows collected via toLocalIterator are naive
-    wall-clock datetimes in the driver PROCESS timezone (Python-side
-    fromInternal, not the session tz conf) — the stream must ship
-    instants, not wall clocks, or every value shifts by the process
-    offset. Pinned by actually changing the Python process tz."""
+    """The stream must ship instants, not wall clocks: a Python-side
+    conversion of TimestampType (Row collection, fromInternal) yields
+    naive datetimes in the driver PROCESS timezone and shifts every value
+    by the process offset — top-level and nested in a struct alike.
+    Pinned by actually changing the Python process tz."""
     import os
     import time as _time
 
@@ -287,17 +288,22 @@ def test_stream_batches_timestamps_survive_non_utc_process(spark):
     from tests.conftest import SF_SMOKE
 
     c = Client(Engine.from_test_tables(spark, SF_SMOKE))
-    sql = "SELECT event_id, CAST(ts_us / 1000000 AS TIMESTAMP) AS t FROM events ORDER BY event_id LIMIT 50"
+    sql = (
+        "SELECT event_id, CAST(ts_us / 1000000 AS TIMESTAMP) AS t, "
+        "named_struct('t', CAST(ts_us / 1000000 AS TIMESTAMP)) AS s "
+        "FROM events ORDER BY event_id LIMIT 50"
+    )
     arrow = c.query_arrow(sql).to_pydict()
-    direct = dict(zip(arrow["event_id"], arrow["t"]))
+    direct = dict(zip(arrow["event_id"], zip(arrow["t"], arrow["s"])))
     prev_tz = os.environ.get("TZ")
     try:
         os.environ["TZ"] = "America/New_York"
         _time.tzset()
         streamed = {}
-        for b in c.query_stream(sql, batch_rows=20):
-            tb = b.to_pydict()
-            streamed.update(zip(tb["event_id"], tb["t"]))
+        with arrow_batch_rows(spark, 20):
+            for b in c.query_stream(sql):
+                tb = b.to_pydict()
+                streamed.update(zip(tb["event_id"], zip(tb["t"], tb["s"])))
     finally:
         if prev_tz is None:
             os.environ.pop("TZ", None)
@@ -305,6 +311,26 @@ def test_stream_batches_timestamps_survive_non_utc_process(spark):
             os.environ["TZ"] = prev_tz
         _time.tzset()
     assert streamed == direct  # identical instants, no offset shift
+
+
+def test_stream_batches_follow_large_var_types(spark):
+    """Under spark.sql.execution.arrow.useLargeVarTypes Spark encodes
+    string columns as large_string: the stream decodes them as such
+    (reading those buffers as plain strings aborts the process), agreeing
+    with query_arrow and the prepared-statement schema."""
+    import pyarrow as pa
+
+    c = Client(Engine.from_test_tables(spark, SF_SMOKE))
+    sql = "SELECT event_id, event_type FROM events ORDER BY event_id LIMIT 50"
+    key = "spark.sql.execution.arrow.useLargeVarTypes"
+    spark.conf.set(key, "true")
+    try:
+        streamed = pa.Table.from_batches(list(c.query_stream(sql)))
+        assert streamed.schema.field("event_type").type == pa.large_string()
+        assert streamed.schema == c.prepare(sql).schema()
+        assert streamed.equals(c.query_arrow(sql))
+    finally:
+        spark.conf.unset(key)
 
 
 def test_prepared_statement_reaches_lazy_views_and_audit(spark, tmp_path):

@@ -31,7 +31,7 @@ from micromegas_spark.flightsql.errors import (
     to_flight_error,
 )
 from micromegas_spark.flightsql.server import FlightSQLServer
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, arrow_batch_rows
 
 
 # ---------------------------------------------------------- classification
@@ -112,8 +112,8 @@ def engine(spark):
 
 
 @pytest.fixture(scope="module")
-def server(engine):
-    with FlightSQLServer(engine, batch_rows=512) as srv:
+def server(spark, engine):
+    with arrow_batch_rows(spark, 512), FlightSQLServer(engine) as srv:
         yield srv
 
 
@@ -227,10 +227,12 @@ def test_interleaved_same_thread_queries_attribute_to_own_id(engine):
     assert mc["n_stages"] == 0
 
 
-def test_exec_time_udf_error_classifies_user(engine, client):
+def test_exec_time_udf_error_classifies_user(engine, server):
     """#1435 exec_err parity: a Python-UDF ValueError raised DURING
     execution (not planning) still reaches the client as ArrowInvalid with
-    the query id — the reference reclassified exactly these from Internal."""
+    the query id — the reference reclassified exactly these from Internal.
+    With preserve_dictionary the error can surface in the stream or, for
+    a string column, in the dictionary pre-pass; both classify alike."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
@@ -242,9 +244,15 @@ def test_exec_time_udf_error_classifies_user(engine, client):
         "boom_tbl", engine.spark.range(8).select(boom("id").alias("v"))
     )
     try:
-        with pytest.raises(pa.lib.ArrowInvalid) as ei:
-            client.query("SELECT v FROM boom_tbl")
-        assert "[query_id=" in str(ei.value)
+        for preserve in (False, True):
+            with FlightSQLClient(server.uri, preserve_dictionary=preserve) as c:
+                for sql in (
+                    "SELECT v FROM boom_tbl",
+                    "SELECT CAST(v AS STRING) AS s FROM boom_tbl",
+                ):
+                    with pytest.raises(pa.lib.ArrowInvalid) as ei:
+                        c.query(sql)
+                    assert "[query_id=" in str(ei.value)
     finally:
         del engine._views["boom_tbl"]
 
@@ -346,7 +354,11 @@ def test_spill_budget_aborts_stream_over_wire(spark, tmp_path):
         }
         for qid in ids
     }
-    with FlightSQLServer(eng, batch_rows=4) as srv, FlightSQLClient(srv.uri) as c:
+    with (
+        arrow_batch_rows(spark, 4),
+        FlightSQLServer(eng) as srv,
+        FlightSQLClient(srv.uri) as c,
+    ):
         with pytest.raises(flight.FlightServerError) as ei:
             c.query("SELECT o_orderkey FROM orders")
         assert "[error_class=resource]" in str(ei.value)
@@ -521,21 +533,20 @@ def test_spill_budget_aborts_embedded_stream(spark):
         for qid in ids
     }
     client = Client(eng)
-    with pytest.raises(SpillBudgetExceeded) as ei:
-        for _ in client.query_stream(
-            "SELECT o_orderkey FROM orders", batch_rows=4
-        ):
-            pass
+    with arrow_batch_rows(spark, 4):
+        with pytest.raises(SpillBudgetExceeded) as ei:
+            for _ in client.query_stream("SELECT o_orderkey FROM orders"):
+                pass
     assert classify_exception(ei.value) == RESOURCE
     # the prepared-statement stream rides the same guard
     stmt = client.prepare("SELECT r_name FROM region")
-    with pytest.raises(SpillBudgetExceeded):
-        for _ in client.prepared_statement_stream(stmt, batch_rows=2):
-            pass
-    # budget off: the same streams complete
-    eng.max_spill_mb = None
-    n = sum(
-        b.num_rows
-        for b in client.query_stream("SELECT r_name FROM region", batch_rows=2)
-    )
+    with arrow_batch_rows(spark, 2):
+        with pytest.raises(SpillBudgetExceeded):
+            for _ in client.prepared_statement_stream(stmt):
+                pass
+        # budget off: the same streams complete
+        eng.max_spill_mb = None
+        n = sum(
+            b.num_rows for b in client.query_stream("SELECT r_name FROM region")
+        )
     assert n == 5

@@ -18,7 +18,7 @@ from micromegas_spark.engine import Engine  # noqa: E402
 from micromegas_spark.flightsql import pb  # noqa: E402
 from micromegas_spark.flightsql.client import FlightSQLClient  # noqa: E402
 from micromegas_spark.flightsql.server import FlightSQLServer  # noqa: E402
-from tests.conftest import SF_SMOKE  # noqa: E402
+from tests.conftest import SF_SMOKE, arrow_batch_rows  # noqa: E402
 
 
 # -- wire codec -------------------------------------------------------------
@@ -79,8 +79,8 @@ def engine(spark):
 
 
 @pytest.fixture(scope="module")
-def server(engine):
-    with FlightSQLServer(engine, batch_rows=500) as srv:
+def server(spark, engine):
+    with arrow_batch_rows(spark, 500), FlightSQLServer(engine) as srv:
         yield srv
 
 
@@ -105,7 +105,7 @@ def test_query_matches_in_process_engine(engine, client):
 
 def test_query_stream_yields_multiple_batches(client):
     batches = list(client.query_stream("SELECT l_orderkey, l_partkey FROM lineitem"))
-    assert len(batches) > 1  # server batch_rows=500, sf0.001 lineitem >> 500
+    assert len(batches) > 1  # 500-row batches, sf0.001 lineitem >> 500
     assert sum(b.num_rows for b in batches) > 500
     assert batches[0].schema.names == ["l_orderkey", "l_partkey"]
 
@@ -178,6 +178,29 @@ def test_prepare_statement_schema_discovery(client, engine):
     total = sum(b.num_rows for b in client.prepared_statement_stream(stmt))
     assert total == engine.query("SELECT COUNT(*) c FROM orders").collect()[0][0]
 
+    # the streamed batches are Spark's own Arrow IPC messages
+    # (toArrowBatchRdd, private Spark API) decoded against the schema the
+    # prepared statement advertises: the three schemas must agree, for
+    # nested and non-string types and for an empty result alike
+    typed = (
+        "SELECT o_orderkey, CAST(o_orderdate AS TIMESTAMP) AS ts, "
+        "CAST(o_totalprice AS DECIMAL(12, 2)) AS price, "
+        "map('status', o_orderstatus) AS m, array(o_orderkey, o_custkey) AS a, "
+        "named_struct('t', CAST(o_orderdate AS TIMESTAMP), 'k', o_orderkey) AS s "
+        "FROM orders WHERE {} ORDER BY o_orderkey LIMIT 20"
+    )
+    for where, rows in (("o_orderkey > 0", 20), ("o_orderkey < 0", 0)):
+        sql = typed.format(where)
+        advertised = client.prepare_statement(sql).dataset_schema
+        assert client.get_flight_info(sql).schema == advertised
+        table = client.query_arrow(sql)
+        assert table.schema == advertised and table.num_rows == rows
+        assert all(
+            b.schema == advertised
+            for b in client.prepared_statement_stream(client.prepare_statement(sql))
+        )
+        assert table.equals(engine.query(sql).toArrow())
+
 
 # -- preserve_dictionary ----------------------------------------------------
 
@@ -209,11 +232,14 @@ def test_preserve_dictionary_header(server):
     assert len(dicts) == 1
 
 
-def test_preserve_dictionary_cardinality_cap(engine):
+def test_preserve_dictionary_cardinality_cap(engine, monkeypatch):
     """Columns above the dictionary cap stay plain strings — encoding a
     high-cardinality column would both blow the driver's collect_set and
     stop paying for itself."""
-    with FlightSQLServer(engine, max_dictionary_values=4) as srv:
+    from micromegas_spark.flightsql import server as server_mod
+
+    monkeypatch.setattr(server_mod, "MAX_DICTIONARY_VALUES", 4)
+    with FlightSQLServer(engine) as srv:
         with FlightSQLClient(srv.uri, preserve_dictionary=True) as dc:
             table = dc.query_arrow(
                 "SELECT o_orderstatus, CAST(o_orderkey AS STRING) AS okey_str "
@@ -331,6 +357,31 @@ def test_concurrent_clients_distinct_ranges(engine, server):
     assert n_first != n_second
     total = run((lo, hi + 1_000_000_000))
     assert n_first + n_second == total
+
+
+def test_every_result_stream_goes_through_stream_batches(engine, server, monkeypatch):
+    """Served DoGet (both preserve_dictionary values) and the in-process
+    streams look ``client._stream_batches`` up when called, so a wrapper
+    installed on the module attribute (perfbench's span hook) sees every
+    result stream; a name bound at import would bypass it silently."""
+    import micromegas_spark.client as client_mod
+
+    real, calls = client_mod._stream_batches, []
+
+    def counting(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(client_mod, "_stream_batches", counting)
+    sql = "SELECT r_name FROM region"
+    for preserve in (False, True):
+        with FlightSQLClient(server.uri, preserve_dictionary=preserve) as c:
+            assert c.query_arrow(sql).num_rows == 5
+    c = client_mod.Client(engine)
+    assert sum(b.num_rows for b in c.query_stream(sql)) == 5
+    stmt = c.prepare(sql)
+    assert sum(b.num_rows for b in c.prepared_statement_stream(stmt)) == 5
+    assert len(calls) == 4
 
 
 def test_empty_result_set_over_wire(client):

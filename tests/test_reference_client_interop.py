@@ -122,10 +122,10 @@ def served_engine(spark):
     from micromegas_spark.engine import Engine
     from micromegas_spark.flightsql.server import FlightSQLServer
 
-    from .conftest import SF_SMOKE
+    from .conftest import SF_SMOKE, arrow_batch_rows
 
     engine = Engine.from_test_tables(spark, SF_SMOKE)
-    with FlightSQLServer(engine, batch_rows=500) as srv:
+    with arrow_batch_rows(spark, 500), FlightSQLServer(engine) as srv:
         yield engine, srv
 
 

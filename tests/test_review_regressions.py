@@ -94,13 +94,14 @@ def test_materialize_after_merge_no_duplication(spark, tmp_path):
 def test_query_stream_is_incremental(spark):
     from micromegas_spark.client import Client
     from micromegas_spark.engine import Engine
-    from tests.conftest import SF_SMOKE
+    from tests.conftest import SF_SMOKE, arrow_batch_rows
 
     c = Client(Engine.from_test_tables(spark, SF_SMOKE))
-    gen = c.query_stream("SELECT event_id, value FROM events", batch_rows=100)
-    first = next(gen)
-    assert first.num_rows == 100
-    total = first.num_rows + sum(b.num_rows for b in gen)
+    with arrow_batch_rows(spark, 100):
+        gen = c.query_stream("SELECT event_id, value FROM events")
+        first = next(gen)
+        assert first.num_rows == 100
+        total = first.num_rows + sum(b.num_rows for b in gen)
     assert total == 1000
 
 
