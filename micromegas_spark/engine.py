@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from micromegas_spark.functions import register_all
-from micromegas_spark.session import clone_session, configure
+from micromegas_spark.session import clone_session, configure, sync_conf
 
 # builder(begin_ns|None, end_ns|None) -> DataFrame
 ViewBuilder = Callable[[int | None, int | None], DataFrame]
@@ -393,9 +393,9 @@ class Engine:
         already held.
 
         On checkout the session's SQL conf is made the parent's as it is
-        now, so a conf set on ``self.spark`` reaches every statement
-        planned after it, and a SET run inside a statement does not
-        outlive the call."""
+        now (session.sync_conf), so a conf set on ``self.spark`` reaches
+        every statement planned after it, and a SET run inside a
+        statement does not outlive the call."""
         held = getattr(self._local, "spark", None)
         if held is not None:
             yield held
@@ -404,13 +404,7 @@ class Engine:
             spark = self._idle.get_nowait()
         except queue.Empty:
             spark = clone_session(self.spark)
-        mine = spark._jsparkSession.sessionState().conf().settings()
-        parent = self.spark._jsparkSession.sessionState().conf().settings()
-        if not mine.equals(parent):
-            # overwrite, then drop extras: plans of earlier calls may
-            # still be running on this session and read its conf
-            mine.putAll(parent)
-            mine.keySet().retainAll(parent.keySet())
+        sync_conf(spark, self.spark)
         self._local.spark = spark
         try:
             yield spark
@@ -1178,24 +1172,33 @@ class Engine:
         self.fs.write_bytes_atomic(murl, json.dumps(manifest).encode())
 
     def _jit_manifest_save_merged(
-        self, murl: str, updates: dict, deletes=()
+        self, murl: str, updates: dict, deletes=(), stale=()
     ) -> None:
-        """Key-level merge commit for the JIT manifests: re-read the
-        CURRENT file at save time and apply only this run's updates and
-        deletions on top, so two processes building DIFFERENT buckets of
-        one instance no longer clobber each other's entries. (The prior
-        whole-dict save from a stale load lost the rival's bucket — a
-        CORRECT outcome, since JIT entries self-heal through the
-        per-bucket source-hash check and vacuum_jit_orphans sweeps the
-        orphaned dir, but a wasted rebuild; the lakehouse needs the full
-        generation CAS because its partitions are not self-healing in
-        the same way.) Residual simultaneous-write window: at most the
-        rival's newest entries, rebuilt by its next read."""
+        """The JIT cache's commit: re-read the CURRENT manifest at save
+        time and apply only this run's ``updates`` (key → entry) and
+        ``deletes`` (keys) on top, so two processes building DIFFERENT
+        buckets of one instance keep each other's entries; then delete
+        the ``stale`` directories — the entries THIS run loaded and
+        replaced or retired — unless the saved manifest still names
+        them. A rival's entry found under the same key at save time is
+        only unlinked, never deleted: its builder may be reading it, and
+        vacuum_jit_orphans sweeps it once old. This and
+        Lakehouse._commit_delta are the only places a retired
+        partition's files are deleted.
+
+        A plain key-level merge, not the Lakehouse's generation CAS: JIT
+        entries self-heal through the per-bucket source-hash (or
+        block-set) check, so the residual simultaneous-write window costs
+        at most a rival's newest entries — rebuilt by its next read."""
         current = self._jit_manifest_load(murl)
         current.update(updates)
         for k in deletes:
             current.pop(k, None)
         self._jit_manifest_save(murl, current)
+        live = {e["path"] for e in current.values()}
+        for d in stale:
+            if d not in live:
+                self.fs.rmtree(d)
 
     def vacuum_jit_orphans(
         self, view_set: str, instance: str, min_age_seconds: float = 3600.0
@@ -1206,32 +1209,16 @@ class Engine:
         ``<warehouse>/<view_set>/instance=<i>/``). The grace window
         protects an in-flight build on deployments without flock; the
         manifests (bucket-mode and block-mode) are the source of truth,
-        so committed dirs are never touched. Returns dirs removed."""
+        so committed dirs are never touched (WarehouseFS.sweep_orphans).
+        Returns dirs removed."""
         mpath = self._jit_manifest(view_set, instance)
-        live = set()
-        for suffix in ("", ".blocks"):
-            for ent in self._jit_manifest_load(mpath + suffix).values():
-                # canon, not norm_url: manifests written by older code may
-                # spell the same dir relative/plain/file:// (ADVICE r10)
-                live.add(self.fs.canon(ent["path"]))
+        live = [
+            ent["path"]
+            for suffix in ("", ".blocks")
+            for ent in self._jit_manifest_load(mpath + suffix).values()
+        ]
         root = self.fs.url(view_set, f"instance={instance}")
-        if not self.fs.exists(root):
-            return 0
-        removed = 0
-        now = time.time()
-        for name in self.fs.listdir(root):
-            url = f"{root}/{name}"
-            if self.fs.canon(url) in live:
-                continue
-            # unknown age (no mtime anywhere under the dir — common for
-            # object-store dir markers) means possibly in-flight: skip,
-            # never treat as infinitely old (ADVICE r10)
-            mtime = self.fs.newest_mtime(url)
-            if mtime is None or now - mtime < min_age_seconds:
-                continue
-            self.fs.rmtree(url)
-            removed += 1
-        return removed
+        return self.fs.sweep_orphans(root, live, min_age_seconds)
 
     def view_instance(
         self, view_set: str, instance: str, begin_ns: int, end_ns: int,
@@ -1259,7 +1246,7 @@ class Engine:
         paths = []
         b = begin_ns - begin_ns % bucket_ns
         updates: dict[str, dict] = {}
-        stale_dirs: list[str] = []
+        stale: list[str] = []
         while b < end_ns:
             key = str(b)
             cur = vs.source_count(instance, b, b + bucket_ns)
@@ -1272,7 +1259,7 @@ class Engine:
                 )
                 df.write.mode("overwrite").parquet(pdir)
                 if ent is not None:
-                    stale_dirs.append(ent["path"])
+                    stale.append(ent["path"])
                 # schema in the manifest: warm reads skip per-call parquet
                 # footer/schema inference (a measured ~0.1 s driver cost
                 # per view_instance on the JIT trio)
@@ -1283,10 +1270,9 @@ class Engine:
                 paths.append(manifest[key]["path"])
             b += bucket_ns
         if updates:
-            # merge-commit: only THIS run's buckets, on the freshest file
-            self._jit_manifest_save_merged(mpath, updates)
-            for d in stale_dirs:  # unreachable after the commit
-                self.fs.rmtree(d)
+            # merge-commit: only THIS run's buckets, on the freshest file;
+            # it deletes the stale buckets' dirs this run replaced
+            self._jit_manifest_save_merged(mpath, updates, stale=stale)
         if not paths:
             return self.spark.range(0).select()
         used = [e for e in manifest.values() if e.get("path") in set(paths)]
@@ -1387,26 +1373,25 @@ class Engine:
         # (tstzrange(..., '[]') && ... in the reference: half-open ranges
         # would miss degenerate and touching shapes); partitions this run
         # wrote or reused are protected by identity, not range shape.
-        retired_dirs: list[str] = []
         deletes: list[str] = []
+        stale: list[str] = []
         for key in [k for k in manifest if k not in run_keys]:
             ent = manifest[key]
-            stale = any(
+            overlapped = any(
                 ent["insert_min"] <= manifest[k]["insert_max"]
                 and manifest[k]["insert_min"] <= ent["insert_max"]
                 for k in run_keys
             )
-            if stale:
-                retired_dirs.append(ent["path"])
+            if overlapped:
+                stale.append(ent["path"])
                 del manifest[key]
                 deletes.append(key)
         if updates or deletes:
             # merge-commit: this run's new partitions + its retirements,
             # applied on the freshest file (a rival's concurrent entries
-            # survive; any overlap is retired by the next read's scan)
-            self._jit_manifest_save_merged(mpath, updates, deletes)
-            for d in retired_dirs:  # unreachable after the commit
-                self.fs.rmtree(d)
+            # survive; any overlap is retired by the next read's scan);
+            # it deletes the dirs of the partitions this run retired
+            self._jit_manifest_save_merged(mpath, updates, deletes, stale)
         if not paths:
             return self.spark.range(0).select()
         used = [e for e in manifest.values() if e.get("path") in set(paths)]

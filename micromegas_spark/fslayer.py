@@ -30,6 +30,7 @@ Two path vocabularies coexist on purpose:
 from __future__ import annotations
 
 import os
+import time
 import uuid
 
 
@@ -135,8 +136,8 @@ class WarehouseFS:
 
     def rmtree(self, url: str, ignore_errors: bool = True) -> None:
         """Delete a directory tree if present. Used ONLY on paths that are
-        already invisible (post-manifest-swap retirement, stale temp) —
-        never as a commit mechanism."""
+        already invisible (a manifest commit's retired partitions, swept
+        orphans) — never as a commit mechanism."""
         try:
             self.fs.delete_dir(self.fs_path(url))
         except FileNotFoundError:
@@ -181,6 +182,31 @@ class WarehouseFS:
                 if best is None or t > best:
                     best = t
         return best
+
+    def sweep_orphans(self, root_url: str, live, min_age_seconds: float) -> int:
+        """The one orphan sweep (Lakehouse.vacuum_orphans,
+        Engine.vacuum_jit_orphans): delete each entry directly under
+        ``root_url`` that no path in ``live`` names and whose newest mtime
+        is at least ``min_age_seconds`` old. Returns entries removed.
+
+        Membership is by canon, not norm_url: manifests written by older
+        code spell a committed dir relative, plain-absolute or file://,
+        and a spelling mismatch here would delete COMMITTED data (ADVICE
+        r10). Unknown age (object-store dir markers carry no mtime)
+        counts as a possible in-flight write, never as infinitely old."""
+        live = {self.canon(p) for p in live}
+        removed = 0
+        now = time.time()
+        for name in self.listdir(root_url):
+            url = f"{root_url}/{name}"
+            if self.canon(url) in live:
+                continue
+            mtime = self.newest_mtime(url)
+            if mtime is None or now - mtime < min_age_seconds:
+                continue
+            self.rmtree(url)
+            removed += 1
+        return removed
 
     def read_bytes(self, url: str) -> bytes:
         with self.fs.open_input_stream(self.fs_path(url)) as f:

@@ -36,7 +36,10 @@ The catalog is a chain of generation-numbered parquet files per view
 generation v, put-if-absent claim of v+1, retry-reapplying the mutation's
 DELTA on the winner's state after a lost race (_commit_manifest /
 _commit_delta) — the multi-writer arbitration the reference gets from
-Postgres transactions, without a database. Reads are
+Postgres transactions, without a database. The commit also owns
+deletion: _commit_delta deletes the directories of the partitions it
+dropped once they are unreachable, so every mutation (materialize,
+merge, retire) retires files in that one place. Reads are
 ``spark.read.parquet(selected partition dirs)`` so Catalyst still sees
 plain parquet with full pushdown.
 """
@@ -45,6 +48,7 @@ from __future__ import annotations
 
 import json
 import math
+import operator
 import os
 import re
 import threading
@@ -53,10 +57,12 @@ import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from micromegas_spark.session import clone_session
+from micromegas_spark.flightsql.errors import InvalidArgument
+from micromegas_spark.session import clone_session, sync_conf
 
 
 @dataclass
@@ -221,6 +227,35 @@ def schema_fingerprint(df: DataFrame) -> str:
     return hashlib.md5(canon.encode()).hexdigest()[:16]
 
 
+# Column-predicate operators of Lakehouse.read: op → (row filter, stats
+# test). The stats test says whether a partition whose column lies in
+# [mn, mx] can hold a row the filter keeps.
+_COLUMN_OPS = {
+    "=": (operator.eq, lambda mn, mx, v: mn <= v <= mx),
+    ">": (operator.gt, lambda mn, mx, v: mx > v),
+    ">=": (operator.ge, lambda mn, mx, v: mx >= v),
+    "<": (operator.lt, lambda mn, mx, v: mn < v),
+    "<=": (operator.le, lambda mn, mx, v: mn <= v),
+}
+
+
+def _stats_can_match(p: Partition, col: str, test, val) -> bool:
+    """Whether ``p``'s recorded [min, max] of ``col`` passes ``test``.
+    Missing stats, non-finite endpoints (NaN/Inf from a pre-guard
+    manifest) and un-comparable stats (e.g. an int predicate on a string
+    column) never prune: bad metadata keeps the partition."""
+    st = (p.column_stats or {}).get(col)
+    if st is None:
+        return True
+    mn, mx = st
+    if any(isinstance(v, float) and (math.isnan(v) or math.isinf(v)) for v in (mn, mx)):
+        return True
+    try:
+        return test(mn, mx, val)
+    except TypeError:
+        return True
+
+
 class ManifestConflict(RuntimeError):
     """A concurrent writer claimed the next manifest generation every time
     we tried. Raised only after _COMMIT_RETRIES read-reapply-claim rounds
@@ -243,6 +278,50 @@ _MANIFEST_GEN_RE = re.compile(r"\.g(\d{12})(?:_([0-9a-f]{8}))?\.parquet$")
 # Prior generations kept after a commit so a reader that listed the
 # directory just before the commit can still open its chosen file.
 _MANIFEST_KEEP_GENS = 2
+
+# The catalog's one schema: a manifest file holds one row per live
+# partition of one view. Heterogenous per-column [min, max] stats
+# (numeric or string) ride as JSON so the schema stays fixed.
+_MANIFEST_SCHEMA = pa.schema(
+    [
+        ("view", pa.string()),
+        ("begin_insert_ns", pa.int64()),
+        ("end_insert_ns", pa.int64()),
+        ("source_hash", pa.int64()),
+        ("min_event_ns", pa.int64()),
+        ("max_event_ns", pa.int64()),
+        ("path", pa.string()),
+        ("updated_unix", pa.float64()),
+        ("schema_hash", pa.string()),
+        ("column_stats_json", pa.string()),
+    ]
+)
+
+
+def _head(cands: list[tuple[int, str]]) -> tuple[int, str]:
+    """The winner among a view's (generation, filename) candidates:
+    highest generation, then lexicographically smallest name (ties only
+    possible on object stores, where names carry a random token — see
+    Lakehouse._commit_manifest)."""
+    return min(cands, key=lambda c: (-c[0], c[1]))
+
+
+def _decode_partitions(tbl: pa.Table) -> list[Partition]:
+    """Manifest rows → Partitions."""
+    out = []
+    for row in tbl.to_pylist():
+        row.pop("view", None)
+        stats = row.pop("column_stats_json", None)
+        row["column_stats"] = json.loads(stats) if stats else {}
+        out.append(Partition(**row))
+    return out
+
+
+def _identity(p: Partition) -> tuple[int, int, str]:
+    """A partition's identity for frozen drop sets: its insert range and
+    its write-once path, so a CAS retry never matches a partition
+    committed after the set was taken."""
+    return (p.begin_insert_ns, p.end_insert_ns, p.path)
 
 
 # Per-(warehouse, view) write locks — process-wide so every Lakehouse
@@ -276,7 +355,8 @@ class Lakehouse:
         reference's Postgres catalog gets this from transactions,
         partition_cache.rs; a file manifest needs an advisory lock).
         Every read-modify-write of the manifest — materialize, merge,
-        retire — runs under this per-view lock: a process-wide RLock for
+        retire, and the file deletion its commit does (_commit_delta) —
+        runs under this per-view lock: a process-wide RLock for
         threads sharing the interpreter plus an OS flock on
         _partitions/<view>.lock for concurrent processes, so two writers
         ticking the same view serialize and the second observes the
@@ -284,6 +364,9 @@ class Lakehouse:
         maintenance across DIFFERENT views still parallelizes, which is
         the fleet-scale fan-out unit anyway (one writer per view per
         tick). Crash-safe: flock dies with the process, no stale locks.
+        Re-entrant: a nested acquisition on the holding thread only
+        counts depth, so locked operations compose without unlocked
+        twins.
 
         On a non-local (URI) warehouse there is no flock; the RLock still
         serializes threads, and cross-process safety comes from the CAS
@@ -318,67 +401,48 @@ class Lakehouse:
     # -- manifest ----------------------------------------------------------
     #
     # The partition catalog is a parquet TABLE, not a JSON sidecar: one
-    # file per view under _partitions/, all sharing one schema (with a
-    # `view` column), so the whole catalog is directly queryable —
-    # spark.read.parquet(warehouse/_partitions) or partitions_table() —
-    # exactly like the reference's Postgres catalog is queryable SQL
+    # file per view under _partitions/, all sharing _MANIFEST_SCHEMA (with
+    # a `view` column), so the whole catalog is directly queryable —
+    # spark.read.parquet over the head files — exactly like the
+    # reference's Postgres catalog is queryable SQL
     # (partition_cache.rs:329-466). At fleet scale (10⁶ partitions) a
     # columnar manifest loads in milliseconds and predicate-prunes;
     # sub-file row groups keep even a giant view's catalog scannable.
     # Atomicity: a compare-and-swap claim of the next generation file
     # (_commit_manifest) — the transactional retire+insert.
 
-    _MANIFEST_FIELDS = [
-        "begin_insert_ns",
-        "end_insert_ns",
-        "source_hash",
-        "min_event_ns",
-        "max_event_ns",
-        "path",
-        "updated_unix",
-        "schema_hash",
-    ]
+    def _manifest_files(self) -> dict[str, list[tuple[int, str]]]:
+        """view → (generation, filename) of each of its generation-
+        numbered manifest files in _partitions/, unordered. One listdir
+        serves every view."""
+        out: dict[str, list[tuple[int, str]]] = {}
+        for name in self.fs.listdir(self.fs.url("_partitions")):
+            m = _MANIFEST_GEN_RE.search(name)
+            if m:
+                out.setdefault(name[: m.start()], []).append((int(m.group(1)), name))
+        return out
 
     def _manifest_candidates(self, view: str) -> list[tuple[int, str]]:
-        """(generation, filename) of every generation-numbered manifest
-        file for ``view`` in _partitions/, unordered."""
-        prefix = f"{view}.g"
-        out = []
-        for name in self.fs.listdir(self.fs.url("_partitions")):
-            if not name.startswith(prefix):
-                continue
-            m = _MANIFEST_GEN_RE.search(name)
-            if m and name[: m.start()] == view:
-                out.append((int(m.group(1)), name))
-        return out
+        return self._manifest_files().get(view, [])
 
-    def _read_manifest_file(self, fname: str) -> list[Partition]:
-        tbl = self.fs.read_parquet_table(self.fs.url("_partitions", fname))
-        out = []
-        for row in tbl.to_pylist():
-            row.pop("view", None)
-            stats = row.pop("column_stats_json", None)
-            row["column_stats"] = json.loads(stats) if stats else {}
-            out.append(Partition(**row))
-        return out
+    def list_view_sets(self) -> list[str]:
+        return sorted(self._manifest_files())
 
-    def _manifest_state(self, view: str) -> tuple[list[Partition], int]:
-        """Current catalog + its generation — the read half of the CAS
-        commit (read(v) → claim(v+1), VERDICT r10 #1). Winner among
-        generation files: highest generation, then lexicographically
-        smallest name (ties only possible on object stores, where names
-        carry a random token — see _commit_manifest); no file reads as
-        the empty generation 0. Retries the list+read when a
-        concurrent committer's old-generation sweep removes the chosen
-        file between our list and open (needs ≥ _MANIFEST_KEEP_GENS
-        commits inside that window)."""
+    def _manifest_head(self, view: str) -> tuple[pa.Table, int]:
+        """(Arrow table, generation) of the view's current catalog: the
+        one reader of a view's manifest head, for the read half of the
+        CAS commit (read(v) → claim(v+1), VERDICT r10 #1) and for every
+        catalog read. No file reads as the empty generation 0. Retries
+        the list+read when a concurrent committer's old-generation sweep
+        removes the chosen file between our list and open (needs ≥
+        _MANIFEST_KEEP_GENS commits inside that window)."""
         for _ in range(4):
             cands = self._manifest_candidates(view)
+            if not cands:
+                return _MANIFEST_SCHEMA.empty_table(), 0
+            gen, fname = _head(cands)
             try:
-                if cands:
-                    gen, fname = min(cands, key=lambda c: (-c[0], c[1]))
-                    return self._read_manifest_file(fname), gen
-                return [], 0
+                return self.fs.read_parquet_table(self.fs.url("_partitions", fname)), gen
             except (FileNotFoundError, OSError):
                 continue
         raise ManifestConflict(
@@ -387,34 +451,7 @@ class Lakehouse:
         )
 
     def list_partitions(self, view: str) -> list[Partition]:
-        return self._manifest_state(view)[0]
-
-    def _manifest_table(self, view: str, parts: list[Partition]):
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [
-                ("view", pa.string()),
-                ("begin_insert_ns", pa.int64()),
-                ("end_insert_ns", pa.int64()),
-                ("source_hash", pa.int64()),
-                ("min_event_ns", pa.int64()),
-                ("max_event_ns", pa.int64()),
-                ("path", pa.string()),
-                ("updated_unix", pa.float64()),
-                ("schema_hash", pa.string()),
-                # heterogenous per-column [min,max] (numeric or string)
-                # ride as JSON so the table schema stays fixed
-                ("column_stats_json", pa.string()),
-            ]
-        )
-        rows = {name: [] for name in schema.names}
-        for p in parts:
-            rows["view"].append(view)
-            for f in self._MANIFEST_FIELDS:
-                rows[f].append(getattr(p, f))
-            rows["column_stats_json"].append(json.dumps(p.column_stats or {}))
-        return pa.Table.from_pydict(rows, schema=schema)
+        return self._pruned_partitions(view)
 
     def _commit_manifest(self, view: str, parts: list[Partition], base_gen: int) -> bool:
         """THE commit point, as a compare-and-swap: claim generation
@@ -441,7 +478,13 @@ class Lakehouse:
 
         Returns False when the generation was lost; callers loop
         (_commit_delta / _save_manifest)."""
-        tbl = self._manifest_table(view, parts)
+        tbl = pa.Table.from_pylist(
+            [
+                {**vars(p), "view": view, "column_stats_json": json.dumps(p.column_stats or {})}
+                for p in parts
+            ],
+            schema=_MANIFEST_SCHEMA,
+        )
         new_gen = base_gen + 1
         if self.fs.is_local and self.fs.rename_safe:
             fname = f"{view}.g{new_gen:012d}.parquet"
@@ -483,7 +526,7 @@ class Lakehouse:
         lost race re-applies their DELTA on the winner's state instead
         of overwriting it."""
         for _ in range(_COMMIT_RETRIES):
-            _, gen = self._manifest_state(view)
+            _, gen = self._manifest_head(view)
             if self._commit_manifest(view, parts, gen):
                 return
         raise ManifestConflict(f"could not commit manifest for {view!r}")
@@ -497,52 +540,27 @@ class Lakehouse:
         partition scenario on no-flock warehouses: A reads [], B reads
         [], A commits [p1], B commits [p2] over base [] → p1 silently
         orphaned. Here B's claim of A's generation fails, B re-reads
-        [p1], commits [p1, p2].) Returns the partitions the predicate
-        removed from the COMMITTED state, for post-commit file
-        retirement — files are only ever deleted once unreachable."""
+        [p1], commits [p1, p2].)
+
+        The commit owns post-commit deletion: once the new generation is
+        claimed, the directories of the partitions the predicate dropped
+        from the COMMITTED state are unreachable and are deleted here
+        (except a path ``add`` re-publishes) — files are only ever
+        deleted once unreachable, and this is the one place the
+        catalog's retired partitions lose their files. Returns the
+        dropped partitions, for counts and log rows."""
         for _ in range(_COMMIT_RETRIES):
-            parts, gen = self._manifest_state(view)
+            tbl, gen = self._manifest_head(view)
+            parts = _decode_partitions(tbl)
             dropped = [p for p in parts if drop(p)] if drop else []
             new = [p for p in parts if p not in dropped] + list(add)
             if self._commit_manifest(view, new, gen):
+                kept = {p.path for p in add}
+                for p in dropped:
+                    if p.path not in kept:
+                        self.fs.rmtree(p.path)
                 return dropped
         raise ManifestConflict(f"could not commit delta for {view!r}")
-
-    _MANIFEST_DDL = (
-        "view STRING, begin_insert_ns BIGINT, end_insert_ns BIGINT, "
-        "source_hash BIGINT, min_event_ns BIGINT, max_event_ns BIGINT, "
-        "path STRING, updated_unix DOUBLE, schema_hash STRING, "
-        "column_stats_json STRING"
-    )
-
-    def _winner_manifest_files(self) -> dict[str, str]:
-        """view → its winning manifest FILE name, the head of its
-        generation chain. One listdir serves every view."""
-        best: dict[str, tuple] = {}
-        for name in self.fs.listdir(self.fs.url("_partitions")):
-            m = _MANIFEST_GEN_RE.search(name)
-            if not m:
-                continue
-            view, key = name[: m.start()], (-int(m.group(1)), name)
-            if view not in best or key < best[view][0]:
-                best[view] = (key, name)
-        return {v: n for v, (_k, n) in best.items()}
-
-    def partitions_table(self):
-        """The entire partition catalog as a DataFrame (every view's
-        winning manifest file is one parquet table under _partitions/) —
-        the queryable-catalog property of the reference's Postgres-backed
-        list_partitions, without a serving database."""
-        files = [
-            self.fs.url("_partitions", n)
-            for n in self._winner_manifest_files().values()
-        ]
-        if not files:
-            return self.spark.createDataFrame([], self._MANIFEST_DDL)
-        # column order differs between writes only by schema, fixed here
-        return self.spark.read.parquet(*files).select(
-            *[c.split()[0] for c in self._MANIFEST_DDL.split(", ")]
-        )
 
     # -- materialization ---------------------------------------------------
 
@@ -559,26 +577,22 @@ class Lakehouse:
         aborts; a fresh *covering* partition (e.g. the output of
         merge_partitions) also aborts — re-creating the fine buckets under
         it would double the data; a stale covering/misaligned overlap is
-        retired and recreated at this bucket granularity."""
-        with self._view_lock(spec.name):
-            return self._materialize_bucket(spec, begin_ns, end_ns)
+        retired in the same commit that publishes this bucket's rebuild
+        (or, when the source is empty, in a retire-only commit)."""
 
-    def _materialize_bucket(self, spec: BatchViewSpec, begin_ns: int, end_ns: int) -> str:
-        current = self._source_hash(spec, begin_ns, end_ns)
-        parts = self.list_partitions(spec.name)
-        existing = [
-            p for p in parts if p.begin_insert_ns == begin_ns and p.end_insert_ns == end_ns
-        ]
-        if existing and existing[0].source_hash == current:
-            return "up_to_date"
-        overlapping = [
-            p
-            for p in parts
-            if p.begin_insert_ns < end_ns
-            and p.end_insert_ns > begin_ns
-            and not (p.begin_insert_ns == begin_ns and p.end_insert_ns == end_ns)
-        ]
-        if overlapping:
+        def overlaps(p: Partition) -> bool:
+            return p.begin_insert_ns < end_ns and p.end_insert_ns > begin_ns
+
+        def exact(p: Partition) -> bool:
+            return p.begin_insert_ns == begin_ns and p.end_insert_ns == end_ns
+
+        with self._view_lock(spec.name):
+            current = self._source_hash(spec, begin_ns, end_ns)
+            parts = self.list_partitions(spec.name)
+            existing = [p for p in parts if exact(p)]
+            if existing and existing[0].source_hash == current:
+                return "up_to_date"
+            overlapping = [p for p in parts if overlaps(p) and not exact(p)]
             covering = [
                 p
                 for p in overlapping
@@ -589,63 +603,46 @@ class Lakehouse:
                 cov_hash = self._source_hash(spec, cov.begin_insert_ns, cov.end_insert_ns)
                 if cov.source_hash == cov_hash:
                     return "covered"
-            # stale covering partition or misaligned partial overlaps:
-            # retire them (manifest commit FIRST — files only after they
-            # are unreachable), then recreate this bucket from source
-            dropped = self._commit_delta(
-                spec.name,
-                drop=lambda p: (
-                    p.begin_insert_ns < end_ns
-                    and p.end_insert_ns > begin_ns
-                    and not (
-                        p.begin_insert_ns == begin_ns and p.end_insert_ns == end_ns
-                    )
-                ),
+            # the stale overlaps as a frozen identity set (merge_partitions'
+            # pattern): a CAS retry must not retire a partition a rival
+            # committed over this range during the extract and write
+            stale = {_identity(p) for p in overlapping}
+            if current == 0 and not existing:
+                if stale:  # stale overlaps over an empty source
+                    self._commit_delta(spec.name, drop=lambda p: _identity(p) in stale)
+                return "empty"
+
+            df = self.spark.sql(spec.extract_query.format(begin=begin_ns, end=end_ns))
+            # event-time bounds + per-column min/max stats in ONE aggregation
+            # job (stats are free at write time; they buy catalog-level data
+            # skipping at read time)
+            bounds, column_stats = _bounds_and_stats(df, spec.time_column)
+            # write-once to a unique, never-reused path; the manifest commit
+            # below publishes it (write_partition.rs: unique object key +
+            # catalog insert — no rename on any filesystem)
+            out_dir = self.fs.unique_dir_url(spec.name, f"{begin_ns}_{end_ns}")
+            df.write.mode("overwrite").parquet(out_dir)
+
+            new_part = Partition(
+                begin_insert_ns=begin_ns,
+                end_insert_ns=end_ns,
+                source_hash=current,
+                min_event_ns=int(bounds.mn) if bounds.mn is not None else begin_ns,
+                max_event_ns=int(bounds.mx) if bounds.mx is not None else end_ns,
+                path=out_dir,
+                schema_hash=schema_fingerprint(df),
+                column_stats=column_stats,
             )
-            for p in dropped:
-                self.fs.rmtree(p.path)
-            parts = self.list_partitions(spec.name)
-            existing = [
-                p for p in parts if p.begin_insert_ns == begin_ns and p.end_insert_ns == end_ns
-            ]
-        if current == 0 and not existing:
-            return "empty"
-
-        df = self.spark.sql(spec.extract_query.format(begin=begin_ns, end=end_ns))
-        # event-time bounds + per-column min/max stats in ONE aggregation
-        # job (stats are free at write time; they buy catalog-level data
-        # skipping at read time)
-        bounds, column_stats = _bounds_and_stats(df, spec.time_column)
-        # write-once to a unique, never-reused path; the manifest swap
-        # below is the commit (write_partition.rs: unique object key +
-        # catalog insert — no rename on any filesystem)
-        out_dir = self.fs.unique_dir_url(spec.name, f"{begin_ns}_{end_ns}")
-        df.write.mode("overwrite").parquet(out_dir)
-
-        new_part = Partition(
-            begin_insert_ns=begin_ns,
-            end_insert_ns=end_ns,
-            source_hash=current,
-            min_event_ns=int(bounds.mn) if bounds.mn is not None else begin_ns,
-            max_event_ns=int(bounds.mx) if bounds.mx is not None else end_ns,
-            path=out_dir,
-            schema_hash=schema_fingerprint(df),
-            column_stats=column_stats,
-        )
-        # retire+insert as one delta: whoever committed this exact bucket
-        # meanwhile (flock-less same-bucket race) is replaced — one
-        # winner per bucket, the rival's dir becomes a vacuumable orphan
-        dropped = self._commit_delta(
-            spec.name,
-            drop=lambda p: (
-                p.begin_insert_ns == begin_ns and p.end_insert_ns == end_ns
-            ),
-            add=[new_part],
-        )
-        for old in dropped:  # retire files only once unreachable
-            if old.path != out_dir:
-                self.fs.rmtree(old.path)
-        return "created"
+            # retire+insert as one delta: the stale overlaps seen above and
+            # whatever holds this exact bucket (a flock-less rival's commit
+            # included — one winner per bucket) are replaced, and no reader
+            # ever sees the bucket empty
+            self._commit_delta(
+                spec.name,
+                drop=lambda p: exact(p) or _identity(p) in stale,
+                add=[new_part],
+            )
+            return "created"
 
     def materialize_range(
         self, spec: BatchViewSpec, begin_ns: int, end_ns: int, bucket_ns: int,
@@ -677,64 +674,57 @@ class Lakehouse:
         """MergeExisting (batch_update.rs): re-aggregate the N up-to-date
         partitions inside [begin, end) into one via merge_query."""
         with self._view_lock(spec.name):
-            return self._merge_partitions(spec, begin_ns, end_ns)
-
-    def _merge_partitions(self, spec: BatchViewSpec, begin_ns: int, end_ns: int) -> str:
-        parts = self.list_partitions(spec.name)
-        inside = [
-            p for p in parts if p.begin_insert_ns >= begin_ns and p.end_insert_ns <= end_ns
-        ]
-        if len(inside) <= 1:
-            return "abort"
-        # `source` is bound in the view's merge session, never in the
-        # shared one: other views' merges and statements cannot see it
-        key = (self.fs.root_url, spec.name)
-        spark = _MERGE_SESSIONS.get(key)
-        if spark is None or spark.sparkContext is not self.spark.sparkContext:
-            spark = _MERGE_SESSIONS[key] = clone_session(self.spark)
-        spark.read.parquet(*[p.path for p in inside]).createOrReplaceTempView("source")
-        merged = spark.sql(spec.merge_query)
-        # unique write-once path; the manifest swap below is the commit
-        out_dir = self.fs.unique_dir_url(spec.name, f"{begin_ns}_{end_ns}")
-        # recompute column stats from the MERGED rows — child stats can't
-        # be unioned because merge_query re-aggregates (a SUM(count) can
-        # exceed any child's max); merged partitions are the biggest, so
-        # skipping matters most exactly here. Persisted across the two
-        # actions (stats job + write) so the merge aggregation runs once.
-        merged = merged.persist()
-        try:
-            _, column_stats = _bounds_and_stats(merged, spec.time_column)
-            merged.write.mode("overwrite").parquet(out_dir)
-        finally:
-            merged.unpersist()
-        merged_part = Partition(
-            begin_insert_ns=begin_ns,
-            end_insert_ns=end_ns,
-            source_hash=sum(p.source_hash for p in inside),
-            min_event_ns=min(p.min_event_ns for p in inside),
-            max_event_ns=max(p.max_event_ns for p in inside),
-            path=out_dir,
-            schema_hash=schema_fingerprint(merged),
-            column_stats=column_stats,
-        )
-        # drop EXACTLY the children the merge read (frozen identity set,
-        # not a range predicate): on a CAS retry, a partition a rival
-        # committed inside the range meanwhile is NOT covered by the
-        # merged output and must survive — the next tick's covering/
-        # overlap arbitration resolves it
-        inside_keys = {
-            (p.begin_insert_ns, p.end_insert_ns, p.path) for p in inside
-        }
-        dropped = self._commit_delta(
-            spec.name,
-            drop=lambda p: (p.begin_insert_ns, p.end_insert_ns, p.path)
-            in inside_keys,
-            add=[merged_part],
-        )
-        for p in dropped:  # retire after the manifest commit
-            if p.path != out_dir:
-                self.fs.rmtree(p.path)
-        return "merged"
+            parts = self.list_partitions(spec.name)
+            inside = [
+                p for p in parts if p.begin_insert_ns >= begin_ns and p.end_insert_ns <= end_ns
+            ]
+            if len(inside) <= 1:
+                return "abort"
+            # `source` is bound in the view's merge session, never in the
+            # shared one: other views' merges and statements cannot see it.
+            # Its conf is this Lakehouse's session's as it is now.
+            key = (self.fs.root_url, spec.name)
+            spark = _MERGE_SESSIONS.get(key)
+            if spark is None or spark.sparkContext is not self.spark.sparkContext:
+                spark = _MERGE_SESSIONS[key] = clone_session(self.spark)
+            sync_conf(spark, self.spark)
+            spark.read.parquet(*[p.path for p in inside]).createOrReplaceTempView("source")
+            merged = spark.sql(spec.merge_query)
+            # unique write-once path; the manifest commit below publishes it
+            out_dir = self.fs.unique_dir_url(spec.name, f"{begin_ns}_{end_ns}")
+            # recompute column stats from the MERGED rows — child stats can't
+            # be unioned because merge_query re-aggregates (a SUM(count) can
+            # exceed any child's max); merged partitions are the biggest, so
+            # skipping matters most exactly here. Persisted across the two
+            # actions (stats job + write) so the merge aggregation runs once.
+            merged = merged.persist()
+            try:
+                _, column_stats = _bounds_and_stats(merged, spec.time_column)
+                merged.write.mode("overwrite").parquet(out_dir)
+            finally:
+                merged.unpersist()
+            merged_part = Partition(
+                begin_insert_ns=begin_ns,
+                end_insert_ns=end_ns,
+                source_hash=sum(p.source_hash for p in inside),
+                min_event_ns=min(p.min_event_ns for p in inside),
+                max_event_ns=max(p.max_event_ns for p in inside),
+                path=out_dir,
+                schema_hash=schema_fingerprint(merged),
+                column_stats=column_stats,
+            )
+            # drop EXACTLY the children the merge read (frozen identity set,
+            # not a range predicate): on a CAS retry, a partition a rival
+            # committed inside the range meanwhile is NOT covered by the
+            # merged output and must survive — the next tick's covering/
+            # overlap arbitration resolves it
+            inside_keys = {_identity(p) for p in inside}
+            self._commit_delta(
+                spec.name,
+                drop=lambda p: _identity(p) in inside_keys,
+                add=[merged_part],
+            )
+            return "merged"
 
     def materialize_all(
         self, specs: list[BatchViewSpec], begin_ns: int, end_ns: int, bucket_ns: int
@@ -813,6 +803,24 @@ class Lakehouse:
             .orderBy("view_set", "begin_insert_ns")
         )
 
+    def _retire(self, view: str, drop, log=None) -> int:
+        """The one retire step: under the view lock, commit a delta that
+        drops every partition ``drop`` matches (the commit deletes their
+        files). ``log``: optional TaskLog — one row per retired partition
+        plus a summary (S11; the reference's
+        retire_partitions_table_function streams the same progress).
+        Returns partitions retired."""
+        with self._view_lock(view):
+            dropped = self._commit_delta(view, drop=drop)
+        if log is not None:
+            for p in dropped:
+                log.write(
+                    f"retired partition {view}[{p.begin_insert_ns}, "
+                    f"{p.end_insert_ns}) at {p.path}"
+                )
+            log.write(f"{view}: retired {len(dropped)} partition(s)")
+        return len(dropped)
+
     def retire_incompatible_partitions(
         self, specs: list[BatchViewSpec], view: str | None = None
     ) -> dict[str, int]:
@@ -823,55 +831,23 @@ class Lakehouse:
         out: dict[str, int] = {}
         for v in {r["view_set"] for r in rows}:
             bad = {(r["begin_insert_ns"], r["end_insert_ns"]) for r in rows if r["view_set"] == v}
-            with self._view_lock(v):
-                drop = self._commit_delta(
-                    v,
-                    drop=lambda p: (p.begin_insert_ns, p.end_insert_ns) in bad,
-                )
-                for p in drop:
-                    self.fs.rmtree(p.path)
-            out[v] = len(drop)
+            out[v] = self._retire(
+                v, lambda p: (p.begin_insert_ns, p.end_insert_ns) in bad
+            )
         return out
-
-    def list_view_sets(self) -> list[str]:
-        names = set()
-        for f in self.fs.listdir(self.fs.url("_partitions")):
-            m = _MANIFEST_GEN_RE.search(f)
-            if m:
-                names.add(f[: m.start()])
-        return sorted(names)
 
     def retire_partitions(
         self, view: str, begin_ns: int, end_ns: int, log=None
     ) -> int:
         """retire_partition_by_metadata (F20): drop partitions whose insert
-        bucket lies inside [begin, end) — manifest swap first, then file
+        bucket lies inside [begin, end) — manifest commit first, then file
         cleanup (same ordering as write_partition.rs retire+insert).
-
-        ``log``: optional TaskLog — one row per retired partition plus a
-        summary (S11; the reference's retire_partitions_table_function
-        streams the same progress)."""
-        with self._view_lock(view):
-            return self._retire_partitions(view, begin_ns, end_ns, log)
-
-    def _retire_partitions(
-        self, view: str, begin_ns: int, end_ns: int, log=None
-    ) -> int:
-        drop = self._commit_delta(
+        ``log``: optional TaskLog (see _retire)."""
+        return self._retire(
             view,
-            drop=lambda p: p.begin_insert_ns >= begin_ns
-            and p.end_insert_ns <= end_ns,
+            lambda p: p.begin_insert_ns >= begin_ns and p.end_insert_ns <= end_ns,
+            log,
         )
-        for p in drop:
-            self.fs.rmtree(p.path)
-            if log is not None:
-                log.write(
-                    f"retired partition {view}[{p.begin_insert_ns}, "
-                    f"{p.end_insert_ns}) at {p.path}"
-                )
-        if log is not None:
-            log.write(f"{view}: retired {len(drop)} partition(s)")
-        return len(drop)
 
     def retire_partition_by_metadata(
         self, view_set_name: str, view_instance_id: str, begin_ns: int, end_ns: int
@@ -887,15 +863,10 @@ class Lakehouse:
         manifests, not this catalog). Returns partitions retired (0/1)."""
         if view_instance_id not in ("global", view_set_name):
             return 0
-        with self._view_lock(view_set_name):
-            drop = self._commit_delta(
-                view_set_name,
-                drop=lambda p: p.begin_insert_ns == begin_ns
-                and p.end_insert_ns == end_ns,
-            )
-            for p in drop:
-                self.fs.rmtree(p.path)
-            return len(drop)
+        return self._retire(
+            view_set_name,
+            lambda p: p.begin_insert_ns == begin_ns and p.end_insert_ns == end_ns,
+        )
 
     def retire_partition_by_file(self, path: str) -> int:
         """retire_partition_by_file(file_path) (functions-reference.md:79;
@@ -906,14 +877,9 @@ class Lakehouse:
         # may differ in scheme/absoluteness for the same dir (ADVICE r10)
         norm = self.fs.canon(path)
         for view in self.list_view_sets():
-            with self._view_lock(view):
-                drop = self._commit_delta(
-                    view, drop=lambda p: self.fs.canon(p.path) == norm
-                )
-                if drop:
-                    for p in drop:  # the manifest's own spelling, not the caller's
-                        self.fs.rmtree(p.path)
-                    return len(drop)
+            n = self._retire(view, lambda p: self.fs.canon(p.path) == norm)
+            if n:
+                return n
         return 0
 
     def maintenance_tick(
@@ -993,56 +959,26 @@ class Lakehouse:
     def vacuum_orphans(self, view: str, min_age_seconds: float = 3600.0) -> int:
         """Remove data directories no manifest entry references — the
         write-once/commit-by-manifest design makes a crash between the
-        parquet write and the manifest swap leave an orphan dir that is
+        parquet write and the manifest commit leave an orphan dir that is
         INVISIBLE to readers (by construction) but holds storage until
         vacuumed, exactly Delta's VACUUM situation (the reference's
         Postgres catalog has the same orphan window between the object
-        PUT and the row insert; its retention daemon sweeps). Runs under
-        the view lock so it cannot race a writer in the lock domain;
-        ``min_age_seconds`` additionally protects an in-flight write from
-        a vacuum running outside it (object-store deployments without
-        flock). Returns directories removed."""
-        import time as _time
-
+        PUT and the row insert; its retention daemon sweeps). Retired
+        partitions are not its job: the commit that drops them deletes
+        their files (_commit_delta). Runs under the view lock so it
+        cannot race a writer in the lock domain; ``min_age_seconds``
+        additionally protects an in-flight write from a vacuum running
+        outside it (object-store deployments without flock) — see
+        WarehouseFS.sweep_orphans. Returns directories removed."""
         with self._view_lock(view):
-            # canon (not norm_url): legacy manifests spell paths
-            # differently (relative, plain-absolute) than the candidate
-            # URLs built from the root — a spelling mismatch here would
-            # delete COMMITTED data (ADVICE r10)
-            live = {self.fs.canon(p.path) for p in self.list_partitions(view)}
-            view_root = self.fs.url(view)
-            if not self.fs.exists(view_root):
-                return 0
-            removed = 0
-            now = _time.time()
-            for name in self.fs.listdir(view_root):
-                url = f"{view_root}/{name}"
-                if self.fs.canon(url) in live:
-                    continue
-                # newest mtime of the dir AND its contents; unknown age
-                # (object-store dir markers carry none) counts as a
-                # possible in-flight write, never as infinitely old
-                mtime = self.fs.newest_mtime(url)
-                if mtime is None or now - mtime < min_age_seconds:
-                    continue  # possibly a write in flight outside the lock
-                self.fs.rmtree(url)
-                removed += 1
-            return removed
+            live = [p.path for p in self.list_partitions(view)]
+            return self.fs.sweep_orphans(self.fs.url(view), live, min_age_seconds)
 
     def retire_older_than(self, view: str, cutoff_insert_ns: int) -> int:
         """Retention: drop partitions whose insert bucket ended before the
         cutoff (rust/analytics/src/delete.rs:13-60 'delete blocks/partitions
         older than N days')."""
-        with self._view_lock(view):
-            return self._retire_older_than(view, cutoff_insert_ns)
-
-    def _retire_older_than(self, view: str, cutoff_insert_ns: int) -> int:
-        drop = self._commit_delta(
-            view, drop=lambda p: p.end_insert_ns <= cutoff_insert_ns
-        )
-        for p in drop:
-            self.fs.rmtree(p.path)
-        return len(drop)
+        return self._retire(view, lambda p: p.end_insert_ns <= cutoff_insert_ns)
 
     def regenerate_partitions(
         self, spec: BatchViewSpec, begin_ns: int, end_ns: int, bucket_ns: int,
@@ -1059,8 +995,8 @@ class Lakehouse:
     # -- reads ---------------------------------------------------------------
 
     def _pruned_partitions(
-        self, view: str, schema_hash: str | None,
-        begin_event_ns: int | None, end_event_ns: int | None,
+        self, view: str, schema_hash: str | None = None,
+        begin_event_ns: int | None = None, end_event_ns: int | None = None,
     ) -> list[Partition]:
         """Catalog pruning WITHOUT materializing the full catalog: the
         schema-hash and event-time filters run vectorized on the
@@ -1069,47 +1005,28 @@ class Lakehouse:
         pure Python object construction (SCALE.md round-11 manifest
         table) while a bounded query's survivors are typically a few
         hundred rows — this keeps query planning over a giant view's
-        catalog in milliseconds. Semantics identical to filtering
-        list_partitions in Python (equivalence is test-pinned)."""
-        for _ in range(4):
-            cands = self._manifest_candidates(view)
-            if not cands:
-                return []
-            _, fname = min(cands, key=lambda c: (-c[0], c[1]))
-            try:
-                tbl = self.fs.read_parquet_table(
-                    self.fs.url("_partitions", fname)
-                )
-            except (FileNotFoundError, OSError):
-                continue  # lost a race with a committer's sweep: re-list
-            import pyarrow.compute as pc
+        catalog in milliseconds. With no filter it is list_partitions;
+        filtered, semantics are identical to filtering list_partitions in
+        Python (equivalence is test-pinned)."""
+        import pyarrow.compute as pc
 
-            mask = None
+        tbl, _ = self._manifest_head(view)
+        mask = None
 
-            def conj(m, new):
-                return new if m is None else pc.and_(m, new)
+        def conj(m, new):
+            return new if m is None else pc.and_(m, new)
 
-            if schema_hash is not None:
-                mask = conj(mask, pc.equal(tbl["schema_hash"], schema_hash))
-            if begin_event_ns is not None:
-                mask = conj(
-                    mask, pc.greater_equal(tbl["max_event_ns"], begin_event_ns)
-                )
-            if end_event_ns is not None:
-                mask = conj(mask, pc.less(tbl["min_event_ns"], end_event_ns))
-            if mask is not None:
-                tbl = tbl.filter(mask)
-            out = []
-            for row in tbl.to_pylist():
-                row.pop("view", None)
-                stats = row.pop("column_stats_json", None)
-                row["column_stats"] = json.loads(stats) if stats else {}
-                out.append(Partition(**row))
-            return out
-        raise ManifestConflict(
-            f"manifest for {view!r} kept disappearing mid-read "
-            "(sustained concurrent commits); retry the operation"
-        )
+        if schema_hash is not None:
+            mask = conj(mask, pc.equal(tbl["schema_hash"], schema_hash))
+        if begin_event_ns is not None:
+            mask = conj(
+                mask, pc.greater_equal(tbl["max_event_ns"], begin_event_ns)
+            )
+        if end_event_ns is not None:
+            mask = conj(mask, pc.less(tbl["min_event_ns"], end_event_ns))
+        if mask is not None:
+            tbl = tbl.filter(mask)
+        return _decode_partitions(tbl)
 
     def read(
         self, view: str, begin_event_ns: int | None = None, end_event_ns: int | None = None,
@@ -1124,50 +1041,32 @@ class Lakehouse:
         (partition fetch is schema-hash-keyed, materialized_view.rs:74-96:
         stale-schema partitions are invisible, not errors).
 
-        ``column_predicates``: {col: (op, value)} with op in
-        {'=', '>', '>=', '<', '<='} — Delta-style data skipping against
-        the manifest's per-partition column_stats [min, max]; partitions
-        whose range cannot satisfy the predicate are never opened, and
-        the predicate is re-applied as a row filter above the scan (same
-        inexact contract as the time filter). Partitions without recorded
-        stats for the column are kept (safe default)."""
+        ``column_predicates``: {col: (op, value)} with op one of
+        _COLUMN_OPS' {'=', '>', '>=', '<', '<='} (any other raises
+        InvalidArgument before any pruning) — Delta-style data skipping
+        against the manifest's per-partition column_stats [min, max];
+        partitions whose range cannot satisfy the predicate are never
+        opened, and the predicate is re-applied as a row filter above the
+        scan (same inexact contract as the time filter). Partitions
+        without recorded stats for the column are kept (safe default)."""
+        preds = column_predicates or {}
+        for col, (op, _val) in preds.items():
+            if op not in _COLUMN_OPS:
+                raise InvalidArgument(
+                    f"unsupported operator {op!r} in the predicate on {col!r} "
+                    f"(supported: {', '.join(_COLUMN_OPS)})"
+                )
         parts = self._pruned_partitions(
             view, schema_hash, begin_event_ns, end_event_ns
         )
-        for col, (op, val) in (column_predicates or {}).items():
-            def can_match(p, col=col, op=op, val=val):
-                st = (p.column_stats or {}).get(col)
-                if st is None:
-                    return True
-                mn, mx = st
-                # non-finite endpoints (NaN/Inf from a pre-guard manifest)
-                # behave like missing stats: never prune
-                if any(
-                    isinstance(v, float) and (math.isnan(v) or math.isinf(v))
-                    for v in (mn, mx)
-                ):
-                    return True
-                # dispatch on op BEFORE comparing, and treat un-comparable
-                # stats (e.g. int predicate on a string column) like
-                # missing stats: never prune on bad metadata
-                try:
-                    if op == "=":
-                        return mn <= val <= mx
-                    if op == ">":
-                        return mx > val
-                    if op == ">=":
-                        return mx >= val
-                    if op == "<":
-                        return mn < val
-                    return mn <= val  # "<="
-                except TypeError:
-                    return True
-            parts = [p for p in parts if can_match(p)]
+        for col, (op, val) in preds.items():
+            test = _COLUMN_OPS[op][1]
+            parts = [p for p in parts if _stats_can_match(p, col, test, val)]
         if not parts:
             # typed empty result: the schema of one live partition (one
             # footer read), every row filtered out — column references
             # still resolve; schema-less only when the view has none
-            live = self._pruned_partitions(view, schema_hash, None, None)
+            live = self._pruned_partitions(view, schema_hash)
             if not live:
                 return self.spark.range(0).select()
             return self.spark.read.parquet(live[0].path).where(F.lit(False))
@@ -1177,13 +1076,6 @@ class Lakehouse:
                 df = df.where(F.col(time_column) >= begin_event_ns)
             if end_event_ns is not None:
                 df = df.where(F.col(time_column) < end_event_ns)
-        _OPS = {
-            "=": lambda c, v: c == v,
-            ">": lambda c, v: c > v,
-            ">=": lambda c, v: c >= v,
-            "<": lambda c, v: c < v,
-            "<=": lambda c, v: c <= v,
-        }
-        for col, (op, val) in (column_predicates or {}).items():
-            df = df.where(_OPS[op](F.col(col), F.lit(val)))
+        for col, (op, val) in preds.items():
+            df = df.where(_COLUMN_OPS[op][0](F.col(col), F.lit(val)))
         return df

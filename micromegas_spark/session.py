@@ -94,6 +94,21 @@ def clone_session(spark: SparkSession) -> SparkSession:
     return SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
 
 
+def sync_conf(spark: SparkSession, parent: SparkSession) -> None:
+    """Make ``spark``'s SQL conf ``parent``'s as it is now — what a
+    reused clone (a pooled planning session, a view's merge session)
+    runs on every time it is checked out, so a conf set on the parent
+    later still reaches it and a SET run on the clone does not outlive
+    the use."""
+    mine = spark._jsparkSession.sessionState().conf().settings()
+    theirs = parent._jsparkSession.sessionState().conf().settings()
+    if not mine.equals(theirs):
+        # overwrite, then drop extras: plans of earlier uses may still be
+        # running on this session and read its conf
+        mine.putAll(theirs)
+        mine.keySet().retainAll(theirs.keySet())
+
+
 def _shuffle_partitions(cpus: str) -> str:
     """cpus×8 default; SPARK_GRAFT_SHUFFLE_PARTITIONS is the cluster-profile
     override (see the builder comment for the measured single-node caveat)."""

@@ -27,7 +27,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from micromegas_spark.materialize.batch import Lakehouse, Partition  # noqa: E402
+from micromegas_spark.materialize.batch import Lakehouse, Partition, _head  # noqa: E402
 
 
 def measure(n: int) -> dict:
@@ -79,7 +79,7 @@ def measure(n: int) -> dict:
         t_pruned = time.time() - t0
         assert len(pruned) == 200
 
-        fname = lake._winner_manifest_files()["v"]
+        fname = _head(lake._manifest_candidates("v"))[1]
         size = os.path.getsize(
             lake.fs.fs_path(lake.fs.url("_partitions", fname))
         )

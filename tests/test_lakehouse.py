@@ -336,6 +336,37 @@ def test_column_stats_data_skipping(spark, tmp_path):
     assert {r["who"] for r in one.collect()} == {"u2"}
 
 
+def test_read_rejects_an_unsupported_column_operator(spark, tmp_path):
+    """One operator table drives both the stats test and the row filter;
+    an operator outside it is an InvalidArgument raised before pruning —
+    not 0 rows when no partition survives the stats test, and not a
+    bare KeyError from the row filter when one does."""
+    from micromegas_spark.flightsql.errors import InvalidArgument
+    from micromegas_spark.materialize import BatchViewSpec
+
+    spark.createDataFrame(
+        [(int(h * HOUR + 1), h) for h in range(2)], "time_ns bigint, x bigint"
+    ).createOrReplaceTempView("evop")
+    spec = BatchViewSpec(
+        name="op_view",
+        count_query="SELECT COUNT(*) FROM evop WHERE time_ns >= {begin} AND time_ns < {end}",
+        extract_query="SELECT time_ns, x FROM evop WHERE time_ns >= {begin} AND time_ns < {end}",
+        merge_query="SELECT * FROM source",
+        time_column="time_ns",
+    )
+    lake = Lakehouse(spark, str(tmp_path / "wh_op"))
+    lake.materialize_range(spec, 0, 2 * HOUR, HOUR)
+    assert all(p.column_stats["x"][0] >= 0 for p in lake.list_partitions("op_view"))
+    # every partition's minimum is >= 0: "!=" fell through to the "<="
+    # stats test and pruned them all
+    with pytest.raises(InvalidArgument, match="'!='"):
+        lake.read("op_view", column_predicates={"x": ("!=", -1)})
+    # a surviving partition: the row filter looked the operator up
+    with pytest.raises(InvalidArgument, match="'!='"):
+        lake.read("op_view", column_predicates={"x": ("!=", 5)})
+    assert lake.read("op_view", column_predicates={"x": (">=", 1)}).count() == 1
+
+
 def test_column_stats_nan_never_prunes_and_dates_excluded(spark, tmp_path):
     """A partition whose double column contains NaN records no stats for
     it (NaN bounds would prune everything); date columns are excluded
@@ -383,11 +414,12 @@ def test_engine_query_log_self_observability(spark, telemetry):
 
 def test_manifest_is_a_queryable_parquet_table(spark, tmp_path):
     """Round-3: the partition catalog is parquet, one file per view with a
-    shared schema — the whole catalog is queryable as a table
-    (partitions_table)."""
+    shared schema — the whole catalog is queryable as a table by reading
+    the views' head manifest files with spark.read.parquet."""
     import os
 
     from micromegas_spark.materialize import BatchViewSpec, Lakehouse
+    from micromegas_spark.materialize.batch import _head
 
     HOUR = 3600 * 10**9
     rows = [(int(h * HOUR + 1), h) for h in range(3)]
@@ -404,10 +436,10 @@ def test_manifest_is_a_queryable_parquet_table(spark, tmp_path):
     # catalog is a real parquet file, queryable without the Lakehouse
     # class (r11: at the generation chain's winning file — the CAS
     # commit names manifests <view>.g<gen>.parquet)
-    mfile = lake._winner_manifest_files()["pm_view"]
+    mfile = _head(lake._manifest_candidates("pm_view"))[1]
     mpath = lake.fs.fs_path(lake.fs.url("_partitions", mfile))
     assert mpath.endswith(".parquet") and os.path.exists(mpath)
-    tbl = lake.partitions_table()
+    tbl = spark.read.parquet(lake.fs.url("_partitions", mfile))
     got = tbl.where("view = 'pm_view'").select("begin_insert_ns").count()
     assert got == 3
     # column stats survive the JSON column round-trip

@@ -271,6 +271,42 @@ def test_merges_of_a_view_reuse_one_session(spark, tmp_path, monkeypatch):
     assert not spark.catalog.tableExists("source")
 
 
+def test_merge_session_follows_the_parent_conf(spark, tmp_path):
+    """A view's merge session is reused across merges, and each merge
+    runs it on the conf the Lakehouse's session has then: a conf set
+    between two merges reaches the second."""
+    import micromegas_spark.materialize.batch as batch
+    from micromegas_spark.materialize import BatchViewSpec, Lakehouse
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.range(0, 4 * HOUR, HOUR // 4).selectExpr("id AS t").createOrReplaceTempView(
+        "merge_conf_src"
+    )
+    window = "FROM merge_conf_src WHERE t >= {begin} AND t < {end}"
+    spec = BatchViewSpec(
+        name="merge_conf",
+        count_query=f"SELECT COUNT(*) {window}",
+        extract_query=f"SELECT t {window}",
+        merge_query="SELECT * FROM source",
+        time_column="t",
+    )
+    lake = Lakehouse(spark, str(tmp_path / "wh"))
+    try:
+        lake.materialize_range(spec, 0, 2 * HOUR, HOUR)
+        assert lake.merge_partitions(spec, 0, 2 * HOUR) == "merged"
+        merge_session = batch._MERGE_SESSIONS[(lake.fs.root_url, "merge_conf")]
+        assert merge_session.conf.get(key) == prev
+        spark.conf.set(key, "3")
+        lake.materialize_range(spec, 2 * HOUR, 4 * HOUR, HOUR)
+        assert lake.merge_partitions(spec, 2 * HOUR, 4 * HOUR) == "merged"
+        assert batch._MERGE_SESSIONS[(lake.fs.root_url, "merge_conf")] is merge_session
+        assert merge_session.conf.get(key) == "3"
+    finally:
+        spark.conf.set(key, prev)
+        spark.catalog.dropTempView("merge_conf_src")
+
+
 def test_concurrent_planning_stress(spark):
     """More planning threads than cores, with a short switch interval:
     register_table racing the view snapshot and query_log reads racing

@@ -65,7 +65,7 @@ def test_full_lifecycle_on_file_uri_warehouse(spark, tmp_path):
     n_rows = lake.read("log_stats").count()
     assert n_rows > 0
     # catalog-as-table works over the URI too
-    assert lake.partitions_table().count() == len(parts)
+    assert lake.partitions_df().count() == len(parts)
     # second tick: freshness observed through the URI manifest
     stats2 = lake.materialize_range(LOG_STATS, lo, hi, HOUR)
     assert stats2.get("up_to_date", 0) == (hi - lo) // HOUR
@@ -318,7 +318,8 @@ def test_cas_lost_generation_reapplies_delta(tmp_path):
 
     wh = f"file://{tmp_path}/wh_cas_unit"
     a, b = Lakehouse(None, wh), Lakehouse(None, wh)
-    assert a._manifest_state("v") == ([], 0)
+    tbl, gen = a._manifest_head("v")
+    assert (tbl.num_rows, gen) == (0, 0)
     d1 = b.fs.unique_dir_url("v", "0_10")
     b.fs.mkdirs(d1)
     d2 = a.fs.unique_dir_url("v", "10_20")
@@ -490,16 +491,17 @@ def test_put_commit_branch_without_rename(tmp_path):
 
 def test_winner_manifest_files_selects_generation_head(tmp_path):
     """Readers resolve each view's catalog to the generation chain's head
-    (highest gen, then smallest name) — partitions_table and
-    list_partitions agree on the same file."""
-    from micromegas_spark.materialize.batch import Partition
+    (highest gen, then smallest name) — _head over the one scan's
+    candidates, list_partitions and list_view_sets agree on the same
+    file."""
+    from micromegas_spark.materialize.batch import Partition, _head
 
     lake = Lakehouse(None, f"file://{tmp_path}/wh_win")
     d = lake.fs.unique_dir_url("v", "0_10")
     lake.fs.mkdirs(d)
     lake._save_manifest("v", [])
     lake._save_manifest("v", [Partition(0, 10, 1, 0, 10, d)])
-    assert lake._winner_manifest_files()["v"].startswith("v.g000000000002")
+    assert _head(lake._manifest_candidates("v"))[1].startswith("v.g000000000002")
     assert len(lake.list_partitions("v")) == 1
     assert lake.list_view_sets() == ["v"]
 
