@@ -11,10 +11,10 @@ TableScanRewrite analyzer rule (table_scan_rewrite.rs:59-72, SURVEY §4:
 option (a), bake the range into the view DataFrames).
 
 ``Engine.view_instance(view_set, instance, begin, end)`` is the JIT path
-(SURVEY §3.2): a manifest-checked lazy materialization keyed by
-(view_set, instance, insert-bucket) whose staleness hash is the source
-event count — stale or missing buckets are rebuilt by the view's builder
-(e.g. the thread-span call-tree job) before the partition-pruned read.
+(SURVEY §3.2): a lazy materialization into the Lakehouse catalog view of
+(view_set, instance), whose staleness hash is the source event count (or
+the block set) — stale or missing partitions are rebuilt by the view's
+builder (e.g. the thread-span call-tree job) before the read.
 """
 
 from __future__ import annotations
@@ -36,6 +36,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from micromegas_spark.functions import register_all
+from micromegas_spark.materialize.batch import (
+    Lakehouse,
+    Partition,
+    _identity,
+    _scan,
+    instance_view,
+    schema_fingerprint,
+)
 from micromegas_spark.session import clone_session, configure, sync_conf
 
 # builder(begin_ns|None, end_ns|None) -> DataFrame
@@ -234,6 +242,25 @@ class JitViewSet:
     ensure_begin_non_decreasing: bool = False
 
 
+@dataclass
+class _InstanceSpec:
+    """A bucket-mode JIT instance in the shape
+    Lakehouse.materialize_bucket takes: its catalog view, its time
+    column, and the view set's source_count/build bound to the
+    instance."""
+
+    name: str
+    time_column: str
+    vs: JitViewSet
+    instance: str
+
+    def source_hash(self, spark, begin_ns: int, end_ns: int) -> int:
+        return self.vs.source_count(self.instance, begin_ns, end_ns)
+
+    def extract(self, spark, begin_ns: int, end_ns: int) -> DataFrame:
+        return self.vs.build(self.instance, begin_ns, end_ns)
+
+
 def group_blocks_into_partitions(
     blocks: list[dict], max_nb_objects: int
 ) -> list[list[dict]]:
@@ -335,8 +362,8 @@ class Engine:
         # engines raise the same way from the partition-admin surface.
         self.admin = admin
         # URI-addressed warehouse (fslayer.py): plain path, file://, or an
-        # object-store scheme — the JIT cache and the Lakehouse share the
-        # manifest-is-the-commit discipline, so no code path relies on
+        # object-store scheme — JIT instances and batch views commit
+        # through the one Lakehouse catalog, so no code path relies on
         # rename existing on the store
         from micromegas_spark.fslayer import WarehouseFS
 
@@ -510,7 +537,7 @@ class Engine:
         documented UX; view_instance_table_function.rs:49-70 evaluates the
         two args at plan time from literals exactly like this). Each
         distinct literal call materializes through the existing Python
-        view_instance() (manifest-cached parquet, block-aware when the
+        view_instance() (catalog-cached parquet, block-aware when the
         view set declares blocks), is bound as a deterministic temp view
         of the held planning session, and the call text is
         substituted with the view name — the scan
@@ -531,8 +558,6 @@ class Engine:
         sanitized + a short stable hash so distinct keys can never alias
         one slot — and repeat queries on a session reuse one slot (a later
         rebinding cannot retarget an already-analyzed plan)."""
-        import hashlib as _hashlib
-
         if "view_instance" not in sql.lower():
             return sql
         self._reject_escaped_string_literals("view_instance()")
@@ -568,17 +593,12 @@ class Engine:
                     begin_ns if begin_ns is not None else 0,
                     end_ns if end_ns is not None else 2**62,
                 )
-                # sanitized-for-readability + stable hash-for-uniqueness:
-                # the [^w]→_ sanitizer alone maps distinct keys (e.g.
-                # ('a','b-c') vs ('a','b_c')) to one name, which would let
-                # a later createOrReplaceTempView retarget the earlier
+                # the catalog view's name, sanitized + hashed: the
+                # sanitizer alone maps distinct keys (e.g. ('a','b-c') vs
+                # ('a','b_c')) to one name, which would let a later
+                # createOrReplaceTempView retarget the earlier
                 # substitution in the same statement
-                tag = _hashlib.sha1(
-                    ("\x00".join(key)).encode("utf-8")
-                ).hexdigest()[:8]
-                name = "_vi_" + re.sub(
-                    r"[^A-Za-z0-9_]", "_", f"{key[0]}__{key[1]}"
-                ) + "_" + tag
+                name = "_vi_" + instance_view(*key)
                 with self.planning_session() as spark:
                     self._bind(spark, name, df)
                 made[key] = name
@@ -1108,12 +1128,10 @@ class Engine:
     @property
     def lakehouse(self):
         """Lazily-built partition catalog over this engine's warehouse —
-        the admin surface (retire/materialize/regenerate) delegates here
-        (the reference's admin UDFs mutate the same catalog,
-        query.rs:150-175)."""
+        JIT view instances materialize into it and the admin surface
+        (retire/materialize/regenerate) delegates here (the reference's
+        admin UDFs mutate the same catalog, query.rs:150-175)."""
         if not hasattr(self, "_lakehouse"):
-            from micromegas_spark.materialize import Lakehouse
-
             self._lakehouse = Lakehouse(self.spark, self.warehouse)
         return self._lakehouse
 
@@ -1124,8 +1142,6 @@ class Engine:
         unbounded — what every materialize/regenerate op runs on, so a
         tick reads the views as they are now, whatever statement (if any)
         ran before it."""
-        from micromegas_spark.materialize import Lakehouse
-
         with self.planning_session():
             spark = self.prepare_views(f"{spec.count_query}\n{spec.extract_query}")
             yield Lakehouse(spark, self.warehouse)
@@ -1155,247 +1171,149 @@ class Engine:
     def register_jit_view_set(self, vs: JitViewSet) -> None:
         self._jit[vs.name] = vs
 
-    def _jit_manifest(self, view_set: str, instance: str) -> str:
-        d = self.fs.url("_jit", view_set)
-        self.fs.mkdirs(d)
-        return f"{d}/{instance}.json"
-
-    def _jit_manifest_load(self, murl: str) -> dict:
-        if self.fs.exists(murl):
-            return json.loads(self.fs.read_bytes(murl))
-        return {}
-
-    def _jit_manifest_save(self, murl: str, manifest: dict) -> None:
-        # the JIT cache's commit point — same contract as the Lakehouse
-        # manifest (fslayer.py): atomic swap on POSIX/HDFS, single PUT on
-        # object stores; partition data dirs are write-once unique paths
-        self.fs.write_bytes_atomic(murl, json.dumps(manifest).encode())
-
-    def _jit_manifest_save_merged(
-        self, murl: str, updates: dict, deletes=(), stale=()
-    ) -> None:
-        """The JIT cache's commit: re-read the CURRENT manifest at save
-        time and apply only this run's ``updates`` (key → entry) and
-        ``deletes`` (keys) on top, so two processes building DIFFERENT
-        buckets of one instance keep each other's entries; then delete
-        the ``stale`` directories — the entries THIS run loaded and
-        replaced or retired — unless the saved manifest still names
-        them. A rival's entry found under the same key at save time is
-        only unlinked, never deleted: its builder may be reading it, and
-        vacuum_jit_orphans sweeps it once old. This and
-        Lakehouse._commit_delta are the only places a retired
-        partition's files are deleted.
-
-        A plain key-level merge, not the Lakehouse's generation CAS: JIT
-        entries self-heal through the per-bucket source-hash (or
-        block-set) check, so the residual simultaneous-write window costs
-        at most a rival's newest entries — rebuilt by its next read."""
-        current = self._jit_manifest_load(murl)
-        current.update(updates)
-        for k in deletes:
-            current.pop(k, None)
-        self._jit_manifest_save(murl, current)
-        live = {e["path"] for e in current.values()}
-        for d in stale:
-            if d not in live:
-                self.fs.rmtree(d)
-
-    def vacuum_jit_orphans(
-        self, view_set: str, instance: str, min_age_seconds: float = 3600.0
-    ) -> int:
-        """JIT twin of Lakehouse.vacuum_orphans: sweep cached-partition
-        dirs no manifest entry references (a crash between the parquet
-        write and the manifest save leaves an invisible orphan under
-        ``<warehouse>/<view_set>/instance=<i>/``). The grace window
-        protects an in-flight build on deployments without flock; the
-        manifests (bucket-mode and block-mode) are the source of truth,
-        so committed dirs are never touched (WarehouseFS.sweep_orphans).
-        Returns dirs removed."""
-        mpath = self._jit_manifest(view_set, instance)
-        live = [
-            ent["path"]
-            for suffix in ("", ".blocks")
-            for ent in self._jit_manifest_load(mpath + suffix).values()
-        ]
-        root = self.fs.url(view_set, f"instance={instance}")
-        return self.fs.sweep_orphans(root, live, min_age_seconds)
-
     def view_instance(
         self, view_set: str, instance: str, begin_ns: int, end_ns: int,
         bucket_ns: int = 3_600 * 10**9,
     ) -> DataFrame:
         """JIT materialization (materialized_view.rs:69-72, log_view.rs:
-        148-210, jit_partitions.rs:59-95): bucket the range by insert time,
-        rebuild stale/missing buckets (source-count hash), then read the
-        union of cached parquet partitions filtered to the range.
-
-        Block-aware view sets (``JitViewSet.list_blocks`` set) instead cut
-        partitions from the event-time-ordered block list with insert-safe
-        cuts (reference #1429) — see _view_instance_blocks."""
+        148-210, jit_partitions.rs:59-95). Each (view_set, instance) is
+        one view of the Lakehouse catalog (instance_view), so its
+        partitions commit, list, retire and vacuum like any view's.
+        Bucket mode runs Lakehouse.materialize_range over the range's
+        aligned insert-time buckets: a bucket whose source count differs
+        from its partition's source hash is rebuilt by the view set's
+        builder. Block-aware view sets (``JitViewSet.list_blocks`` set)
+        instead cut partitions from the event-time-ordered block list
+        with insert-safe cuts (reference #1429) — see
+        _view_instance_blocks. Either way the read is the partitions the
+        call resolved, filtered to the range."""
         if view_set not in self._jit:
             raise InvalidArgument(
                 f"unknown JIT view set {view_set!r} "
                 f"(known: {sorted(self._jit)})"
             )
         vs = self._jit[view_set]
+        view = instance_view(view_set, instance)
         if vs.list_blocks is not None:
-            return self._view_instance_blocks(vs, instance, begin_ns, end_ns)
-        mpath = self._jit_manifest(view_set, instance)
-        manifest: dict[str, dict] = self._jit_manifest_load(mpath)
-
-        paths = []
-        b = begin_ns - begin_ns % bucket_ns
-        updates: dict[str, dict] = {}
-        stale: list[str] = []
-        while b < end_ns:
-            key = str(b)
-            cur = vs.source_count(instance, b, b + bucket_ns)
-            ent = manifest.get(key)
-            if cur > 0 and (ent is None or ent["hash"] != cur):
-                df = vs.build(instance, b, b + bucket_ns)
-                # write-once unique dir; the manifest save below commits
-                pdir = self.fs.unique_dir_url(
-                    view_set, f"instance={instance}", f"bucket={b}"
-                )
-                df.write.mode("overwrite").parquet(pdir)
-                if ent is not None:
-                    stale.append(ent["path"])
-                # schema in the manifest: warm reads skip per-call parquet
-                # footer/schema inference (a measured ~0.1 s driver cost
-                # per view_instance on the JIT trio)
-                manifest[key] = updates[key] = {
-                    "hash": cur, "path": pdir, "schema": df.schema.json()
-                }
-            if cur > 0:
-                paths.append(manifest[key]["path"])
-            b += bucket_ns
-        if updates:
-            # merge-commit: only THIS run's buckets, on the freshest file;
-            # it deletes the stale buckets' dirs this run replaced
-            self._jit_manifest_save_merged(mpath, updates, stale=stale)
-        if not paths:
+            parts = self._view_instance_blocks(vs, instance, view, begin_ns, end_ns)
+        else:
+            lake = self.lakehouse
+            lake.materialize_range(
+                _InstanceSpec(view, vs.time_column, vs, instance),
+                begin_ns, end_ns, bucket_ns,
+            )
+            lo = begin_ns - begin_ns % bucket_ns
+            parts = [
+                p
+                for p in lake.list_partitions(view)
+                if p.begin_insert_ns < end_ns and p.end_insert_ns > lo
+            ]
+        if not parts:
             return self.spark.range(0).select()
-        used = [e for e in manifest.values() if e.get("path") in set(paths)]
-        df = self._read_manifest_parquet(paths, used)
-        return df.where(
+        return _scan(self.spark, parts).where(
             (F.col(vs.time_column) >= begin_ns) & (F.col(vs.time_column) < end_ns)
         )
 
-    def _read_manifest_parquet(self, paths: list[str], entries: list[dict]):
-        """Read cached JIT partitions, using the manifest-recorded schema
-        when every entry agrees — skips the per-call footer/schema
-        inference a plain spark.read.parquet pays (driver-side listing +
-        footer reads, measured ~0.1 s per warm view_instance). Entries
-        written before the schema field (or disagreeing) fall back to
-        inference."""
-        from pyspark.sql.types import StructType
-
-        sjs = {e.get("schema") for e in entries}
-        if len(sjs) == 1 and None not in sjs:
-            schema = StructType.fromJson(json.loads(sjs.pop()))
-            return self.spark.read.schema(schema).parquet(*paths)
-        return self.spark.read.parquet(*paths)
-
     def _view_instance_blocks(
-        self, vs: JitViewSet, instance: str, begin_ns: int, end_ns: int
-    ) -> DataFrame:
+        self, vs: JitViewSet, instance: str, view: str, begin_ns: int, end_ns: int
+    ) -> list[Partition]:
         """Event-time JIT grouping (reference #1429, jit_partitions.rs
-        group_blocks_into_partitions + RetireMatch::Overlap):
+        group_blocks_into_partitions + RetireMatch::Overlap); returns the
+        partitions that cover the range:
 
         1. list the instance's blocks overlapping [begin, end) by EVENT
            time, cut partitions via group_blocks_into_partitions (event-
            time order, insert-safe cuts);
-        2. reuse a cached partition iff its block set is identical (key =
-           hash over sorted (block_id, nb_objects) — staleness by content,
-           matching the reference's is_jit_partition_up_to_date);
-        3. a moved cut point between runs can leave a stale cached
-           partition that merely OVERLAPS (not contains) a new one, so
-           retirement matches by inclusive insert-range intersection —
+        2. reuse a catalog partition iff its block set is identical (its
+           source hash is a hash over sorted (block_id, nb_objects) —
+           staleness by content, matching the reference's
+           is_jit_partition_up_to_date);
+        3. a moved cut point between runs can leave a stale partition
+           that merely OVERLAPS (not contains) a new one, so retirement
+           matches by inclusive insert-range intersection —
            RetireMatch::Overlap with this run's partitions protected by
-           identity (same_run_ranges), not range shape.
-        """
+           identity, not range shape. A partition's insert range is
+           [min insert, max insert + 1), so the half-open overlap test
+           is the reference's inclusive one (tstzrange(..., '[]')).
+
+        Listing, builds and the one retire+insert commit run under the
+        view's lock, so concurrent callers build each group once."""
         import hashlib
 
-        blocks = list(vs.list_blocks(instance, begin_ns, end_ns))
-        mpath = self._jit_manifest(vs.name, instance) + ".blocks"
-        manifest: dict[str, dict] = self._jit_manifest_load(mpath)
-
-        groups = group_blocks_into_partitions(blocks, vs.max_nb_objects)
-        paths: list[str] = []
-        run_keys: set[str] = set()
-        updates: dict[str, dict] = {}
-        for grp in groups:
-            ident = sorted((str(b["block_id"]), int(b["nb_objects"])) for b in grp)
-            key = hashlib.sha1(json.dumps(ident).encode()).hexdigest()[:16]
-            run_keys.add(key)
-            ent = manifest.get(key)
-            if ent is None:
-                df = vs.build_blocks(instance, [b["block_id"] for b in grp])
-                # write-once unique dir; the manifest save below commits
-                pdir = self.fs.unique_dir_url(
-                    vs.name, f"instance={instance}", f"part={key}"
+        lake = self.lakehouse
+        groups = group_blocks_into_partitions(
+            list(vs.list_blocks(instance, begin_ns, end_ns)), vs.max_nb_objects
+        )
+        with lake._view_lock(view):
+            listed = lake.list_partitions(view)
+            cached = {p.source_hash: p for p in listed}
+            resolved: list[Partition] = []
+            new: list[Partition] = []
+            for grp in groups:
+                ident = sorted((str(b["block_id"]), int(b["nb_objects"])) for b in grp)
+                digest = hashlib.sha1(json.dumps(ident).encode()).digest()
+                key = int.from_bytes(digest[:8], "big", signed=True)
+                part = cached.get(key)
+                if part is None:
+                    part = self._build_block_group(vs, instance, view, grp, key)
+                    new.append(part)
+                resolved.append(part)
+            mine = {_identity(p) for p in resolved}
+            stale = {
+                _identity(p)
+                for p in listed
+                if _identity(p) not in mine
+                and any(
+                    p.begin_insert_ns < r.end_insert_ns
+                    and r.begin_insert_ns < p.end_insert_ns
+                    for r in resolved
                 )
-                if vs.ensure_begin_non_decreasing:
-                    # bounded by max_nb_objects per partition, so the
-                    # validation pass is cheap by design; persist so the
-                    # builder lineage isn't re-executed by the write.
-                    # unpersist in finally: a failed order check or write
-                    # must not leak the cached partition for the session's
-                    # lifetime. The check certifies within-partition order
-                    # only — the builder contract (JitViewSet docstring)
-                    # is one begin-sorted output partition per block
-                    # group, matching the reference where each written
-                    # batch is independently validated (#1429); readers
-                    # re-sort across partitions when they need a total
-                    # order.
-                    from pyspark import StorageLevel
+            }
+            if new or stale:
+                lake._commit_delta(view, drop=lambda p: _identity(p) in stale, add=new)
+        return resolved
 
-                    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-                    try:
-                        ensure_begin_non_decreasing(
-                            df, vs.time_column, f"{vs.name}/{instance}/{key}"
-                        )
-                        df.write.mode("overwrite").parquet(pdir)
-                    finally:
-                        df.unpersist(blocking=False)
-                else:
-                    df.write.mode("overwrite").parquet(pdir)
-                manifest[key] = updates[key] = {
-                    "path": pdir,
-                    "begin_ns": min(b["begin_ns"] for b in grp),
-                    "end_ns": max(b["end_ns"] for b in grp),
-                    "insert_min": min(b["insert_ns"] for b in grp),
-                    "insert_max": max(b["insert_ns"] for b in grp),
-                    "schema": df.schema.json(),
-                }
-            paths.append(manifest[key]["path"])
-        # RetireMatch::Overlap — inclusive-bounds insert-range intersection
-        # (tstzrange(..., '[]') && ... in the reference: half-open ranges
-        # would miss degenerate and touching shapes); partitions this run
-        # wrote or reused are protected by identity, not range shape.
-        deletes: list[str] = []
-        stale: list[str] = []
-        for key in [k for k in manifest if k not in run_keys]:
-            ent = manifest[key]
-            overlapped = any(
-                ent["insert_min"] <= manifest[k]["insert_max"]
-                and manifest[k]["insert_min"] <= ent["insert_max"]
-                for k in run_keys
-            )
-            if overlapped:
-                stale.append(ent["path"])
-                del manifest[key]
-                deletes.append(key)
-        if updates or deletes:
-            # merge-commit: this run's new partitions + its retirements,
-            # applied on the freshest file (a rival's concurrent entries
-            # survive; any overlap is retired by the next read's scan);
-            # it deletes the dirs of the partitions this run retired
-            self._jit_manifest_save_merged(mpath, updates, deletes, stale)
-        if not paths:
-            return self.spark.range(0).select()
-        used = [e for e in manifest.values() if e.get("path") in set(paths)]
-        df = self._read_manifest_parquet(paths, used)
-        return df.where(
-            (F.col(vs.time_column) >= begin_ns) & (F.col(vs.time_column) < end_ns)
+    def _build_block_group(
+        self, vs: JitViewSet, instance: str, view: str, grp: list[dict], key: int
+    ) -> Partition:
+        """Build one block group and write it once to a unique directory
+        of the instance's view; the caller's commit publishes it."""
+        df = vs.build_blocks(instance, [b["block_id"] for b in grp])
+        begin_insert = min(b["insert_ns"] for b in grp)
+        end_insert = max(b["insert_ns"] for b in grp) + 1
+        pdir = self.lakehouse.fs.unique_dir_url(view, f"{begin_insert}_{end_insert}")
+        if vs.ensure_begin_non_decreasing:
+            # bounded by max_nb_objects per partition, so the
+            # validation pass is cheap by design; persist so the
+            # builder lineage isn't re-executed by the write.
+            # unpersist in finally: a failed order check or write
+            # must not leak the cached partition for the session's
+            # lifetime. The check certifies within-partition order
+            # only — the builder contract (JitViewSet docstring)
+            # is one begin-sorted output partition per block
+            # group, matching the reference where each written
+            # batch is independently validated (#1429); readers
+            # re-sort across partitions when they need a total
+            # order.
+            from pyspark import StorageLevel
+
+            df = df.persist(StorageLevel.MEMORY_AND_DISK)
+            try:
+                ensure_begin_non_decreasing(
+                    df, vs.time_column, f"{vs.name}/{instance}/{key}"
+                )
+                df.write.mode("overwrite").parquet(pdir)
+            finally:
+                df.unpersist(blocking=False)
+        else:
+            df.write.mode("overwrite").parquet(pdir)
+        return Partition(
+            begin_insert_ns=begin_insert,
+            end_insert_ns=end_insert,
+            source_hash=key,
+            min_event_ns=min(b["begin_ns"] for b in grp),
+            max_event_ns=max(b["end_ns"] for b in grp),
+            path=pdir,
+            schema_hash=schema_fingerprint(df),
+            schema_json=df.schema.json(),
         )

@@ -184,10 +184,10 @@ class WarehouseFS:
         return best
 
     def sweep_orphans(self, root_url: str, live, min_age_seconds: float) -> int:
-        """The one orphan sweep (Lakehouse.vacuum_orphans,
-        Engine.vacuum_jit_orphans): delete each entry directly under
-        ``root_url`` that no path in ``live`` names and whose newest mtime
-        is at least ``min_age_seconds`` old. Returns entries removed.
+        """The one orphan sweep (Lakehouse.vacuum_orphans): delete each
+        entry directly under ``root_url`` that no path in ``live`` names
+        and whose newest mtime is at least ``min_age_seconds`` old.
+        Returns entries removed.
 
         Membership is by canon, not norm_url: manifests written by older
         code spell a committed dir relative, plain-absolute or file://,
@@ -225,22 +225,12 @@ class WarehouseFS:
             with self.fs.open_output_stream(final) as f:
                 f.write(data)
 
-    def read_parquet_table(self, url: str):
+    def read_parquet_table(self, url: str, read_dictionary=None):
         import pyarrow.parquet as pq
 
-        return pq.read_table(self.fs_path(url), filesystem=self.fs)
-
-    def write_parquet_table_atomic(self, table, url: str) -> None:
-        """Atomic single-file parquet write — the manifest commit itself."""
-        import pyarrow.parquet as pq
-
-        final = self.fs_path(url)
-        if self.rename_safe:
-            tmp = final + f".tmp{uuid.uuid4().hex[:8]}"
-            pq.write_table(table, tmp, filesystem=self.fs)
-            self.fs.move(tmp, final)
-        else:
-            pq.write_table(table, final, filesystem=self.fs)
+        return pq.read_table(
+            self.fs_path(url), filesystem=self.fs, read_dictionary=read_dictionary
+        )
 
     def claim_parquet_table(self, table, url: str) -> bool:
         """Put-if-absent of a single parquet file — the CAS primitive of

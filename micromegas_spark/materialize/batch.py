@@ -39,13 +39,20 @@ _commit_delta) — the multi-writer arbitration the reference gets from
 Postgres transactions, without a database. The commit also owns
 deletion: _commit_delta deletes the directories of the partitions it
 dropped once they are unreachable, so every mutation (materialize,
-merge, retire) retires files in that one place. Reads are
-``spark.read.parquet(selected partition dirs)`` so Catalyst still sees
-plain parquet with full pushdown.
+merge, retire, a JIT instance's rebuild) retires files in that one place.
+
+Engine's per-stream JIT view instances are ordinary views of this
+catalog, one per (view_set, instance), named by instance_view — the
+reference's lakehouse_partitions likewise holds global and per-instance
+partitions in one table. Every partition records its Spark schema, so a
+read is ``spark.read.schema(recorded).parquet(selected partition dirs)``
+(_scan): Catalyst sees plain parquet with full pushdown, and planning
+runs no schema-inference job.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
 import operator
@@ -60,6 +67,7 @@ from dataclasses import dataclass, field
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from micromegas_spark.flightsql.errors import InvalidArgument
 from micromegas_spark.session import clone_session, sync_conf
@@ -77,6 +85,13 @@ class BatchViewSpec:
     merge_query: str  # over a temp view named `source`
     time_column: str  # event-time column of the extract output (ns BIGINT)
     update_group: int = 2000
+
+    def source_hash(self, spark: SparkSession, begin_ns: int, end_ns: int) -> int:
+        row = spark.sql(self.count_query.format(begin=begin_ns, end=end_ns)).collect()[0]
+        return int(row[0] or 0)
+
+    def extract(self, spark: SparkSession, begin_ns: int, end_ns: int) -> DataFrame:
+        return spark.sql(self.extract_query.format(begin=begin_ns, end=end_ns))
 
 
 # The canonical instance: log_stats = 1-minute pre-aggregation of
@@ -152,6 +167,17 @@ PROC_STATS = BatchViewSpec(
 )
 
 
+def instance_view(view_set: str, instance: str) -> str:
+    """The catalog view holding one JIT instance's partitions: the
+    sanitized (view_set, instance) for readability, truncated to keep file
+    names short, plus a stable hash of the exact pair, so distinct pairs
+    ('a/b' vs 'a_b') never share a view. Only [A-Za-z0-9_] appear, so no
+    instance string can place a file outside ``<warehouse>/<view>/`` or
+    ``_partitions/``."""
+    tag = hashlib.sha1(f"{view_set}\x00{instance}".encode("utf-8")).hexdigest()[:8]
+    return re.sub(r"[^A-Za-z0-9_]", "_", f"{view_set}__{instance}")[:96] + "_" + tag
+
+
 @dataclass
 class Partition:
     begin_insert_ns: int
@@ -174,6 +200,9 @@ class Partition:
     # every partition file and only those whose range can match. {} on
     # pre-upgrade manifests — missing stats never prune (safe default).
     column_stats: dict = field(default_factory=dict)
+    # Spark schema of the written rows (StructType JSON), so reads skip
+    # footer inference; "" on pre-upgrade manifests
+    schema_json: str = ""
 
 
 def _bounds_and_stats(df: DataFrame, time_column: str):
@@ -221,10 +250,31 @@ def _bounds_and_stats(df: DataFrame, time_column: str):
 def schema_fingerprint(df: DataFrame) -> str:
     """Deterministic fingerprint of a DataFrame's schema (name:type pairs,
     order-sensitive like the reference's Arrow schema hash)."""
-    import hashlib
-
     canon = ";".join(f"{f.name}:{f.dataType.simpleString()}" for f in df.schema.fields)
     return hashlib.md5(canon.encode()).hexdigest()[:16]
+
+
+def _write_partition(df: DataFrame, time_column: str, out_dir: str):
+    """Write ``df`` once to ``out_dir`` and return its event-time bounds
+    and column stats, aggregated over the written files: the extract,
+    merge or JIT builder behind ``df`` runs once, and AQE still sizes
+    the write (a persisted plan would pin the shuffle's partition count,
+    one small file per shuffle partition)."""
+    df.write.mode("overwrite").parquet(out_dir)
+    written = df.sparkSession.read.schema(df.schema).parquet(out_dir)
+    return _bounds_and_stats(written, time_column)
+
+
+def _scan(spark: SparkSession, parts: list["Partition"]) -> DataFrame:
+    """The one reader of catalog partitions: the recorded Spark schema
+    when every partition records the same one (no footer reads, no
+    inference job), inference otherwise."""
+    paths = [p.path for p in parts]
+    schemas = {p.schema_json for p in parts}
+    if len(schemas) == 1 and "" not in schemas:
+        recorded = StructType.fromJson(json.loads(schemas.pop()))
+        return spark.read.schema(recorded).parquet(*paths)
+    return spark.read.parquet(*paths)
 
 
 # Column-predicate operators of Lakehouse.read: op → (row filter, stats
@@ -294,6 +344,9 @@ _MANIFEST_SCHEMA = pa.schema(
         ("updated_unix", pa.float64()),
         ("schema_hash", pa.string()),
         ("column_stats_json", pa.string()),
+        # one distinct value per schema: read dictionary-encoded, so a
+        # large catalog keeps one copy of each
+        ("schema_json", pa.dictionary(pa.int32(), pa.string())),
     ]
 )
 
@@ -307,12 +360,21 @@ def _head(cands: list[tuple[int, str]]) -> tuple[int, str]:
 
 
 def _decode_partitions(tbl: pa.Table) -> list[Partition]:
-    """Manifest rows → Partitions."""
+    """Manifest rows → Partitions. Rows of one schema share one
+    ``schema_json`` string, decoded once from the column's dictionary."""
+    schemas: list[str] = []
+    if "schema_json" in tbl.column_names:  # absent on pre-upgrade manifests
+        for chunk in tbl["schema_json"].chunks:
+            values = chunk.dictionary.to_pylist()
+            schemas += [values[i] for i in chunk.indices.to_pylist()]
+        tbl = tbl.drop_columns(["schema_json"])
     out = []
-    for row in tbl.to_pylist():
+    for i, row in enumerate(tbl.to_pylist()):
         row.pop("view", None)
         stats = row.pop("column_stats_json", None)
         row["column_stats"] = json.loads(stats) if stats else {}
+        if schemas:
+            row["schema_json"] = schemas[i]
         out.append(Partition(**row))
     return out
 
@@ -442,7 +504,8 @@ class Lakehouse:
                 return _MANIFEST_SCHEMA.empty_table(), 0
             gen, fname = _head(cands)
             try:
-                return self.fs.read_parquet_table(self.fs.url("_partitions", fname)), gen
+                url = self.fs.url("_partitions", fname)
+                return self.fs.read_parquet_table(url, read_dictionary=["schema_json"]), gen
             except (FileNotFoundError, OSError):
                 continue
         raise ManifestConflict(
@@ -546,13 +609,17 @@ class Lakehouse:
         claimed, the directories of the partitions the predicate dropped
         from the COMMITTED state are unreachable and are deleted here
         (except a path ``add`` re-publishes) — files are only ever
-        deleted once unreachable, and this is the one place the
-        catalog's retired partitions lose their files. Returns the
-        dropped partitions, for counts and log rows."""
+        deleted once unreachable, and this is the only function that
+        deletes a retired partition's files, for global views and JIT
+        instances alike. A delta that drops and adds nothing commits
+        nothing. Returns the dropped partitions, for counts and log
+        rows."""
         for _ in range(_COMMIT_RETRIES):
             tbl, gen = self._manifest_head(view)
             parts = _decode_partitions(tbl)
             dropped = [p for p in parts if drop(p)] if drop else []
+            if not dropped and not add:
+                return []
             new = [p for p in parts if p not in dropped] + list(add)
             if self._commit_manifest(view, new, gen):
                 kept = {p.path for p in add}
@@ -564,12 +631,6 @@ class Lakehouse:
 
     # -- materialization ---------------------------------------------------
 
-    def _source_hash(self, spec: BatchViewSpec, begin_ns: int, end_ns: int) -> int:
-        row = self.spark.sql(
-            spec.count_query.format(begin=begin_ns, end=end_ns)
-        ).collect()[0]
-        return int(row[0] or 0)
-
     def materialize_bucket(self, spec: BatchViewSpec, begin_ns: int, end_ns: int) -> str:
         """Create/refresh one insert-time bucket. Returns 'up_to_date' |
         'covered' | 'created' | 'empty' (the verify_overlapping_partitions
@@ -578,7 +639,12 @@ class Lakehouse:
         merge_partitions) also aborts — re-creating the fine buckets under
         it would double the data; a stale covering/misaligned overlap is
         retired in the same commit that publishes this bucket's rebuild
-        (or, when the source is empty, in a retire-only commit)."""
+        (or, when the source is empty, in a retire-only commit).
+
+        ``spec`` needs ``name``, ``time_column`` and the
+        ``source_hash(spark, b, e)`` / ``extract(spark, b, e)`` pair of
+        BatchViewSpec; Engine.view_instance passes a JIT instance in that
+        shape."""
 
         def overlaps(p: Partition) -> bool:
             return p.begin_insert_ns < end_ns and p.end_insert_ns > begin_ns
@@ -587,7 +653,7 @@ class Lakehouse:
             return p.begin_insert_ns == begin_ns and p.end_insert_ns == end_ns
 
         with self._view_lock(spec.name):
-            current = self._source_hash(spec, begin_ns, end_ns)
+            current = spec.source_hash(self.spark, begin_ns, end_ns)
             parts = self.list_partitions(spec.name)
             existing = [p for p in parts if exact(p)]
             if existing and existing[0].source_hash == current:
@@ -600,7 +666,7 @@ class Lakehouse:
             ]
             if covering:
                 cov = covering[0]
-                cov_hash = self._source_hash(spec, cov.begin_insert_ns, cov.end_insert_ns)
+                cov_hash = spec.source_hash(self.spark, cov.begin_insert_ns, cov.end_insert_ns)
                 if cov.source_hash == cov_hash:
                     return "covered"
             # the stale overlaps as a frozen identity set (merge_partitions'
@@ -612,16 +678,15 @@ class Lakehouse:
                     self._commit_delta(spec.name, drop=lambda p: _identity(p) in stale)
                 return "empty"
 
-            df = self.spark.sql(spec.extract_query.format(begin=begin_ns, end=end_ns))
-            # event-time bounds + per-column min/max stats in ONE aggregation
-            # job (stats are free at write time; they buy catalog-level data
-            # skipping at read time)
-            bounds, column_stats = _bounds_and_stats(df, spec.time_column)
+            df = spec.extract(self.spark, begin_ns, end_ns)
             # write-once to a unique, never-reused path; the manifest commit
             # below publishes it (write_partition.rs: unique object key +
-            # catalog insert — no rename on any filesystem)
+            # catalog insert — no rename on any filesystem). Event-time
+            # bounds + per-column min/max stats come from ONE aggregation
+            # job over the written files (cheap at write time; they buy
+            # catalog-level data skipping at read time)
             out_dir = self.fs.unique_dir_url(spec.name, f"{begin_ns}_{end_ns}")
-            df.write.mode("overwrite").parquet(out_dir)
+            bounds, column_stats = _write_partition(df, spec.time_column, out_dir)
 
             new_part = Partition(
                 begin_insert_ns=begin_ns,
@@ -632,6 +697,7 @@ class Lakehouse:
                 path=out_dir,
                 schema_hash=schema_fingerprint(df),
                 column_stats=column_stats,
+                schema_json=df.schema.json(),
             )
             # retire+insert as one delta: the stale overlaps seen above and
             # whatever holds this exact bucket (a flock-less rival's commit
@@ -688,21 +754,15 @@ class Lakehouse:
             if spark is None or spark.sparkContext is not self.spark.sparkContext:
                 spark = _MERGE_SESSIONS[key] = clone_session(self.spark)
             sync_conf(spark, self.spark)
-            spark.read.parquet(*[p.path for p in inside]).createOrReplaceTempView("source")
+            _scan(spark, inside).createOrReplaceTempView("source")
             merged = spark.sql(spec.merge_query)
             # unique write-once path; the manifest commit below publishes it
             out_dir = self.fs.unique_dir_url(spec.name, f"{begin_ns}_{end_ns}")
             # recompute column stats from the MERGED rows — child stats can't
             # be unioned because merge_query re-aggregates (a SUM(count) can
             # exceed any child's max); merged partitions are the biggest, so
-            # skipping matters most exactly here. Persisted across the two
-            # actions (stats job + write) so the merge aggregation runs once.
-            merged = merged.persist()
-            try:
-                _, column_stats = _bounds_and_stats(merged, spec.time_column)
-                merged.write.mode("overwrite").parquet(out_dir)
-            finally:
-                merged.unpersist()
+            # skipping matters most exactly here
+            _, column_stats = _write_partition(merged, spec.time_column, out_dir)
             merged_part = Partition(
                 begin_insert_ns=begin_ns,
                 end_insert_ns=end_ns,
@@ -712,6 +772,7 @@ class Lakehouse:
                 path=out_dir,
                 schema_hash=schema_fingerprint(merged),
                 column_stats=column_stats,
+                schema_json=merged.schema.json(),
             )
             # drop EXACTLY the children the merge read (frozen identity set,
             # not a range predicate): on a CAS retry, a partition a rival
@@ -856,16 +917,18 @@ class Lakehouse:
         (functions-reference.md:73 — the variant the reference steers
         admins toward, addressing ONE partition by its exact identifiers
         instead of a path): retires the single partition whose insert
-        bucket is exactly [begin, end). Lakehouse batch views are
-        single-instance, spelled 'global' like the reference's
-        process-independent views — a non-matching instance retires
-        nothing (per-process JIT instances live in Engine's JIT
-        manifests, not this catalog). Returns partitions retired (0/1)."""
-        if view_instance_id not in ("global", view_set_name):
-            return 0
+        bucket is exactly [begin, end). A batch view's instance is spelled
+        'global' like the reference's process-independent views; any
+        other instance addresses the JIT instance's own catalog view
+        (instance_view), so an instance never built retires nothing.
+        Returns partitions retired (0/1)."""
+        view = (
+            view_set_name
+            if view_instance_id in ("global", view_set_name)
+            else instance_view(view_set_name, view_instance_id)
+        )
         return self._retire(
-            view_set_name,
-            lambda p: p.begin_insert_ns == begin_ns and p.end_insert_ns == end_ns,
+            view, lambda p: p.begin_insert_ns == begin_ns and p.end_insert_ns == end_ns
         )
 
     def retire_partition_by_file(self, path: str) -> int:
@@ -1063,14 +1126,14 @@ class Lakehouse:
             test = _COLUMN_OPS[op][1]
             parts = [p for p in parts if _stats_can_match(p, col, test, val)]
         if not parts:
-            # typed empty result: the schema of one live partition (one
-            # footer read), every row filtered out — column references
-            # still resolve; schema-less only when the view has none
+            # typed empty result: the schema of one live partition, every
+            # row filtered out — column references still resolve;
+            # schema-less only when the view has none
             live = self._pruned_partitions(view, schema_hash)
             if not live:
                 return self.spark.range(0).select()
-            return self.spark.read.parquet(live[0].path).where(F.lit(False))
-        df = self.spark.read.parquet(*[p.path for p in parts])
+            return _scan(self.spark, live[:1]).where(F.lit(False))
+        df = _scan(self.spark, parts)
         if time_column:
             if begin_event_ns is not None:
                 df = df.where(F.col(time_column) >= begin_event_ns)

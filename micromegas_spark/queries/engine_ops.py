@@ -355,8 +355,8 @@ def _jit_thread_spans_setup(spark: SparkSession, sf_dir: str):
     # driver + oracle passes) hit the manifest cache instead of
     # rebuilding - the warm-JIT behavior the reference has - and /tmp
     # doesn't accumulate one orphan dir per call. Reuse is safe:
-    # partition identity is content-based (block ids + counts) and
-    # writes are tmp-dir + atomic rename.
+    # partition identity is content-based (block ids + counts) and a
+    # partition is visible only once the catalog commit publishes it.
     wh = os.path.join(
         tempfile.gettempdir(),
         f"jit_thread_spans_{hashlib.sha1(sf_dir.encode()).hexdigest()[:12]}",
@@ -385,7 +385,7 @@ def events_jit_thread_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested streams as events_thread_spans, but each stream's events are
     split into 3 event-time blocks REGISTERED IN REVERSE insert order, fed
     through Engine.view_instance's block-aware grouping (event-time sort,
-    insert-safe cuts, manifest-cached parquet partitions), and read back.
+    insert-safe cuts, catalog-cached parquet partitions), and read back.
 
     The oracle is the SAME balanced-parentheses SQL as the direct batch
     query (restricted to the 4 streams materialized) — passing proves JIT
@@ -423,7 +423,7 @@ def events_jit_sql_view_instance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (view_instance_table_function.rs:49-70; python-api.md's query_spans
     examples) — through Engine.resolve's plan-time rewrite: literal
     view_instance() calls materialize via the existing Python JIT path
-    (block-aware grouping, manifest cache) and substitute as temp views,
+    (block-aware grouping, catalog cache) and substitute as temp views,
     so a reference user's query runs VERBATIM with zero data through
     Python. Exercises multiple instances in one statement via UNION ALL
     and proves the result identical to the Python-API variant's oracle
@@ -1304,7 +1304,7 @@ def events_jit_net_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             return build_net_spans(src)
 
-        # content-keyed warehouse: repeat runs hit the manifest cache
+        # content-keyed warehouse: repeat runs hit the catalog cache
         # (see events_jit_thread_spans for the reuse-safety argument)
         wh = os.path.join(
             tempfile.gettempdir(),

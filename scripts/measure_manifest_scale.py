@@ -11,8 +11,12 @@ a segment-log + periodic compaction (the Delta checkpoint shape) behind
 the same _commit_delta API — the commit appends a delta file and readers
 fold deltas into the last checkpoint.
 
+Every row carries a realistic ``schema_json`` (a thread-spans-like Spark
+schema, ~1 KB): the catalog records each partition's schema, and reads it
+dictionary-encoded, so its cost shows in the size and read columns.
+
 Usage: python scripts/measure_manifest_scale.py [--out SCALE_ROW.json]
-No Spark needed — the catalog layer is pure pyarrow.
+No Spark session needed — the catalog layer is pure pyarrow.
 """
 
 from __future__ import annotations
@@ -29,6 +33,22 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from micromegas_spark.materialize.batch import Lakehouse, Partition, _head  # noqa: E402
 
+# the recorded Spark schema of a thread-spans partition
+SCHEMA_JSON = json.dumps(
+    {
+        "type": "struct",
+        "fields": [
+            {"name": n, "type": t, "nullable": True, "metadata": {}}
+            for n, t in [
+                ("stream_id", "string"), ("id", "long"), ("parent", "long"),
+                ("depth", "integer"), ("hash", "long"), ("begin_ns", "long"),
+                ("end_ns", "long"), ("duration", "long"), ("name", "string"),
+                ("target", "string"), ("filename", "string"), ("line", "integer"),
+            ]
+        ],
+    }
+)
+
 
 def measure(n: int) -> dict:
     wh = tempfile.mkdtemp(prefix=f"manifest_scale_{n}_")
@@ -44,6 +64,7 @@ def measure(n: int) -> dict:
                 path=f"{wh}/v/{i * 1000}_{(i + 1) * 1000}_deadbeef",
                 schema_hash="0123456789abcdef",
                 column_stats={"process_id": ["p-000", "p-999"], "count": [1, 9999]},
+                schema_json=SCHEMA_JSON,
             )
             for i in range(n)
         ]
@@ -62,6 +83,7 @@ def measure(n: int) -> dict:
             path=f"{wh}/v/{n * 1000}_x",
             schema_hash="0123456789abcdef",
             column_stats={},
+            schema_json=SCHEMA_JSON,
         )
         t0 = time.time()
         lake._commit_delta("v", add=[add])

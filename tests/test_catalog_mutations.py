@@ -1,9 +1,8 @@
 """Every catalog mutation deletes exactly what its commit made unreachable:
-the Lakehouse's retires, merge and bucket rebuilds (Lakehouse._commit_delta)
-and the JIT cache's bucket-mode and block-mode rebuilds
-(Engine._jit_manifest_save_merged). For each: the dropped directories are
-gone, every directory the manifest still lists exists, and the return value
-or count matches."""
+the Lakehouse's retires, merge and bucket rebuilds and a JIT instance's
+bucket-mode and block-mode rebuilds, all through Lakehouse._commit_delta.
+For each: the dropped directories are gone, every directory the manifest
+still lists exists, and the return value or count matches."""
 
 from __future__ import annotations
 
@@ -13,7 +12,7 @@ import pytest
 
 from micromegas_spark.engine import Engine, JitViewSet
 from micromegas_spark.materialize import BatchViewSpec, Lakehouse
-from micromegas_spark.materialize.batch import Partition
+from micromegas_spark.materialize.batch import Partition, instance_view
 
 HOUR = 3_600 * 10**9
 VIEW = "cm_view"
@@ -190,9 +189,10 @@ def stale_overlap_over_empty_source(spark, tmp_path):
     )
 
 
-def _jit_case(eng, mpath, mutate, expect) -> Case:
+def _jit_case(eng, view_set, mutate, expect) -> Case:
+    view = instance_view(view_set, "i")
     return Case(
-        lambda: {e["path"] for e in eng._jit_manifest_load(mpath).values()},
+        lambda: {p.path for p in eng.lakehouse.list_partitions(view)},
         eng.fs.exists,
         mutate,
         expect,
@@ -218,7 +218,7 @@ def jit_bucket_rebuild(spark, tmp_path):
     n["rows"] = 3  # both buckets go stale
     return _jit_case(
         eng,
-        eng._jit_manifest("cm_jit", "i"),
+        "cm_jit",
         read,
         lambda rows, dropped: rows == 6 and len(dropped) == 2,
     )
@@ -258,7 +258,7 @@ def jit_block_rebuild(spark, tmp_path):
     register(4)
     return _jit_case(
         eng,
-        eng._jit_manifest("cm_jitb", "i") + ".blocks",
+        "cm_jitb",
         read,
         lambda rows, dropped: rows == 3 and len(dropped) == 1,
     )
@@ -326,47 +326,70 @@ def test_rebuild_keeps_a_rival_commit_made_during_its_write(spark, tmp_path):
     assert not lake.fs.exists(stale.path)
 
 
-def _race(read):
+def _race(eng, read, second_in):
     """Run ``read`` in two threads at once and count both results after
-    both have committed."""
+    both have committed; ``second_in`` is set once the second thread has
+    entered ``eng.view_instance``."""
     from concurrent.futures import ThreadPoolExecutor
 
+    entered = []
+    view_instance = eng.view_instance
+
+    def counting(*a, **kw):
+        entered.append(1)
+        if len(entered) >= 2:
+            second_in.set()
+        return view_instance(*a, **kw)
+
+    eng.view_instance = counting
     with ThreadPoolExecutor(2) as pool:
         dfs = [f.result() for f in [pool.submit(read) for _ in range(2)]]
     return [df.count() for df in dfs]
 
 
+def _hold_first_build(second_in, builds):
+    """A builder hook: count the build and hold it until the second
+    thread has entered view_instance, so both calls overlap."""
+    builds.append(1)
+    assert second_in.wait(120)
+
+
 def test_concurrent_jit_bucket_builds_both_read(spark, tmp_path):
-    """Two builders of the same cold bucket both commit (each waits in
-    ``build`` until the other has loaded the manifest too); neither
-    deletes the other's directory, so both results stay readable."""
+    """Two readers of the same cold bucket: the first builds while the
+    second is inside view_instance; the second waits on the view's lock
+    and reuses the first's commit, so the builder runs once and both
+    results read."""
     import threading
 
-    barrier = threading.Barrier(2, timeout=120)
+    second_in = threading.Event()
+    builds = []
     eng = Engine(spark, warehouse=f"file://{tmp_path}/wh_race")
 
     def build(inst, b, e):
-        barrier.wait()
+        _hold_first_build(second_in, builds)
         return spark.range(3).selectExpr(f"id + {b} AS t")
 
     eng.register_jit_view_set(
         JitViewSet("race", source_count=lambda *_: 3, build=build, time_column="t")
     )
-    assert _race(lambda: eng.view_instance("race", "i", 0, HOUR, bucket_ns=HOUR)) == [3, 3]
+    read = lambda: eng.view_instance("race", "i", 0, HOUR, bucket_ns=HOUR)  # noqa: E731
+    assert _race(eng, read, second_in) == [3, 3]
+    assert len(builds) == 1
 
 
 def test_concurrent_jit_block_builds_both_read(spark, tmp_path):
-    """Two builders of the same new block group both commit; neither
-    deletes the other's directory, so both results stay readable."""
+    """Two readers of the same new block group: the builder runs once and
+    both results read."""
     import threading
 
-    barrier = threading.Barrier(2, timeout=120)
+    second_in = threading.Event()
+    builds = []
     eng = Engine(spark, warehouse=f"file://{tmp_path}/wh_raceb")
     blocks = [{"block_id": "B1", "begin_ns": 10, "end_ns": 15,
                "insert_ns": 1, "nb_objects": 2}]
 
     def build_blocks(inst, ids):
-        barrier.wait()
+        _hold_first_build(second_in, builds)
         return spark.range(len(ids)).selectExpr("id + 10 AS begin_ns")
 
     eng.register_jit_view_set(
@@ -375,4 +398,6 @@ def test_concurrent_jit_block_builds_both_read(spark, tmp_path):
                    list_blocks=lambda inst, b, e: list(blocks),
                    build_blocks=build_blocks)
     )
-    assert _race(lambda: eng.view_instance("raceb", "i", 0, 10**6)) == [1, 1]
+    read = lambda: eng.view_instance("raceb", "i", 0, 10**6)  # noqa: E731
+    assert _race(eng, read, second_in) == [1, 1]
+    assert len(builds) == 1

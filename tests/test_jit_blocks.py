@@ -13,6 +13,7 @@ import os
 from pyspark.sql import functions as F
 
 from micromegas_spark.engine import Engine, JitViewSet, group_blocks_into_partitions
+from micromegas_spark.materialize.batch import instance_view
 from micromegas_spark.operators.spans import build_thread_spans
 
 
@@ -203,7 +204,7 @@ def test_jit_blocks_cache_reuse_and_overlap_retire(spark, tmp_path):
     vs = _block_view_set(edf1, blocks, max_nb_objects=10)
     eng.register_jit_view_set(vs)
     assert eng.view_instance("thread_spans_bt", sid, 0, 10**6).count() == 2
-    part_root = os.path.join(eng.warehouse, "thread_spans_bt", f"instance={sid}")
+    part_root = os.path.join(eng.warehouse, instance_view("thread_spans_bt", sid))
     first_parts = set(os.listdir(part_root))
     assert len(first_parts) == 1  # both blocks fit one partition
 
@@ -353,7 +354,7 @@ def test_view_instance_sql_rewrite_literal(spark, tmp_path):
         "SELECT COUNT(*) AS n FROM view_instance('ordered_view', 's1')"
     ).collect()
     assert out[0]["n"] == 2
-    # repeat query reuses the manifest-cached partition and the same
+    # repeat query reuses the catalog-cached partition and the same
     # temp-view slot (no unbounded _vi_* growth)
     out2 = eng.query(
         "SELECT SUM(begin_ns) AS s FROM view_instance('ordered_view', 's1')"

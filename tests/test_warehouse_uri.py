@@ -17,7 +17,7 @@ import pytest
 from micromegas_spark.engine import Engine
 from micromegas_spark.fslayer import WarehouseFS
 from micromegas_spark.materialize import LOG_STATS
-from micromegas_spark.materialize.batch import Lakehouse
+from micromegas_spark.materialize.batch import Lakehouse, instance_view
 
 HOUR = 3_600 * 10**9
 
@@ -84,8 +84,8 @@ def test_full_lifecycle_on_file_uri_warehouse(spark, tmp_path):
 
 
 def test_jit_view_instance_on_file_uri_warehouse(spark, tmp_path):
-    """The JIT cache commits through the same layer: build once, reuse on
-    the second call (manifest hit), all under a file:// root."""
+    """A JIT instance commits through the same catalog: build once, reuse
+    on the second call (catalog hit), all under a file:// root."""
     lo, hi = _register_synthetic(spark)
     from micromegas_spark.engine import JitViewSet
 
@@ -107,9 +107,8 @@ def test_jit_view_instance_on_file_uri_warehouse(spark, tmp_path):
     inst = spark.table("log_entries").select("process_id").first()[0]
     n1 = eng.view_instance("log_by_proc", inst, lo, hi).count()
     assert n1 > 0
-    mpath = eng._jit_manifest("log_by_proc", inst)
-    manifest = json.loads(eng.fs.read_bytes(mpath))
-    assert all(e["path"].startswith("file://") for e in manifest.values())
+    parts = eng.lakehouse.list_partitions(instance_view("log_by_proc", inst))
+    assert parts and all(p.path.startswith("file://") for p in parts)
     # second call: cache hit, identical rows
     assert eng.view_instance("log_by_proc", inst, lo, hi).count() == n1
 
@@ -388,19 +387,35 @@ def test_vacuum_orphans_removes_only_uncommitted_dirs(tmp_path):
     assert len(lake.list_partitions("v1")) == 1
 
 
+def _jit_instance(spark, warehouse, instance):
+    """An Engine with one bucket-mode JIT instance built over [0, HOUR);
+    returns (engine, the instance's catalog view, its one partition)."""
+    from micromegas_spark.engine import JitViewSet
+
+    eng = Engine(spark, warehouse=warehouse)
+    eng.register_jit_view_set(
+        JitViewSet(
+            "vset",
+            source_count=lambda *_: 2,
+            build=lambda inst, b, e: spark.range(2).selectExpr(f"id + {b} AS t"),
+            time_column="t",
+        )
+    )
+    assert eng.view_instance("vset", instance, 0, HOUR, bucket_ns=HOUR).count() == 2
+    view = instance_view("vset", instance)
+    (part,) = eng.lakehouse.list_partitions(view)
+    return eng, view, part
+
+
 def test_vacuum_jit_orphans(spark, tmp_path):
-    """Same sweep for the JIT cache: manifest-referenced dirs survive,
-    orphans past the grace window go."""
-    eng = Engine(spark, warehouse=f"file://{tmp_path}/wh_jitvac")
-    mpath = eng._jit_manifest("vset", "inst-1")
-    live = eng.fs.unique_dir_url("vset", "instance=inst-1", "bucket=0")
-    eng.fs.mkdirs(live)
-    eng._jit_manifest_save(mpath, {"0": {"hash": 1, "path": live}})
-    orphan = eng.fs.unique_dir_url("vset", "instance=inst-1", "bucket=1")
+    """Same sweep for a JIT instance's catalog view: committed dirs
+    survive, orphans past the grace window go."""
+    eng, view, part = _jit_instance(spark, f"file://{tmp_path}/wh_jitvac", "inst-1")
+    orphan = eng.fs.unique_dir_url(view, "1_2")
     eng.fs.mkdirs(orphan)
-    assert eng.vacuum_jit_orphans("vset", "inst-1", min_age_seconds=3600) == 0
-    assert eng.vacuum_jit_orphans("vset", "inst-1", min_age_seconds=0) == 1
-    assert eng.fs.exists(live) and not eng.fs.exists(orphan)
+    assert eng.lakehouse.vacuum_orphans(view, min_age_seconds=3600) == 0
+    assert eng.lakehouse.vacuum_orphans(view, min_age_seconds=0) == 1
+    assert eng.fs.exists(part.path) and not eng.fs.exists(orphan)
 
 
 def test_vacuum_treats_unknown_mtime_as_young(tmp_path, monkeypatch):
@@ -421,7 +436,7 @@ def test_vacuum_live_set_is_spelling_insensitive(tmp_path):
     """ADVICE r10: a legacy manifest entry spelling the committed dir as
     a PLAIN path (old os.path.join code) must still protect it from
     vacuum when the warehouse is now configured as file://...; same for
-    the JIT cache's manifest."""
+    a JIT instance's catalog view (below)."""
     from micromegas_spark.materialize.batch import Partition
 
     lake = Lakehouse(None, f"file://{tmp_path}/wh_canon")
@@ -434,14 +449,13 @@ def test_vacuum_live_set_is_spelling_insensitive(tmp_path):
 
 
 def test_vacuum_jit_live_set_is_spelling_insensitive(spark, tmp_path):
-    eng = Engine(spark, warehouse=f"file://{tmp_path}/wh_jitcanon")
-    mpath = eng._jit_manifest("vset", "i1")
-    live = eng.fs.unique_dir_url("vset", "instance=i1", "bucket=0")
-    eng.fs.mkdirs(live)
-    plain = live[len("file://"):]
-    eng._jit_manifest_save(mpath, {"0": {"hash": 1, "path": plain}})
-    assert eng.vacuum_jit_orphans("vset", "i1", min_age_seconds=0.0) == 0
-    assert eng.fs.exists(live)
+    from dataclasses import replace
+
+    eng, view, part = _jit_instance(spark, f"file://{tmp_path}/wh_jitcanon", "i1")
+    plain = part.path[len("file://"):]
+    eng.lakehouse._save_manifest(view, [replace(part, path=plain)])
+    assert eng.lakehouse.vacuum_orphans(view, min_age_seconds=0.0) == 0
+    assert eng.fs.exists(part.path)
 
 
 def test_maintenance_tick_vacuums_aged_orphans(spark, tmp_path):
@@ -483,7 +497,7 @@ def test_put_commit_branch_without_rename(tmp_path):
     # overwrite-in-place (the retire+insert) also single-PUTs
     lake._save_manifest("v", [])
     assert lake.list_partitions("v") == []
-    # small-file helper too (JIT manifests ride this)
+    # the small-file helper too
     u = lake.fs.url("_jit_probe.json")
     lake.fs.write_bytes_atomic(u, b'{"a": 1}')
     assert json.loads(lake.fs.read_bytes(u)) == {"a": 1}
@@ -544,23 +558,6 @@ def test_pruned_partitions_matches_python_filtering(tmp_path):
         if kw.get("end_event_ns") is not None:
             exp = [p for p in exp if p.min_event_ns < kw["end_event_ns"]]
         assert got == exp, f"divergence for {kw}"
-
-
-def test_jit_manifest_merge_commit_preserves_rival_entries(spark, tmp_path):
-    """Two writers on one JIT instance: a save based on a STALE load must
-    not clobber entries a rival committed meanwhile — the merge commit
-    applies only this run's keys on the freshest file."""
-    eng = Engine(spark, warehouse=f"file://{tmp_path}/wh_jitmerge")
-    mpath = eng._jit_manifest("vset", "i1")
-    # rival commits bucket 0 after our (empty) load
-    eng._jit_manifest_save(mpath, {"0": {"hash": 1, "path": "p0"}})
-    # our run, based on the stale empty view, commits bucket 1
-    eng._jit_manifest_save_merged(mpath, {"1": {"hash": 2, "path": "p1"}})
-    got = eng._jit_manifest_load(mpath)
-    assert set(got) == {"0", "1"}  # both survive
-    # deletions ride the same merge (blocks-mode retirement)
-    eng._jit_manifest_save_merged(mpath, {}, deletes=["0"])
-    assert set(eng._jit_manifest_load(mpath)) == {"1"}
 
 
 def test_cas_delta_commits_survive_thread_contention(tmp_path, monkeypatch):
