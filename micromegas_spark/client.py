@@ -311,14 +311,9 @@ class PreparedStatement:
         """Result schema without executing (the schema-discovery purpose
         of FlightSQL prepared statements): plan the statement with NULL
         parameter placeholders and convert the SPARK schema to Arrow —
-        an empty pandas frame would type every string column as null."""
-        import re as _re
-
-        names = set(_re.findall(r":(\w+)", self.sql))
-        # bound and analyzed like resolve(), minus the audit record
-        # (schema discovery is not an executed statement)
-        engine = self.client.engine
-        with engine.planning_session():
-            spark = engine.prepare_views(self.sql)
-            df = spark.sql(self.sql, args={n: None for n in names})
-        return _arrow_schema(df)
+        an empty pandas frame would type every string column as null.
+        Planned like resolve() (Engine._plan), minus the admin ops and
+        the audit record: schema discovery is not an executed statement."""
+        return _arrow_schema(
+            self.client.engine._plan(self.sql, None, None, execute=False)
+        )

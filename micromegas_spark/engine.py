@@ -41,6 +41,7 @@ from micromegas_spark.materialize.batch import (
     Partition,
     _identity,
     _scan,
+    _typed_empty,
     instance_view,
     schema_fingerprint,
 )
@@ -144,8 +145,9 @@ def _sql_data_spans(sql: str) -> list[bool]:
     Caveat: under spark.sql.parser.escapedStringLiterals=true (Hive
     compatibility) backslash is a literal character — input written for
     that mode is unsupported here and may desync the scanner. The
-    view_instance rewrite consults this so occurrences inside any of
-    those spans are never counted as calls."""
+    table-function scanner (Engine.table_function_calls) consults this
+    so occurrences inside any of those spans are never counted as
+    calls."""
     n = len(sql)
     data = [False] * n
     i = 0
@@ -192,14 +194,42 @@ def _sql_data_spans(sql: str) -> list[bool]:
 
 
 def _literal_ns(lit: str) -> int:
-    """An admin call's timestamp literal (SQL '' escaping undone) → epoch
-    ns: raw epoch-ns integer spellings or ISO strings."""
+    """An admin call's timestamp literal → epoch ns: raw epoch-ns integer
+    spellings or ISO strings."""
     from micromegas_spark.timeutils import to_epoch_ns
 
-    lit = lit.replace("''", "'").strip()
+    lit = lit.strip()
     if re.fullmatch(r"-?\d+", lit):
         return int(lit)
     return to_epoch_ns(lit)
+
+
+# The plan-time table functions (the reference's table-function registry,
+# query.rs:104-176): name → its (argument, type) list. Their arguments
+# must be literals; they are evaluated when the statement is planned.
+_ADMIN_ARGS = (("view_name", str), ("begin", str), ("end", str))
+_TABLE_FNS: dict[str, tuple[tuple[str, type], ...]] = {
+    "view_instance": (("view_set", str), ("instance_id", str)),
+    "retire_partitions": _ADMIN_ARGS,
+    "materialize_partitions": _ADMIN_ARGS + (("partition_delta_seconds", int),),
+    "regenerate_partitions": _ADMIN_ARGS + (("partition_delta_seconds", int),),
+}
+_CALL_HEAD = re.compile(r"(?<![A-Za-z0-9_])(%s)\s*\(" % "|".join(_TABLE_FNS), re.I)
+# a literal: single-quoted with '' escaping (Spark grammar), or an integer
+_LITERAL = r"'(?:[^']|'')*'|-?\d+"
+_CALL_ARGS = re.compile(rf"\s*((?:{_LITERAL})(?:\s*,\s*(?:{_LITERAL}))*)?\s*\)")
+_ARG = re.compile(r"'((?:[^']|'')*)'|(-?\d+)")
+
+
+@dataclass(frozen=True)
+class TableFunctionCall:
+    """One live call of a plan-time table function: its name (lower
+    case), its literal arguments and its span [start, end) in the SQL."""
+
+    fn: str
+    args: tuple
+    start: int
+    end: int
 
 
 @dataclass
@@ -454,8 +484,8 @@ class Engine:
         """Bind the views ``sql`` names into the planning session this
         call holds, range-bounded, and return that session; call it inside
         planning_session() to keep using the session. Every path
-        that plans — resolve(), the prepared-statement schema lookup, the
-        admin ops — binds through here, keyed on the statement's OWN
+        that plans — _plan (execution and schema discovery) and the admin
+        ops — binds through here, keyed on the statement's OWN
         text. A view counts as named when its name appears word-bounded,
         case-insensitively (as Spark resolves view names): a false
         positive only wastes a build, and a view the statement does not
@@ -529,106 +559,53 @@ class Engine:
             )
         )
 
-    def _rewrite_view_instance(
-        self, sql: str, begin_ns: int | None, end_ns: int | None
-    ) -> str:
-        """SQL spelling of the JIT path — ``FROM view_instance('set',
-        'instance')`` inside arbitrary statements (the reference's primary
-        documented UX; view_instance_table_function.rs:49-70 evaluates the
-        two args at plan time from literals exactly like this). Each
-        distinct literal call materializes through the existing Python
-        view_instance() (catalog-cached parquet, block-aware when the
-        view set declares blocks), is bound as a deterministic temp view
-        of the held planning session, and the call text is
-        substituted with the view name — the scan
-        never routes through a Python UDTF (udtfs.py:11 documents why
-        that spelling is the scale anti-pattern).
-
-        Non-literal arguments are the CALLER's error (the reference
-        rejects them at plan time too): any view_instance( call not in
-        two-string-literal form raises InvalidArgument (#1435 'user').
-        Occurrences inside SQL string literals ('' / "" escaping per the
-        Spark grammar, which treats double-quoted text as strings in its
-        default non-ANSI mode), backtick-quoted identifiers, `--` line
-        comments and (nested) bracketed comments are DATA, not calls —
-        the rewrite lexes those spans first and touches only live text.
-        Call detection is identifier-anchored so e.g.
-        my_view_instance(...) is someone else's function, never rewritten
-        mid-identifier. The temp-view name is keyed on (set, instance) —
-        sanitized + a short stable hash so distinct keys can never alias
-        one slot — and repeat queries on a session reuse one slot (a later
-        rebinding cannot retarget an already-analyzed plan)."""
-        if "view_instance" not in sql.lower():
-            return sql
-        self._reject_escaped_string_literals("view_instance()")
+    def table_function_calls(self, sql: str) -> list[TableFunctionCall]:
+        """The live calls of the plan-time table functions (_TABLE_FNS)
+        in ``sql``, in source order, each with its literal arguments
+        (SQL '' escaping undone). Occurrences inside string literals,
+        backtick-quoted identifiers and comments are data, not calls
+        (_sql_data_spans), and a call head is identifier-anchored, so
+        e.g. my_view_instance(...) is someone else's function. An admin
+        call in a non-admin session fails as "not found"
+        (require_admin); a call whose arguments are not literals of the
+        function's arity and types raises InvalidArgument (#1435
+        'user'), as the reference rejects them at plan time. A statement
+        that names none of the functions costs one substring test."""
+        low = sql.lower()
+        if not any(fn in low for fn in _TABLE_FNS):
+            return []
+        self._reject_escaped_string_literals()
         in_data = _sql_data_spans(sql)
-        # one arg literal = single-quoted with '' escaping (Spark grammar)
-        _arg = r"'((?:[^']|'')*)'"
-        lit = re.compile(
-            r"(?<![A-Za-z0-9_])view_instance\s*\(\s*%s\s*,\s*%s\s*\)" % (_arg, _arg),
-            re.I,
-        )
-        calls = [
-            m
-            for m in re.finditer(
-                r"(?<![A-Za-z0-9_])view_instance\s*\(", sql, re.I
-            )
-            if not in_data[m.start()]
-        ]
-        matches = [m for m in lit.finditer(sql) if not in_data[m.start()]]
-        if len(calls) != len(matches):
-            raise InvalidArgument(
-                "view_instance() requires two string-literal arguments "
-                "(view_set, instance_id) — they are evaluated at plan time"
-            )
-        if not matches:
-            return sql
-        made: dict[tuple, str] = {}
-
-        def name_for(key: tuple) -> str:
-            if key not in made:
-                df = self.view_instance(
-                    key[0],
-                    key[1],
-                    begin_ns if begin_ns is not None else 0,
-                    end_ns if end_ns is not None else 2**62,
+        calls = []
+        for head in _CALL_HEAD.finditer(sql):
+            if in_data[head.start()]:
+                continue
+            fn = head.group(1).lower()
+            if fn != "view_instance":
+                self.require_admin(fn)
+            params = _TABLE_FNS[fn]
+            m = _CALL_ARGS.match(sql, head.end())
+            args = tuple(
+                int(n) if n else s.replace("''", "'")
+                for s, n in _ARG.findall(m.group(1) or "")
+            ) if m else None
+            if args is None or tuple(map(type, args)) != tuple(t for _, t in params):
+                raise InvalidArgument(
+                    f"{fn}() requires literal arguments "
+                    f"({', '.join(p for p, _ in params)}) — they are "
+                    "evaluated at plan time"
                 )
-                # the catalog view's name, sanitized + hashed: the
-                # sanitizer alone maps distinct keys (e.g. ('a','b-c') vs
-                # ('a','b_c')) to one name, which would let a later
-                # createOrReplaceTempView retarget the earlier
-                # substitution in the same statement
-                name = "_vi_" + instance_view(*key)
-                with self.planning_session() as spark:
-                    self._bind(spark, name, df)
-                made[key] = name
-            return made[key]
+            calls.append(TableFunctionCall(fn, args, head.start(), m.end()))
+        return calls
 
-        out, last = [], 0
-        for m in matches:
-            out.append(sql[last : m.start()])
-            # undo the SQL grammar's '' escaping — the literal's VALUE is
-            # the instance key, not its source spelling
-            out.append(
-                name_for(
-                    (
-                        m.group(1).replace("''", "'"),
-                        m.group(2).replace("''", "'"),
-                    )
-                )
-            )
-            last = m.end()
-        out.append(sql[last:])
-        return "".join(out)
-
-    def _reject_escaped_string_literals(self, what: str) -> None:
-        """The plan-time literal scanner (_sql_data_spans) lexes backslash
+    def _reject_escaped_string_literals(self) -> None:
+        """The plan-time call scanner (_sql_data_spans) lexes backslash
         escapes per Spark's DEFAULT string grammar; under
         spark.sql.parser.escapedStringLiterals=true (Hive compatibility)
         backslash is a literal character, so the scanner could silently
         desync on input written for that mode. Refuse loudly instead —
-        the docstring caveat promoted to an error. Checked whenever the
-        rewritten function name appears at all: the scanner itself is
+        the docstring caveat promoted to an error. Checked whenever a
+        table function's name appears at all: the scanner itself is
         what decides whether an occurrence is live, and under the
         unsupported mode its verdict can't be trusted. Read from the
         planning session, which is the one that parses the statement."""
@@ -636,135 +613,30 @@ class Engine:
             escaped = spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
         if escaped.lower() == "true":
             raise InvalidArgument(
-                f"{what} cannot be rewritten under "
+                "view_instance() and the partition-admin table functions "
+                "cannot be planned under "
                 "spark.sql.parser.escapedStringLiterals=true — the "
                 "plan-time literal scanner assumes Spark's default string "
                 "grammar (backslash escapes); unset the conf or use the "
                 "Python API directly"
             )
 
-    # admin table functions whose SQL spelling returns the op's task log
-    # (S11); all take (view, begin, end) string literals, materialize/
-    # regenerate additionally a trailing integer (delta seconds).
-    _ADMIN_TABLE_FNS = (
-        "materialize_partitions",
-        "regenerate_partitions",
-        "retire_partitions",
-    )
-
-    def _rewrite_admin_calls(
-        self, sql: str, created_views: list | None = None
-    ) -> str:
-        """SQL spelling of the partition-admin surface — the reference's
-        documented admin UX (functions-reference.md 'Requires admin';
-        materialize/retire/regenerate `*_table_function.rs`): each call
-        RETURNS the operation's progress log as a (time, msg) relation
-        (TaskLogExecPlan, dfext/task_log_exec_plan.rs:35-60 — SURVEY §2.1
-        S11; the Spark-side semantics and the documented streaming delta
-        live in materialize/tasklog.py).
-
-        Same lexing/substitution contract as _rewrite_view_instance:
-        string/comment spans are data, calls are identifier-anchored,
-        arguments must be literals (evaluated at plan time, like the
-        reference's exp_to_string/exp_to_timestamp), and each call runs
-        ONCE — eagerly, in ascending source position, so a statement
-        mixing functions (retire then materialize) observes its own
-        left-to-right order against the shared catalog. Argument errors
-        (non-literal args, non-positive delta, unknown view) raise BEFORE
-        any op runs — all calls validate first, like the reference's
-        plan-time argument evaluation; a failure of the op ITSELF becomes
-        the log's final row and the statement still succeeds (the
-        reference's spawner writes the task error as the last log entry,
-        materialize_partitions_table_function.rs). Admin gating is
-        require_admin's "not found" parity: a non-admin session never has
-        these functions registered. Arguments are checked by _admin_op,
-        which the streamed spelling shares. Each log's temp view is
-        recorded in ``created_views`` so resolve() can drop it once the
-        statement is analyzed — the log must not stay queryable by later
-        statements on that session."""
-        import hashlib as _hashlib
-
-        from micromegas_spark.materialize.tasklog import TaskLog
-
-        low = sql.lower()
-        live = [f for f in self._ADMIN_TABLE_FNS if f in low]
-        if not live:
-            return sql
-        self._reject_escaped_string_literals("partition-admin table functions")
-        _arg = r"'((?:[^']|'')*)'"
-
-        in_data = _sql_data_spans(sql)
-        matches: list[tuple] = []  # (match, fn)
-        for fn in live:
-            calls = [
-                m
-                for m in re.finditer(rf"(?<![A-Za-z0-9_]){fn}\s*\(", sql, re.I)
-                if not in_data[m.start()]
-            ]
-            if not calls:
-                continue
-            self.require_admin(fn)
-            tail = r"" if fn == "retire_partitions" else r"\s*,\s*(-?\d+)"
-            lit = re.compile(
-                rf"(?<![A-Za-z0-9_]){fn}\s*\(\s*{_arg}\s*,\s*{_arg}\s*,\s*{_arg}{tail}\s*\)",
-                re.I,
-            )
-            found = [m for m in lit.finditer(sql) if not in_data[m.start()]]
-            if len(calls) != len(found):
-                raise InvalidArgument(
-                    f"{fn}() requires literal arguments "
-                    f"(view_name, begin, end{'' if fn == 'retire_partitions' else ', partition_delta_seconds'})"
-                    " — they are evaluated at plan time"
-                )
-            matches += [(m, fn) for m in found]
-        if not matches:
-            return sql
-        matches.sort(key=lambda t: t[0].start())
-
-        # validation pass: every call's arguments check out before ANY op
-        # runs, so a bad third call can't leave the first two half-applied
-        todo = [(m, fn, *self._admin_op(fn, m.groups())) for m, fn in matches]
-
-        pieces, last = [], 0
-        for i, (m, fn, op, op_args) in enumerate(todo):
-            log = TaskLog()
-            try:
-                op(*op_args, log)
-            except Exception as e:
-                # the task's own failure is the log's final row; the
-                # statement succeeds and returns the log (reference
-                # producers catch and write the error, then close)
-                log.write(f"error: {e}")
-            tag = _hashlib.sha1(
-                f"{fn}\x00{m.group(0)}\x00{i}".encode("utf-8")
-            ).hexdigest()[:8]
-            name = f"_tasklog_{fn}_{tag}"
-            with self.planning_session() as spark:
-                log.to_df(spark).createOrReplaceTempView(name)
-            if created_views is not None:
-                created_views.append(name)
-            pieces.append(sql[last : m.start()])
-            pieces.append(name)
-            last = m.end()
-        pieces.append(sql[last:])
-        return "".join(pieces)
-
     def _admin_op(self, fn: str, args: tuple) -> tuple:
-        """One admin call's SQL literal arguments — (view, begin, end),
-        plus the partition delta in seconds for materialize/regenerate —
+        """One admin call's literal arguments — (view, begin, end), plus
+        the partition delta in seconds for materialize/regenerate —
         checked and turned into ``(op, op_args)``, ready to run with a
-        TaskLog. Both SQL spellings (the rewrite and the streamed DoGet
-        path) go through here, so they cannot drift apart. Timestamps
+        TaskLog (TaskLog.run). The planned and the streamed spelling
+        both go through here, so they cannot drift apart. Timestamps
         accept ISO strings or raw epoch-ns integer spellings; the delta
         must be positive and the view registered, both checked at plan
         time. materialize/regenerate run on lakehouse_for(spec), which
         binds the views the op reads when the op starts, in the planning
         session of the thread that runs it."""
-        view = args[0].replace("''", "'")
+        view = args[0]
         begin_ns, end_ns = _literal_ns(args[1]), _literal_ns(args[2])
         if fn == "retire_partitions":
             return self.lakehouse.retire_partitions, (view, begin_ns, end_ns)
-        delta = int(args[3])
+        delta = args[3]
         if delta <= 0:
             # materialize_range's bucket loop requires a positive
             # stride — 0 would divide by zero, negative never ends
@@ -783,38 +655,97 @@ class Engine:
 
         return op, (spec, begin_ns, end_ns, delta * 1_000_000_000)
 
-    def parse_streamable_admin_call(self, sql: str):
-        """The served path's STREAMING-eligible admin spelling: a statement
-        that is exactly one admin table-function call selected whole —
-        ``SELECT * FROM <fn>('view', 'begin', 'end'[, delta])`` — parsed,
-        validated and returned as ``(op, op_args)`` ready to run with a
-        caller-provided TaskLog; ``None`` for anything else (projections,
-        joins, WHERE, composed statements), which falls back to the
-        at-completion rewrite (_rewrite_admin_calls). This mirrors the
-        reference, whose TaskLogExecPlan streams exactly when the admin
-        call IS the plan root (task_log_exec_plan.rs:35-60); a composed
-        statement needs the full relation before Spark can plan over it.
+    def _plan(
+        self,
+        sql: str,
+        begin_ns: int | None,
+        end_ns: int | None,
+        args: dict | None = None,
+        execute: bool = True,
+    ) -> DataFrame:
+        """Plan ``sql`` over [begin, end) in this thread's planning
+        session and return the analyzed DataFrame. The one planning path:
+        resolve() plans for execution; PreparedStatement.schema() and the
+        server's GetFlightInfo / CreatePreparedStatement plan for schema
+        discovery (``execute=False``), with NULL parameter values.
 
-        Admin gating comes first ("not found" for non-admin), then the
-        rewrite's own argument checks (_admin_op). Arity mismatches
-        (materialize without a delta, retire with one) return None so the
-        rewrite raises its single authoritative literal-arguments error."""
-        _a = r"'((?:[^']|'')*)'"
-        m = re.fullmatch(
-            r"\s*SELECT\s+\*\s+FROM\s+"
-            r"(materialize_partitions|regenerate_partitions|retire_partitions)"
-            rf"\s*\(\s*{_a}\s*,\s*{_a}\s*,\s*{_a}\s*(?:,\s*(-?\d+)\s*)?\)\s*;?\s*",
-            sql,
-            re.I,
-        )
-        if not m:
-            return None
-        fn = m.group(1).lower()
-        has_delta = m.group(5) is not None
-        if (fn == "retire_partitions") == has_delta:
-            return None  # wrong arity → the rewrite's error path owns it
-        self.require_admin(fn)
-        return self._admin_op(fn, m.groups()[1:])
+        Each table-function call (table_function_calls) is evaluated at
+        plan time, as the reference does (view_instance_table_function.rs
+        :49-70, exp_to_string/exp_to_timestamp), and its text is
+        substituted with a temp view of the held session — the scan
+        never routes through a Python UDTF (udtfs.py:11 documents why
+        that spelling is the scale anti-pattern):
+
+        - ``view_instance`` becomes the instance's DataFrame, materialized
+          now (catalog-cached parquet, block-aware when the view set
+          declares blocks), once per distinct (set, instance). A
+          bucket-mode view set needs a range (InvalidArgument without
+          one): unranged, it would walk every hourly bucket of [0, 2^62);
+        - an admin call becomes its (time, msg) task log (S11;
+          materialize/tasklog.py). With ``execute`` the op runs now; in
+          schema discovery the log is empty — the admin gate and the
+          argument checks run, the op does not, so GetFlightInfo then
+          DoGet runs it once.
+
+        Every call's arguments check out (and every instance
+        materializes) before any op runs, so a bad third call cannot
+        leave the first two half-applied; the ops then run in source
+        order, so a statement mixing functions (retire then materialize)
+        observes its own left-to-right order against the shared catalog.
+        The substituted views are dropped once the statement is
+        analyzed: the analyzed plan holds their relations, and a view
+        left behind would pile up in the pooled session and keep an op's
+        output queryable by later statements."""
+        from micromegas_spark.materialize.tasklog import TaskLog
+
+        with self.planning_session() as spark:
+            calls = self.table_function_calls(sql)
+            lo = begin_ns if begin_ns is not None else 0
+            hi = end_ns if end_ns is not None else 2**62
+            instances: dict[tuple, DataFrame] = {}
+            evaluated = []
+            for c in calls:
+                if c.fn != "view_instance":
+                    evaluated.append(self._admin_op(c.fn, c.args))
+                    continue
+                vs = self._jit.get(c.args[0])
+                if begin_ns is None and vs is not None and vs.list_blocks is None:
+                    # bucket mode walks the range's hourly buckets: over
+                    # [0, 2^62) that is about 1.28 million of them
+                    raise InvalidArgument(
+                        f"view_instance({c.args[0]!r}, {c.args[1]!r}) needs a "
+                        "query range: its view set materializes the range's "
+                        "insert-time buckets"
+                    )
+                if c.args not in instances:
+                    instances[c.args] = self.view_instance(*c.args, lo, hi)
+                evaluated.append(instances[c.args])
+            names: list[str] = []
+            try:
+                pieces, last = [], 0
+                for i, (c, ev) in enumerate(zip(calls, evaluated)):
+                    if c.fn == "view_instance":
+                        # the catalog view's name is sanitized + hashed,
+                        # so distinct keys never share a view
+                        name, df = "_vi_" + instance_view(*c.args), ev
+                    else:
+                        log = TaskLog()
+                        if execute:
+                            log.run(*ev)
+                        name, df = f"_tasklog_{i}", log.to_df(spark)
+                    self._bind(spark, name, df)
+                    names.append(name)
+                    pieces += [sql[last : c.start], name]
+                    last = c.end
+                exec_sql = "".join(pieces) + sql[last:]
+                self.prepare_views(exec_sql, begin_ns, end_ns)
+                if not execute:
+                    # schema discovery plans with NULL parameter values
+                    args = {n: None for n in set(re.findall(r":(\w+)", sql))}
+                return spark.sql(exec_sql, args=args) if args else spark.sql(exec_sql)
+            finally:
+                for name in names:
+                    spark.catalog.dropTempView(name)
 
     def resolve(
         self,
@@ -824,39 +755,26 @@ class Engine:
         args: dict | None = None,
         query_id: str | None = None,
     ) -> DataFrame:
-        """Bind the statement's views to [begin, end) in a planning
-        session (planning_session) and analyze it there. Every execution path
-        (query(), the client's prepared-statement and convenience lookups)
+        """Plan the statement for execution over [begin, end) (_plan) and
+        record it in query_log. Every execution path (query(), the
+        client's prepared-statement and convenience lookups, DoGet)
         funnels here, so concurrent queries with different ranges each
         resolve against their OWN bounds without waiting on each other.
         Returns the eagerly-analyzed DataFrame; execution stays lazy."""
         query_id = query_id or uuid.uuid4().hex[:16]
         # job-group attribution for the per-query resource audit
         # (reference #1406 QueryAuditRecord): the group opens BEFORE
-        # prepare_views so JIT materialization / query_log-view jobs the
-        # planning itself triggers attribute to the query that caused
-        # them, and it is CLEARED on exit so later jobs on this thread
-        # never inherit a stale id. Execution-time jobs re-attribute at
-        # the call sites that actually collect (job_group(df) in
-        # Client/server/CLI paths, keyed off df._mm_query_id).
-        with (
-            job_group(self.spark.sparkContext, query_id, sql),
-            self.planning_session() as spark,
-        ):
+        # planning so JIT materialization / admin ops / query_log-view
+        # jobs the planning itself triggers attribute to the query that
+        # caused them, and it is CLEARED on exit so later jobs on this
+        # thread never inherit a stale id. Execution-time jobs
+        # re-attribute at the call sites that actually collect
+        # (job_group(df) in Client/server/CLI paths, keyed off
+        # df._mm_query_id).
+        with job_group(self.spark.sparkContext, query_id, sql):
             t0 = time.time()
-            tasklog_views: list[str] = []
             try:
-                # the reference's primary documented UX is SQL-spelled
-                # view_instance (view_instance_table_function.rs:49-70,
-                # args evaluated at PLAN time) — rewrite literal calls to
-                # pre-materialized temp views so reference queries run
-                # verbatim with zero data through Python
-                exec_sql = self._rewrite_view_instance(sql, begin_ns, end_ns)
-                # admin table functions (S11): literal calls run NOW and
-                # are substituted with their task-log relations
-                exec_sql = self._rewrite_admin_calls(exec_sql, tasklog_views)
-                self.prepare_views(exec_sql, begin_ns, end_ns)
-                out = spark.sql(exec_sql, args=args) if args else spark.sql(exec_sql)
+                out = self._plan(sql, begin_ns, end_ns, args)
             except Exception as e:
                 # failed plans still leave an audit record with the #1435
                 # classification, so query_failed-style monitoring can key
@@ -868,16 +786,6 @@ class Engine:
                     query_id, classify_exception(e),
                 )
                 raise
-            finally:
-                # task-log temp views are statement-scoped: the analyzed
-                # plan above holds the resolved LocalRelation, so the
-                # catalog name can (and must) go away — otherwise the
-                # admin op's output stays queryable by later statements
-                for name in tasklog_views:
-                    try:
-                        spark.catalog.dropTempView(name)
-                    except Exception:
-                        pass
             # self-observability: the reference's analytics service emits a
             # span per executed query into its own telemetry ("sql spans
             # on", query.rs:207-256; spans land in the lake like any
@@ -1194,22 +1102,22 @@ class Engine:
             )
         vs = self._jit[view_set]
         view = instance_view(view_set, instance)
+        lake = self.lakehouse
         if vs.list_blocks is not None:
             parts = self._view_instance_blocks(vs, instance, view, begin_ns, end_ns)
+            live = parts or lake.list_partitions(view)
         else:
-            lake = self.lakehouse
             lake.materialize_range(
                 _InstanceSpec(view, vs.time_column, vs, instance),
                 begin_ns, end_ns, bucket_ns,
             )
             lo = begin_ns - begin_ns % bucket_ns
+            live = lake.list_partitions(view)
             parts = [
-                p
-                for p in lake.list_partitions(view)
-                if p.begin_insert_ns < end_ns and p.end_insert_ns > lo
+                p for p in live if p.begin_insert_ns < end_ns and p.end_insert_ns > lo
             ]
         if not parts:
-            return self.spark.range(0).select()
+            return _typed_empty(self.spark, live)
         return _scan(self.spark, parts).where(
             (F.col(vs.time_column) >= begin_ns) & (F.col(vs.time_column) < end_ns)
         )

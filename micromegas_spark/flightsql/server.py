@@ -28,6 +28,7 @@ SessionContexts.
 from __future__ import annotations
 
 import json
+import re
 from typing import TYPE_CHECKING
 
 from micromegas_spark.flightsql import pb
@@ -36,6 +37,20 @@ if TYPE_CHECKING:  # pragma: no cover
     from micromegas_spark.engine import Engine
 
 _HEADERS_KEY = "micromegas-headers"
+
+
+def _selects_one_admin_call(sql: str, calls) -> bool:
+    """Whether ``sql`` is one admin table-function call selected whole —
+    ``SELECT * FROM <call>`` plus an optional ``;``, nothing else but
+    whitespace — given the calls the engine's scan found in it
+    (Engine.table_function_calls)."""
+    if len(calls) != 1 or calls[0].fn == "view_instance":
+        return False
+    c = calls[0]
+    return bool(
+        re.fullmatch(r"\s*select\s*\*\s*from\s*", sql[: c.start], re.I)
+        and re.fullmatch(r"\s*;?\s*", sql[c.end :])
+    )
 
 
 def _flight():
@@ -310,11 +325,13 @@ class FlightSQLServer:
             pass
         return raw.decode("utf-8")
 
-    def _schema_for(self, sql: str):
-        """Result schema without executing (prepared-statement purpose)."""
-        from micromegas_spark.client import Client, PreparedStatement
+    def _schema_for(self, sql: str, context):
+        """Result schema without executing (prepared-statement purpose),
+        planned over the call's query range like DoGet (Engine._plan)."""
+        from micromegas_spark.client import _arrow_schema
 
-        return PreparedStatement(Client(self.engine), sql).schema()
+        begin_ns, end_ns, _ = self._call_options(context)
+        return _arrow_schema(self.engine._plan(sql, begin_ns, end_ns, execute=False))
 
     # -- RPC handlers ------------------------------------------------------
 
@@ -335,13 +352,21 @@ class FlightSQLServer:
         query_id = uuid.uuid4().hex[:16]
         df = None
         try:
-            # S11 streaming (VERDICT r9 #3): a pure admin-call statement
-            # streams its task log per bucket WHILE the op runs — the
-            # reference's mpsc → AsyncLogStream shape — instead of the
-            # embedded path's at-completion relation
-            parsed = self.engine.parse_streamable_admin_call(sql)
-            if parsed is not None:
-                return self._stream_task_log(parsed, sql, query_id)
+            # S11 streaming (VERDICT r9 #3): a statement that is one admin
+            # call selected whole streams its task log per bucket WHILE
+            # the op runs — the reference's mpsc → AsyncLogStream shape,
+            # which streams exactly when the call IS the plan root
+            # (task_log_exec_plan.rs:35-60). Any other statement plans
+            # through resolve(), where the log is an at-completion
+            # relation Spark can compose over.
+            try:
+                calls = self.engine.table_function_calls(sql)
+            except Exception:
+                # a rejected call: resolve() raises the same error and
+                # writes its classified query_log record
+                calls = []
+            if _selects_one_admin_call(sql, calls):
+                return self._stream_task_log(calls[0], sql, query_id)
             df = self.engine.resolve(sql, begin_ns, end_ns, query_id=query_id)
             schema = _arrow_schema(df)
             if preserve:
@@ -402,18 +427,19 @@ class FlightSQLServer:
             )
         return flight.GeneratorStream(schema, served())
 
-    def _stream_task_log(self, parsed, sql: str, query_id: str):
-        """Stream an admin op's (time, msg) log per bucket AS IT RUNS —
+    def _stream_task_log(self, call, sql: str, query_id: str):
+        """Stream an admin call's (time, msg) log per bucket AS IT RUNS —
         the served-path closure of S11's documented delta (reference:
         ``dfext/task_log_exec_plan.rs:35-60`` feeds an AsyncLogStream
         from an mpsc channel while the spawned task progresses; here a
         queue-backed TaskLog feeds DoGet one record batch per progress
-        row while the op runs on a worker thread). Failure semantics
-        match the rewrite path: the op's own error becomes the final log
-        row and the stream completes cleanly (reference producers catch
-        and write, then close). The embedded (non-served) path keeps
-        at-completion semantics — a Spark temp-view relation cannot emit
-        partial batches (materialize/tasklog.py docstring)."""
+        row while the op runs on a worker thread). The arguments are
+        checked first (Engine._admin_op, as on the planned path), and
+        the op runs through TaskLog.run, so its own error becomes the
+        final log row and the stream completes cleanly (reference
+        producers catch and write, then close). The embedded (non-served)
+        path keeps at-completion semantics — a Spark temp-view relation
+        cannot emit partial batches (materialize/tasklog.py docstring)."""
         import queue as _queue
         import threading
         import time as _time
@@ -424,7 +450,7 @@ class FlightSQLServer:
         from micromegas_spark.materialize.tasklog import TaskLog
 
         flight = _flight()
-        op, op_args = parsed
+        op, op_args = self.engine._admin_op(call.fn, call.args)
         q: _queue.SimpleQueue = _queue.SimpleQueue()
         done = object()
 
@@ -442,9 +468,7 @@ class FlightSQLServer:
                 # The op binds its views and holds the planning session
                 # they live in for its whole run, on this worker thread.
                 with job_group(self.engine.spark.sparkContext, query_id, sql):
-                    op(*op_args, log)
-            except Exception as e:
-                log.write(f"error: {e}")
+                    log.run(op, op_args)
             finally:
                 q.put(done)
 
@@ -507,7 +531,7 @@ class FlightSQLServer:
         flight = _flight()
         sql = self._ticket_sql(descriptor.command)
         try:
-            schema = self._schema_for(sql)
+            schema = self._schema_for(sql, context)
         except Exception as e:
             # plan-time failures (unknown column, syntax) are the caller's:
             # InvalidArgument with the Spark line/column pointer + query_id
@@ -529,7 +553,7 @@ class FlightSQLServer:
             _, value = pb.unpack_any(body)
             sql = pb.decode_fields(value).get(1, [b""])[0].decode("utf-8")
             try:
-                schema = self._schema_for(sql)
+                schema = self._schema_for(sql, context)
             except Exception as e:
                 _cls, err = to_flight_error(e, uuid.uuid4().hex[:16])
                 raise err from None

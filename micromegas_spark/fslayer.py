@@ -83,23 +83,13 @@ class WarehouseFS:
             return "/" + rest.lstrip("/")
         return rest
 
-    @staticmethod
-    def norm_url(url: str) -> str:
-        """Normalization for path-equality (retire_partition_by_file):
-        URL schemes keep their spelling minus trailing slashes; plain
-        paths normalize via the OS rules."""
-        if "://" in url:
-            scheme, rest = url.split("://", 1)
-            return scheme + "://" + os.path.normpath("/" + rest.lstrip("/"))
-        return os.path.normpath(url)
-
     def canon(self, url: str) -> str:
         """Canonical spelling for path-SET membership (the vacuum live
         sets, retire_partition_by_file): every way a manifest entry may
         spell one location — relative plain path (pre-fslayer manifests
         wrote os.path.join output), absolute plain path, file:// URL, or
-        the configured root URL — maps to ONE string. norm_url alone is
-        spelling-sensitive ('wh/v/d' vs '/abs/wh/v/d' vs
+        the configured root URL — maps to ONE string. Normalizing each
+        spelling on its own is not enough ('wh/v/d' vs '/abs/wh/v/d' vs
         'file:///abs/wh/v/d' all name the same dir but compare unequal),
         which made vacuum treat live legacy entries as orphans. Canonical
         form is the pyarrow-native path, absolutized on local
@@ -189,7 +179,7 @@ class WarehouseFS:
         and whose newest mtime is at least ``min_age_seconds`` old.
         Returns entries removed.
 
-        Membership is by canon, not norm_url: manifests written by older
+        Membership is by canon, not by the spelling: manifests written by older
         code spell a committed dir relative, plain-absolute or file://,
         and a spelling mismatch here would delete COMMITTED data (ADVICE
         r10). Unknown age (object-store dir markers carry no mtime)

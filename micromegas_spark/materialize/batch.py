@@ -277,6 +277,15 @@ def _scan(spark: SparkSession, parts: list["Partition"]) -> DataFrame:
     return spark.read.parquet(*paths)
 
 
+def _typed_empty(spark: SparkSession, live: list["Partition"]) -> DataFrame:
+    """The read of a range no partition covers: the schema of one of the
+    view's ``live`` partitions with every row filtered out, so column
+    references still resolve; schema-less only when the view has none."""
+    if not live:
+        return spark.range(0).select()
+    return _scan(spark, live[:1]).where(F.lit(False))
+
+
 # Column-predicate operators of Lakehouse.read: op → (row filter, stats
 # test). The stats test says whether a partition whose column lies in
 # [mn, mx] can hold a row the filter keeps.
@@ -936,7 +945,7 @@ class Lakehouse:
         the reference keeps it for compatibility and steers users to the
         metadata variant): retire the single partition whose storage path
         matches, across all view sets. Returns partitions retired (0/1)."""
-        # canon, not norm_url: the caller's spelling and the manifest's
+        # canon, not the spelling: the caller's spelling and the manifest's
         # may differ in scheme/absoluteness for the same dir (ADVICE r10)
         norm = self.fs.canon(path)
         for view in self.list_view_sets():
@@ -1126,13 +1135,9 @@ class Lakehouse:
             test = _COLUMN_OPS[op][1]
             parts = [p for p in parts if _stats_can_match(p, col, test, val)]
         if not parts:
-            # typed empty result: the schema of one live partition, every
-            # row filtered out — column references still resolve;
-            # schema-less only when the view has none
-            live = self._pruned_partitions(view, schema_hash)
-            if not live:
-                return self.spark.range(0).select()
-            return _scan(self.spark, live[:1]).where(F.lit(False))
+            return _typed_empty(
+                self.spark, self._pruned_partitions(view, schema_hash)
+            )
         df = _scan(self.spark, parts)
         if time_column:
             if begin_event_ns is not None:

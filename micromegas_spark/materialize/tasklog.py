@@ -8,14 +8,14 @@ operation's PROGRESS LOG as the query's result table, schema
 ``(time: Timestamp, msg: Utf8)``; the spawned task catches its own
 failure and writes the error message as the final log row — the query
 still succeeds with the error as the last ``(time, msg)`` entry
-(matched here: engine.py ``_rewrite_admin_calls`` wraps the op and
-appends ``error: ...`` on exception). Argument errors raise at plan
-time in both systems.
+(matched here: :meth:`TaskLog.run` runs the op and appends
+``error: ...`` on exception). Argument errors raise at plan time in
+both systems.
 
 Spark-first shape: these ops are driver-side catalog mutations whose
 unit of progress is the partition bucket. A :class:`TaskLog` collects
-``(time, msg)`` rows as the op runs, and the engine's SQL rewrite
-(engine.py ``_rewrite_admin_calls``) registers the finished log as the
+``(time, msg)`` rows as the op runs, and the engine's one planning
+path (engine.py ``Engine._plan``) binds the finished log as the
 statement's result relation, so the reference's documented admin UX —
 ``SELECT * FROM materialize_partitions('view', 'begin', 'end', delta)``
 streams its own progress back — runs verbatim.
@@ -58,6 +58,16 @@ class TaskLog:
 
     def write(self, msg: str) -> None:
         self.rows.append((time.time_ns(), str(msg)))
+
+    def run(self, op, args: tuple) -> None:
+        """Run ``op(*args, self)``. The op's own failure becomes the
+        log's final row, ``error: ...``, and does not raise: the
+        statement succeeds and returns the log (the reference's
+        producers catch and write the error, then close)."""
+        try:
+            op(*args, self)
+        except Exception as e:
+            self.write(f"error: {e}")
 
     def to_df(self, spark: "SparkSession") -> "DataFrame":
         """The log as the reference's result schema: (time TIMESTAMP, msg

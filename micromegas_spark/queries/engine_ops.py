@@ -421,7 +421,8 @@ def events_jit_sql_view_instance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's PRIMARY documented JIT UX — ``SELECT ... FROM
     view_instance('thread_spans', id)`` as SQL TEXT
     (view_instance_table_function.rs:49-70; python-api.md's query_spans
-    examples) — through Engine.resolve's plan-time rewrite: literal
+    examples) — through Engine.resolve's plan-time evaluation
+    (Engine._plan): literal
     view_instance() calls materialize via the existing Python JIT path
     (block-aware grouping, catalog cache) and substitute as temp views,
     so a reference user's query runs VERBATIM with zero data through

@@ -145,14 +145,19 @@ def test_unknown_table_surfaces_as_arrow_invalid(client):
 
 
 def test_failed_plan_leaves_classified_audit_record(engine, client):
-    with pytest.raises(pa.lib.ArrowInvalid) as ei:
-        client.query("SELECT nope FROM orders")
-    qid = re.search(r"\[query_id=([0-9a-f]+)\]", str(ei.value)).group(1)
+    """A failed plan leaves a query_log record classified 'user' — a
+    table-function call refused at plan time (a non-literal argument)
+    included, which DoGet's streaming check scans before planning."""
+    qids = []
+    for sql in ("SELECT nope FROM orders", "SELECT * FROM view_instance(col, 'x')"):
+        with pytest.raises(pa.lib.ArrowInvalid) as ei:
+            client.query(sql)
+        qids.append(re.search(r"\[query_id=([0-9a-f]+)\]", str(ei.value)).group(1))
     log = {
         r["query_id"]: r
         for r in engine.query("SELECT query_id, error_class FROM query_log").collect()
     }
-    assert log[qid]["error_class"] == "user"
+    assert [log[q]["error_class"] for q in qids] == ["user", "user"]
 
 
 def test_query_audit_reports_nonzero_peak_memory(engine, client):

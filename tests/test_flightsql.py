@@ -458,6 +458,25 @@ def test_tasklog_streams_batches_while_op_runs(spark, tmp_path_factory):
     assert seen_partitions[0] < seen_partitions[-1]
 
 
+def test_streamed_spelling_is_one_admin_call_selected_whole(engine):
+    """DoGet streams the task log when the statement is SELECT * FROM one
+    admin call (plus an optional ';' and whitespace); any other text, a
+    comment included, sends it down the planned path."""
+    from micromegas_spark.flightsql.server import _selects_one_admin_call
+
+    call = "materialize_partitions('v', '0', '1', 60)"
+    for sql, streams in (
+        (f"SELECT * FROM {call}", True),
+        (f" select *\n from {call} ;\n", True),
+        (f"/* req=7 */ SELECT * FROM {call}", False),
+        (f"SELECT msg FROM {call}", False),
+        (f"SELECT * FROM {call} WHERE msg LIKE '%x%'", False),
+        (f"SELECT * FROM {call} a CROSS JOIN {call} b", False),
+        ("SELECT * FROM view_instance('a', 'b')", False),
+    ):
+        assert _selects_one_admin_call(sql, engine.table_function_calls(sql)) is streams
+
+
 def test_tasklog_stream_failure_is_final_row(spark, tmp_path_factory):
     """Op failure on the streamed path: the error message is the final
     (time, msg) row and the stream completes cleanly (the reference's
@@ -505,3 +524,93 @@ def test_tasklog_stream_admin_gate_and_bad_delta(spark, tmp_path_factory):
                     f"SELECT * FROM materialize_partitions('log_stats', '{lo}', '{hi}', 3600)".encode()
                 )
             ).read_all()
+
+
+def test_table_function_schema_discovery(spark, tmp_path_factory, monkeypatch):
+    """GetFlightInfo and CreatePreparedStatement plan the table-function
+    spellings the way DoGet does: view_instance materializes at plan time,
+    an admin call is gated and its arguments checked, but the op runs
+    only on DoGet — discovery then DoGet commits each bucket once. A
+    bucket-mode view_instance is planned over the call's query range,
+    walking only its buckets; with no range it is refused before any
+    bucket is looked at (over [0, 2^62) the walk would never end)."""
+    from micromegas_spark.engine import JitViewSet
+    from micromegas_spark.materialize.batch import Lakehouse
+
+    wh = str(tmp_path_factory.mktemp("flight_tf_schema"))
+    eng, lo, hi, n_buckets = _admin_engine_with_logstats(spark, wh)
+    eng.register_jit_view_set(
+        JitViewSet(
+            "vs",
+            source_count=lambda *_: 0,
+            build=lambda *_: None,
+            time_column="t",
+            list_blocks=lambda inst, b, e: [
+                {"block_id": "b0", "begin_ns": 0, "end_ns": 10, "insert_ns": 0, "nb_objects": 2}
+            ],
+            build_blocks=lambda inst, ids: spark.createDataFrame(
+                [(1, inst), (2, inst)], "t BIGINT, inst STRING"
+            ),
+        )
+    )
+    commits: list[str] = []
+    real_commit = Lakehouse._commit_delta
+
+    def counting_commit(self, view, *a, **kw):
+        commits.append(view)
+        return real_commit(self, view, *a, **kw)
+
+    counted: list[int] = []
+
+    def source_count(inst, b, e):
+        counted.append(b)
+        return 2
+
+    eng.register_jit_view_set(
+        JitViewSet(
+            "vb",
+            source_count=source_count,
+            build=lambda inst, b, e: spark.createDataFrame(
+                [(b, inst), (b + 1, inst)], "t BIGINT, inst STRING"
+            ),
+            time_column="t",
+        )
+    )
+    monkeypatch.setattr(Lakehouse, "_commit_delta", counting_commit)
+    vi = "SELECT * FROM view_instance('vs', 'p1')"
+    mat = f"SELECT * FROM materialize_partitions('log_stats', '{lo}', '{hi}', 3600)"
+    tables = {}
+    with FlightSQLServer(eng) as srv, FlightSQLClient(srv.uri) as c:
+        for sql in (vi, mat):
+            info = c.get_flight_info(sql).schema
+            prepared = c.prepare_statement(sql).dataset_schema
+            assert "log_stats" not in commits  # discovery ran no op
+            tables[sql] = c.query_arrow(sql)
+            assert info == prepared == tables[sql].schema
+        vb = "SELECT t, inst FROM view_instance('vb', 'p')"
+        utc = datetime.timezone.utc
+        two_hours = [datetime.datetime.fromtimestamp(s, utc) for s in (0, 7_200)]
+        desc = flight.FlightDescriptor.for_command(pb.command_statement_query(vb))
+        info = c._client.get_flight_info(desc, options=c._options(*two_hours)).schema
+        assert 0 < len(counted) <= 2  # the range's two hourly buckets
+        assert info.names == ["t", "inst"]
+        assert c.query_arrow(vb, *two_hours).schema == info
+        counted.clear()
+        for unranged in (c.get_flight_info, c.prepare_statement, c.query_arrow):
+            with pytest.raises(pa.lib.ArrowInvalid, match="needs a query range"):
+                unranged(vb)
+        assert counted == []
+    assert tables[vi].column("inst").to_pylist() == ["p1", "p1"]
+    msgs = tables[mat].column("msg").to_pylist()
+    # one row per bucket decision + the summary row, from one run
+    assert len(msgs) == n_buckets + 1 and msgs[-1].startswith("log_stats: done,")
+    created = [m for m in msgs if m.endswith(": created")]
+    assert created and len(set(created)) == len(created)
+    assert commits.count("log_stats") == len(created)
+    assert len(eng.lakehouse.list_partitions("log_stats")) == len(created)
+
+    non = Engine(spark, warehouse=wh + "_na", admin=False)
+    with FlightSQLServer(non) as srv, FlightSQLClient(srv.uri) as c:
+        for discover in (c.get_flight_info, c.prepare_statement):
+            with pytest.raises(flight.FlightError, match="not found"):
+                discover(mat)

@@ -354,8 +354,7 @@ def test_view_instance_sql_rewrite_literal(spark, tmp_path):
         "SELECT COUNT(*) AS n FROM view_instance('ordered_view', 's1')"
     ).collect()
     assert out[0]["n"] == 2
-    # repeat query reuses the catalog-cached partition and the same
-    # temp-view slot (no unbounded _vi_* growth)
+    # repeat query reuses the catalog-cached partition
     out2 = eng.query(
         "SELECT SUM(begin_ns) AS s FROM view_instance('ordered_view', 's1')"
     ).collect()
@@ -429,9 +428,10 @@ def test_view_instance_rewrite_comment_and_boundary_awareness(spark, tmp_path):
     ).collect()[0]
     assert row["n"] == 2
     # block comment (nested, Spark 3.0+ grammar) around a literal call:
-    # must NOT materialize a second view; the statement rebinds the one
-    # `_vi_` slot of the engine's planning session without rebuilding it,
-    # and no slot ever lands in the parent session
+    # must NOT materialize a second view; the statement reads the cached
+    # partition without rebuilding it, and its `_vi_` view lives only
+    # while the statement is analyzed — none is left in the engine's
+    # planning session, and none ever lands in the parent session
     with eng.planning_session() as session:
         before = vi_views(session)
     row2 = eng.query(
@@ -440,7 +440,7 @@ def test_view_instance_rewrite_comment_and_boundary_awareness(spark, tmp_path):
     ).collect()[0]
     assert row2["s"] == 12
     with eng.planning_session() as session:
-        assert len(before) == 1 and vi_views(session) == before
+        assert before == set() and vi_views(session) == before
     assert builds == ["s1"]  # cached partition reused; commented set never built
     assert vi_views(spark) == set()
     # identifier boundary: my_view_instance is not our function — the

@@ -137,3 +137,29 @@ def test_catalog_reads_start_no_schema_inference_job(spark, tmp_path):
         ) == 0
     finally:
         spark.catalog.dropTempView(src)
+
+
+def test_view_instance_over_a_range_with_no_partition_is_typed(spark, tmp_path):
+    """An empty time range must still plan: a view_instance read over a
+    range where the instance has no partition keeps the schema of a live
+    partition (Lakehouse.read's rule), so column references resolve."""
+
+    def build(inst, b, e):
+        return spark.range(2).select(
+            (F.col("id") + b).alias("t"), F.lit(inst).alias("inst")
+        )
+
+    eng = Engine(spark, warehouse=str(tmp_path / "wh"))
+    eng.register_jit_view_set(
+        JitViewSet(
+            "vs",
+            source_count=lambda inst, b, e: 2 if b < HOUR else 0,
+            build=build,
+            time_column="t",
+        )
+    )
+    sql = "SELECT t, inst FROM view_instance('vs', 'p')"
+    assert len(eng.query(sql, 0, HOUR).collect()) == 2
+    empty = eng.query(sql, 5 * HOUR, 6 * HOUR)
+    assert empty.columns == ["t", "inst"]
+    assert empty.collect() == []

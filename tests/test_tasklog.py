@@ -195,21 +195,43 @@ def test_tasklog_temp_views_are_statement_scoped(admin_engine):
     """ADVICE r9: the _tasklog_* temp views must not outlive their
     statement — otherwise the admin op's output stays queryable by later
     statements on the thread — and never reach the parent session, which
-    other Engines (a non-admin one included) share."""
+    other Engines (a non-admin one included) share. The same holds for
+    the _vi_* views view_instance calls are substituted with: statements
+    over N distinct instances leave none behind in the pooled session."""
+    from micromegas_spark.engine import JitViewSet
+
     eng, lo, hi = admin_engine
-    df = eng.query(
-        f"SELECT * FROM materialize_partitions('log_stats', '{lo}', '{hi}', 3600)"
+    eng.register_jit_view_set(
+        JitViewSet(
+            "vs",
+            source_count=lambda inst, b, e: 1,
+            build=lambda inst, b, e: eng.spark.createDataFrame(
+                [(b, inst)], "t BIGINT, inst STRING"
+            ),
+            time_column="t",
+        )
     )
+    dfs = [
+        eng.query(
+            f"SELECT * FROM materialize_partitions('log_stats', '{lo}', '{hi}', 3600)"
+        )
+    ]
+    n = 4
+    dfs += [
+        eng.query(f"SELECT t, inst FROM view_instance('vs', 'p{i}')", 0, HOUR)
+        for i in range(n)
+    ]
     with eng.planning_session() as planning:
         for session in (planning, eng.spark):
             leftovers = [
                 t.name
                 for t in session.catalog.listTables()
-                if t.name.startswith("_tasklog_")
+                if t.name.startswith(("_tasklog_", "_vi_"))
             ]
             assert leftovers == []
     # the analyzed plan holds the resolved relation: still collectable
-    assert len(df.collect()) >= 1
+    assert len(dfs[0].collect()) >= 1
+    assert [df.collect()[0].inst for df in dfs[1:]] == [f"p{i}" for i in range(n)]
 
 
 def test_task_failure_becomes_final_log_row(admin_engine):
@@ -254,7 +276,7 @@ def test_escaped_string_literals_mode_is_loud(admin_engine):
                 f"SELECT * FROM materialize_partitions('log_stats', '{lo}', '{hi}', 3600)"
             )
         with pytest.raises(InvalidArgument, match="escapedStringLiterals"):
-            eng._rewrite_view_instance("SELECT * FROM view_instance('a', 'b')", 0, 1)
+            eng.query("SELECT * FROM view_instance('a', 'b')", 0, 1)
     finally:
         eng.spark.conf.unset(conf)
     # back to default: the same statement plans fine again

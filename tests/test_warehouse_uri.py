@@ -47,7 +47,6 @@ def test_fslayer_url_path_mapping(tmp_path):
     # foreign spellings still map (legacy manifests hold plain paths)
     assert fs.fs_path("/plain/abs") == "/plain/abs"
     assert fs.fs_path("s3a://bucket/k") == "bucket/k"
-    assert WarehouseFS.norm_url("file:///a//b/") == "file:///a/b"
     u1, u2 = fs.unique_dir_url("v", "1_2"), fs.unique_dir_url("v", "1_2")
     assert u1 != u2  # never-reused data paths
 
