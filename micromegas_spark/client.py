@@ -221,16 +221,17 @@ class Client:
         self.engine.register_table(table_name, self.engine.spark.read.parquet(out))
         return len(data)
 
+    def _admin(self, fn: str, *args):
+        """Run a partition-admin op, built like every other spelling of
+        it by Engine.admin_op (gate, argument and delta checks)."""
+        op, op_args = self.engine.admin_op(fn, *args)
+        return op(*op_args)
+
     def retire_partitions(self, view_set_name: str, begin, end) -> int:
         """Admin: drop materialized partitions inside the insert-time range
         (functions-reference.md retire_partitions UDTF; F20). Returns the
         number retired."""
-        from micromegas_spark.timeutils import to_epoch_ns
-
-        self.engine.require_admin("retire_partitions")
-        return self.engine.lakehouse.retire_partitions(
-            view_set_name, to_epoch_ns(begin), to_epoch_ns(end)
-        )
+        return self._admin("retire_partitions", view_set_name, begin, end)
 
     def retire_partition_by_metadata(
         self, view_set_name: str, view_instance_id: str, begin, end
@@ -239,53 +240,29 @@ class Client:
         identifiers (functions-reference.md retire_partition_by_metadata
         — the preferred admin spelling; by_file is the compatibility
         path)."""
-        from micromegas_spark.timeutils import to_epoch_ns
-
-        self.engine.require_admin("retire_partition_by_metadata")
-        return self.engine.lakehouse.retire_partition_by_metadata(
-            view_set_name, view_instance_id, to_epoch_ns(begin), to_epoch_ns(end)
+        return self._admin(
+            "retire_partition_by_metadata", view_set_name, view_instance_id, begin, end
         )
 
     def retire_partition_by_file(self, file_path: str) -> int:
         """Admin: retire the single partition at this storage path
         (functions-reference.md retire_partition_by_file; kept for
         compatibility — prefer retire_partitions by metadata)."""
-        self.engine.require_admin("retire_partition_by_file")
-        return self.engine.lakehouse.retire_partition_by_file(file_path)
+        return self._admin("retire_partition_by_file", file_path)
 
     def materialize_partitions(
         self, view_name: str, begin, end, partition_delta_seconds: int
     ) -> dict:
         """Admin: materialize aligned insert-time buckets for a registered
         batch view (skips fresh ones — the maintenance tick semantics)."""
-        from micromegas_spark.timeutils import to_epoch_ns
-
-        self.engine.require_admin("materialize_partitions")
-        spec = self.engine.batch_view(view_name)
-        with self.engine.lakehouse_for(spec) as lake:
-            return lake.materialize_range(
-                spec,
-                to_epoch_ns(begin),
-                to_epoch_ns(end),
-                partition_delta_seconds * 1_000_000_000,
-            )
+        return self._admin("materialize_partitions", view_name, begin, end, partition_delta_seconds)
 
     def regenerate_partitions(
         self, view_name: str, begin, end, partition_delta_seconds: int
     ) -> dict:
         """Admin: force-rebuild buckets bypassing the freshness check
         (batch_update.rs:278-356)."""
-        from micromegas_spark.timeutils import to_epoch_ns
-
-        self.engine.require_admin("regenerate_partitions")
-        spec = self.engine.batch_view(view_name)
-        with self.engine.lakehouse_for(spec) as lake:
-            return lake.regenerate_partitions(
-                spec,
-                to_epoch_ns(begin),
-                to_epoch_ns(end),
-                partition_delta_seconds * 1_000_000_000,
-            )
+        return self._admin("regenerate_partitions", view_name, begin, end, partition_delta_seconds)
 
 
 class PreparedStatement:

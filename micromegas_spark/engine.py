@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from micromegas_spark.flightsql.errors import InvalidArgument
 
+import datetime
+import inspect
 import json
 import os
 import queue
@@ -193,26 +195,53 @@ def _sql_data_spans(sql: str) -> list[bool]:
     return data
 
 
-def _literal_ns(lit: str) -> int:
-    """An admin call's timestamp literal → epoch ns: raw epoch-ns integer
-    spellings or ISO strings."""
+def _epoch_ns(value) -> int:
+    """A partition-admin timestamp → epoch ns: an epoch-ns int or digit
+    string, an ISO / RFC 3339 string, or a tz-aware datetime or pandas
+    Timestamp (timeutils.to_epoch_ns)."""
     from micromegas_spark.timeutils import to_epoch_ns
 
-    lit = lit.strip()
-    if re.fullmatch(r"-?\d+", lit):
-        return int(lit)
-    return to_epoch_ns(lit)
+    if isinstance(value, str):
+        value = value.strip()
+        if re.fullmatch(r"-?\d+", value):
+            return int(value)
+    try:
+        return to_epoch_ns(value)
+    except ValueError as e:  # fromisoformat's bare ValueError included
+        raise InvalidArgument(f"unreadable timestamp {value!r}: {e}") from None
 
+
+_TIME = (int, str, datetime.datetime)  # a timestamp (_epoch_ns); SQL: a string
+_RANGE = (("begin", _TIME), ("end", _TIME))
+_DELTA = ("partition_delta_seconds", int)
+
+# The partition-admin ops (the reference's admin-gated table functions,
+# query.rs:150-175), built by Engine.admin_op: name → (the Lakehouse
+# method it runs, its parameters and types, whether SQL spells it).
+_ADMIN_OPS: dict[str, tuple[str, tuple, bool]] = {
+    "retire_partitions": ("retire_partitions", (("view_set_name", str), *_RANGE), True),
+    "materialize_partitions": ("materialize_range", (("view_name", str), *_RANGE, _DELTA), True),
+    "regenerate_partitions": (
+        "regenerate_partitions", (("view_name", str), *_RANGE, _DELTA), True
+    ),
+    "retire_partition_by_metadata": (
+        "retire_partition_by_metadata",
+        (("view_set_name", str), ("view_instance_id", str), *_RANGE),
+        False,
+    ),
+    "retire_partition_by_file": ("retire_partition_by_file", (("file_path", str),), False),
+}
 
 # The plan-time table functions (the reference's table-function registry,
 # query.rs:104-176): name → its (argument, type) list. Their arguments
 # must be literals; they are evaluated when the statement is planned.
-_ADMIN_ARGS = (("view_name", str), ("begin", str), ("end", str))
 _TABLE_FNS: dict[str, tuple[tuple[str, type], ...]] = {
     "view_instance": (("view_set", str), ("instance_id", str)),
-    "retire_partitions": _ADMIN_ARGS,
-    "materialize_partitions": _ADMIN_ARGS + (("partition_delta_seconds", int),),
-    "regenerate_partitions": _ADMIN_ARGS + (("partition_delta_seconds", int),),
+    **{
+        fn: tuple((p, int if t is int else str) for p, t in params)
+        for fn, (_, params, sql) in _ADMIN_OPS.items()
+        if sql
+    },
 }
 _CALL_HEAD = re.compile(r"(?<![A-Za-z0-9_])(%s)\s*\(" % "|".join(_TABLE_FNS), re.I)
 # a literal: single-quoted with '' escaping (Spark grammar), or an integer
@@ -402,6 +431,7 @@ class Engine:
         self._views: dict[str, ViewBuilder] = {}
         self._time_columns: dict[str, str] = {}
         self._jit: dict[str, JitViewSet] = {}
+        self._batch_views: dict[str, object] = {}
         # bounded: a long-lived engine must not grow per-query driver
         # state without limit (and the view re-materialization cost is
         # proportional to the log length)
@@ -509,7 +539,7 @@ class Engine:
             # the is_admin block; its functions-reference.md marks only
             # retire/materialize/regenerate/retire_partition_by_file as
             # 'Requires admin'), so the admin gate lives solely on the mutating
-            # surface (require_admin in client.py / Lakehouse)
+            # surface (require_admin in admin_op)
             builtin = {
                 "query_log": lambda b, e: self._query_log_df(),
                 "list_partitions": lambda b, e: self.lakehouse.partitions_df(),
@@ -621,37 +651,53 @@ class Engine:
                 "Python API directly"
             )
 
-    def _admin_op(self, fn: str, args: tuple) -> tuple:
-        """One admin call's literal arguments — (view, begin, end), plus
-        the partition delta in seconds for materialize/regenerate —
-        checked and turned into ``(op, op_args)``, ready to run with a
-        TaskLog (TaskLog.run). The planned and the streamed spelling
-        both go through here, so they cannot drift apart. Timestamps
-        accept ISO strings or raw epoch-ns integer spellings; the delta
-        must be positive and the view registered, both checked at plan
-        time. materialize/regenerate run on lakehouse_for(spec), which
-        binds the views the op reads when the op starts, in the planning
-        session of the thread that runs it."""
-        view = args[0]
-        begin_ns, end_ns = _literal_ns(args[1]), _literal_ns(args[2])
-        if fn == "retire_partitions":
-            return self.lakehouse.retire_partitions, (view, begin_ns, end_ns)
-        delta = args[3]
+    def admin_op(self, fn: str, *args, **kwargs) -> tuple:
+        """The one builder of a partition-admin op (_ADMIN_OPS): its
+        arguments, positional or by parameter name, checked and turned
+        into ``(op, op_args)`` — run with a TaskLog by the SQL call
+        (planned or streamed), as ``op(*op_args)`` by Client and the
+        DoActions. In order: the admin gate; the arguments against the
+        op's parameter names and types (InvalidArgument); timestamps to
+        epoch ns (_epoch_ns); for materialize/regenerate, a positive
+        delta (0 would divide by zero in the bucket loop, a negative one
+        never ends it) and a registered batch view (KeyError). These
+        two ops run on a planning session they hold, with the views the
+        spec's queries name bound fresh when the op starts."""
+        self.require_admin(fn)
+        method, params, _ = _ADMIN_OPS[fn]
+        names = [p for p, _ in params]
+        kind = inspect.Parameter.POSITIONAL_OR_KEYWORD
+        try:
+            bound = inspect.Signature(
+                [inspect.Parameter(p, kind) for p in names]
+            ).bind(*args, **kwargs).arguments
+        except TypeError as e:
+            raise InvalidArgument(f"{fn}({', '.join(names)}): {e}") from None
+        values = []
+        for p, t in params:
+            v = bound[p]
+            if isinstance(v, bool) or not isinstance(v, t):
+                raise InvalidArgument(f"{fn}(): {p} cannot be {v!r}")
+            values.append(_epoch_ns(v) if t is _TIME else v)
+        if _DELTA not in params:
+            return getattr(self.lakehouse, method), tuple(values)
+        view, begin_ns, end_ns, delta = values
         if delta <= 0:
-            # materialize_range's bucket loop requires a positive
-            # stride — 0 would divide by zero, negative never ends
             raise InvalidArgument(
                 f"{fn}(): partition_delta_seconds must be a positive "
                 f"integer, got {delta}"
             )
-        spec = self.batch_view(view)  # unknown view raises at plan time
-        method = (
-            "materialize_range" if fn == "materialize_partitions" else "regenerate_partitions"
-        )
+        if view not in self._batch_views:
+            raise KeyError(
+                f"unknown batch view {view!r}; register_batch_view() it first "
+                f"(known: {sorted(self._batch_views)})"
+            )
+        spec = self._batch_views[view]
 
         def op(*op_args):
-            with self.lakehouse_for(spec) as lake:
-                return getattr(lake, method)(*op_args)
+            with self.planning_session():
+                spark = self.prepare_views(f"{spec.count_query}\n{spec.extract_query}")
+                return getattr(Lakehouse(spark, self.warehouse), method)(*op_args)
 
         return op, (spec, begin_ns, end_ns, delta * 1_000_000_000)
 
@@ -682,7 +728,8 @@ class Engine:
           bucket-mode view set needs a range (InvalidArgument without
           one): unranged, it would walk every hourly bucket of [0, 2^62);
         - an admin call becomes its (time, msg) task log (S11;
-          materialize/tasklog.py). With ``execute`` the op runs now; in
+          materialize/tasklog.py), its op built by admin_op, as on every
+          other spelling of the op. With ``execute`` the op runs now; in
           schema discovery the log is empty — the admin gate and the
           argument checks run, the op does not, so GetFlightInfo then
           DoGet runs it once.
@@ -706,7 +753,7 @@ class Engine:
             evaluated = []
             for c in calls:
                 if c.fn != "view_instance":
-                    evaluated.append(self._admin_op(c.fn, c.args))
+                    evaluated.append(self.admin_op(c.fn, *c.args))
                     continue
                 vs = self._jit.get(c.args[0])
                 if begin_ns is None and vs is not None and vs.list_blocks is None:
@@ -1043,36 +1090,10 @@ class Engine:
             self._lakehouse = Lakehouse(self.spark, self.warehouse)
         return self._lakehouse
 
-    @contextmanager
-    def lakehouse_for(self, spec):
-        """Hold a planning session and yield the catalog over it, with the
-        views ``spec``'s count and extract queries name bound fresh and
-        unbounded — what every materialize/regenerate op runs on, so a
-        tick reads the views as they are now, whatever statement (if any)
-        ran before it."""
-        with self.planning_session():
-            spark = self.prepare_views(f"{spec.count_query}\n{spec.extract_query}")
-            yield Lakehouse(spark, self.warehouse)
-
     def register_batch_view(self, spec) -> None:
-        """Register a BatchViewSpec so client admin calls can address it by
-        view name (the reference's view_factory registry role)."""
-        if not hasattr(self, "_batch_views"):
-            self._batch_views: dict[str, object] = {}
+        """Register a BatchViewSpec so admin ops can address it by view
+        name (the reference's view_factory registry role)."""
         self._batch_views[spec.name] = spec
-
-    def batch_view(self, name: str):
-        specs = getattr(self, "_batch_views", {})
-        if name not in specs:
-            # deliberately a KeyError (LookupError): the server's admin
-            # boundary maps LookupError to the reference's "not found"
-            # surface (query.rs:150-175 non-admin parity), not to #1435
-            # classification
-            raise KeyError(
-                f"unknown batch view {name!r}; register_batch_view() it first "
-                f"(known: {sorted(specs)})"
-            )
-        return specs[name]
 
     # -- JIT view instances ----------------------------------------------------
 

@@ -18,6 +18,11 @@ result larger than the driver heap. Spark remains the execution engine;
 this is purely the transport the rebuild was missing (in-process
 ``client.Client`` covers the same surface without a network).
 
+The partition-admin ops have four spellings — the planned SQL call, the
+same call streamed by DoGet, ``Client`` and the JSON DoActions — and one
+op table behind them (``Engine.admin_op``): one admin gate, one argument
+check, the partition delta checked positive on every path.
+
 Scale shape: one server process fronts one SparkSession; each call plans
 in a clone of it that it holds alone while planning, taken from the
 engine's pool (``Engine.planning_session``), so concurrent calls never wait
@@ -37,6 +42,19 @@ if TYPE_CHECKING:  # pragma: no cover
     from micromegas_spark.engine import Engine
 
 _HEADERS_KEY = "micromegas-headers"
+
+# The partition-admin DoActions: wire kind → (the Engine.admin_op op it
+# runs, the description list_actions shows). The JSON body carries the
+# op's arguments by parameter name (engine._ADMIN_OPS).
+_ADMIN_ACTIONS = {
+    "RetirePartitions": ("retire_partitions", "admin: drop partitions in range"),
+    "MaterializePartitions": ("materialize_partitions", "admin: build partitions in range"),
+    "RegeneratePartitions": ("regenerate_partitions", "admin: force-rebuild partitions"),
+    "RetirePartitionByFile": ("retire_partition_by_file", "admin: retire one partition file"),
+    "RetirePartitionByMetadata": (
+        "retire_partition_by_metadata", "admin: retire one partition by ids"
+    ),
+}
 
 
 def _selects_one_admin_call(sql: str, calls) -> bool:
@@ -181,13 +199,17 @@ class FlightSQLServer:
     ``grpc://host:port``.
 
     Supported calls (reference parity noted per method):
-    - DoGet(TicketStatementQuery | raw-utf8 SQL) → record-batch stream
+    - DoGet(TicketStatementQuery | raw-utf8 SQL) → record-batch stream;
+      ``SELECT * FROM <admin call>`` streams the op's task log per bucket
     - GetFlightInfo(CommandStatementQuery) → schema + self endpoint
     - DoAction CreatePreparedStatement / ClosePreparedStatement
     - DoPut(CommandStatementIngest) → bulk ingest, DoPutUpdateResult reply
     - DoAction RetirePartitions / MaterializePartitions /
-      RegeneratePartitions / RetirePartitionByFile (JSON body; the
-      reference spells these as SQL UDTFs — admin-gated either way)
+      RegeneratePartitions / RetirePartitionByMetadata /
+      RetirePartitionByFile (_ADMIN_ACTIONS; JSON body by the op's
+      parameter names → ``{"result": …}``; the reference spells these as
+      SQL UDTFs — one op table, Engine.admin_op, behind both)
+    - DoAction CreateApiKey / ListApiKeys / RevokeApiKey (admin-gated)
     """
 
     def __init__(
@@ -232,11 +254,7 @@ class FlightSQLServer:
                 return [
                     ("CreatePreparedStatement", "SQL → result-schema discovery"),
                     ("ClosePreparedStatement", "no-op (stateless handles)"),
-                    ("RetirePartitions", "admin: drop partitions in range"),
-                    ("MaterializePartitions", "admin: build partitions in range"),
-                    ("RegeneratePartitions", "admin: force-rebuild partitions"),
-                    ("RetirePartitionByFile", "admin: retire one partition file"),
-                    ("RetirePartitionByMetadata", "admin: retire one partition by ids"),
+                    *((kind, desc) for kind, (_, desc) in _ADMIN_ACTIONS.items()),
                     ("CreateApiKey", "admin: mint an API key (plaintext returned once)"),
                     ("ListApiKeys", "admin: list API keys with audit trail"),
                     ("RevokeApiKey", "admin: revoke an API key"),
@@ -434,7 +452,7 @@ class FlightSQLServer:
         from an mpsc channel while the spawned task progresses; here a
         queue-backed TaskLog feeds DoGet one record batch per progress
         row while the op runs on a worker thread). The arguments are
-        checked first (Engine._admin_op, as on the planned path), and
+        checked first (Engine.admin_op, as on every spelling), and
         the op runs through TaskLog.run, so its own error becomes the
         final log row and the stream completes cleanly (reference
         producers catch and write, then close). The embedded (non-served)
@@ -450,7 +468,7 @@ class FlightSQLServer:
         from micromegas_spark.materialize.tasklog import TaskLog
 
         flight = _flight()
-        op, op_args = self.engine._admin_op(call.fn, call.args)
+        op, op_args = self.engine.admin_op(call.fn, *call.args)
         q: _queue.SimpleQueue = _queue.SimpleQueue()
         done = object()
 
@@ -566,14 +584,8 @@ class FlightSQLServer:
             return iter([flight.Result(pa.py_buffer(result))])
         if action.type == "ClosePreparedStatement":
             return iter([])  # handles are stateless — nothing to free
-        if action.type in (
-            "RetirePartitions",
-            "MaterializePartitions",
-            "RegeneratePartitions",
-            "RetirePartitionByFile",
-            "RetirePartitionByMetadata",
-        ):
-            return self._admin_action(action.type, body)
+        if action.type in _ADMIN_ACTIONS:
+            return self._admin_action(_ADMIN_ACTIONS[action.type][0], body)
         if action.type in ("CreateApiKey", "ListApiKeys", "RevokeApiKey"):
             return self._apikey_action(action.type, body)
         raise flight.FlightServerError(f"unknown action {action.type!r}")
@@ -623,47 +635,34 @@ class FlightSQLServer:
         payload = json.dumps({"result": out}).encode("utf-8")
         return iter([flight.Result(pa.py_buffer(payload))])
 
-    def _admin_action(self, kind: str, body: bytes):
+    def _admin_action(self, fn: str, body: bytes):
+        """One partition-admin DoAction: the JSON body's fields, read by
+        the op's parameter names, go through Engine.admin_op like every
+        other spelling; the reply is ``{"result": <count or stats>}``.
+        Every failure is classified with a query_id (to_flight_error):
+        argument errors reach the client as ArrowInvalid, the non-admin
+        "not found" (require_admin) as FlightServerError."""
+        import uuid
+
         import pyarrow as pa
 
-        from micromegas_spark.client import Client
+        from micromegas_spark.engine import _ADMIN_OPS
+        from micromegas_spark.flightsql.errors import InvalidArgument, to_flight_error
 
         flight = _flight()
-        args = json.loads(body.decode("utf-8")) if body else {}
-        client = Client(self.engine)
         try:
-            if kind == "RetirePartitions":
-                out = client.retire_partitions(
-                    args["view_set_name"], args["begin"], args["end"]
-                )
-            elif kind == "RetirePartitionByMetadata":
-                out = client.retire_partition_by_metadata(
-                    args["view_set_name"],
-                    args["view_instance_id"],
-                    args["begin"],
-                    args["end"],
-                )
-            elif kind == "RetirePartitionByFile":
-                out = client.retire_partition_by_file(args["file_path"])
-            else:
-                fn = (
-                    client.materialize_partitions
-                    if kind == "MaterializePartitions"
-                    else client.regenerate_partitions
-                )
-                out = fn(
-                    args["view_name"],
-                    args["begin"],
-                    args["end"],
-                    int(args["partition_delta_seconds"]),
-                )
-        except PermissionError as e:
-            raise flight.FlightUnauthorizedError(str(e))
-        except LookupError as e:
-            # non-admin parity: the reference never registers the admin
-            # functions, so the user-visible failure is "not found"
-            # (engine.require_admin mirrors query.rs:150-175)
-            raise flight.FlightServerError(str(e))
+            try:
+                args = dict(json.loads(body or b"{}"))
+            except (ValueError, TypeError) as e:
+                raise InvalidArgument(f"{fn}: the body is not a JSON object: {e}") from None
+            _, params, _ = _ADMIN_OPS[fn]
+            op, op_args = self.engine.admin_op(
+                fn, **{p: args[p] for p, _ in params if p in args}
+            )
+            out = op(*op_args)
+        except Exception as e:
+            _cls, err = to_flight_error(e, uuid.uuid4().hex[:16])
+            raise err from None
         payload = json.dumps({"result": out}).encode("utf-8")
         return iter([flight.Result(pa.py_buffer(payload))])
 

@@ -296,8 +296,19 @@ def test_bulk_ingest_rejects_non_table(client):
 
 
 def test_admin_actions_over_wire(spark, tmp_path_factory):
+    """All five partition-admin DoActions against a registered log_stats
+    view, each returning {"result": v} where v is what the in-process
+    Client method returns on the same warehouse and catalog state
+    (materialize stats with `created`, then regenerate, retire by
+    metadata, by file and by range: counts 1/1/n). Argument errors —
+    a missing field, an unreadable timestamp — reach the client as
+    ArrowInvalid with a query_id; non-admin stays "not found"."""
+    from micromegas_spark.client import Client
+
     wh = str(tmp_path_factory.mktemp("flight_admin"))
-    adm = Engine(spark, warehouse=wh)  # admin by default
+    adm, lo, hi, _ = _admin_engine_with_logstats(spark, wh)
+    local = Client(adm)
+    parts = lambda: adm.lakehouse.list_partitions("log_stats")  # noqa: E731
     with FlightSQLServer(adm) as srv, FlightSQLClient(srv.uri) as c:
         out = c.retire_partitions(
             "no_such_view",
@@ -305,6 +316,37 @@ def test_admin_actions_over_wire(spark, tmp_path_factory):
             datetime.datetime(2024, 1, 2, tzinfo=datetime.timezone.utc),
         )
         assert out == {"result": 0}
+
+        stats = c.materialize_partitions("log_stats", lo, hi, 3600)["result"]
+        assert stats.get("created", 0) >= 1
+        n = len(parts())
+        assert local.retire_partitions("log_stats", lo, hi) == n
+        assert local.materialize_partitions("log_stats", lo, hi, 3600) == stats
+        regenerated = local.regenerate_partitions("log_stats", lo, hi, 3600)
+        assert c.regenerate_partitions("log_stats", lo, hi, 3600) == {"result": regenerated}
+        assert regenerated.get("created", 0) >= 1 and len(parts()) == n
+
+        for name, args, count in (
+            (
+                "retire_partition_by_metadata",
+                lambda p: ("log_stats", "global", p.begin_insert_ns, p.end_insert_ns),
+                1,
+            ),
+            ("retire_partition_by_file", lambda p: (p.path,), 1),
+            ("retire_partitions", lambda p: ("log_stats", lo, hi), n),
+        ):
+            assert getattr(local, name)(*args(parts()[0])) == count
+            local.materialize_partitions("log_stats", lo, hi, 3600)
+            assert getattr(c, name)(*args(parts()[0])) == {"result": count}
+            local.materialize_partitions("log_stats", lo, hi, 3600)
+
+        with pytest.raises(pa.lib.ArrowInvalid, match="partition_delta_seconds") as e:
+            c._admin("MaterializePartitions", view_name="log_stats", begin=lo, end=hi)
+        assert "query_id=" in str(e.value)
+        with pytest.raises(pa.lib.ArrowInvalid, match="unreadable timestamp") as e:
+            c.retire_partitions("log_stats", "not a time", hi)
+        assert "query_id=" in str(e.value)
+        assert len(parts()) == n
 
     non = Engine(spark, warehouse=wh + "_na", admin=False)
     with FlightSQLServer(non) as srv, FlightSQLClient(srv.uri) as c:
@@ -501,21 +543,46 @@ def test_tasklog_stream_failure_is_final_row(spark, tmp_path_factory):
     assert msgs and msgs[-1].startswith("error: ")
 
 
-def test_tasklog_stream_admin_gate_and_bad_delta(spark, tmp_path_factory):
-    """Parity with the rewrite path: non-admin gets 'not found'; a
-    non-positive delta is an InvalidArgument BEFORE any op runs."""
+def test_tasklog_stream_admin_gate_and_bad_delta(spark, tmp_path_factory, monkeypatch):
+    """Every spelling of materialize/regenerate checks the partition
+    delta: 0 and -60 are refused with InvalidArgument before any bucket
+    is looked at — the planned SQL statement (in process and over DoGet),
+    the streamed DoGet, Client and the DoActions; over the wire as
+    ArrowInvalid. (0 would divide by zero in the bucket loop, a negative
+    delta never ends it: the guard below makes such a loop fail fast.)
+    A non-admin server reports the call "not found"."""
+    from micromegas_spark.client import Client
+    from micromegas_spark.engine import InvalidArgument
+    from micromegas_spark.materialize.batch import Lakehouse
+
     wh = str(tmp_path_factory.mktemp("flight_tasklog_gate"))
     eng, lo, hi, _ = _admin_engine_with_logstats(spark, wh)
-    import pyarrow as pa
+    buckets: list[int] = []
 
-    with FlightSQLServer(eng) as srv, flight.FlightClient(srv.uri) as raw:
-        # caller mistake → gRPC InvalidArgument → pyarrow ArrowInvalid
-        with pytest.raises(pa.lib.ArrowInvalid, match="positive"):
-            raw.do_get(
-                flight.Ticket(
-                    f"SELECT * FROM materialize_partitions('log_stats', '{lo}', '{hi}', 0)".encode()
-                )
-            ).read_all()
+    def guard(self, spec, b, e):
+        buckets.append(b)
+        raise RuntimeError("a bucket was looked at")
+
+    monkeypatch.setattr(Lakehouse, "materialize_bucket", guard)
+    local = Client(eng)
+    with FlightSQLServer(eng) as srv, FlightSQLClient(srv.uri) as c:
+        for delta in (0, -60):
+            for fn in ("materialize_partitions", "regenerate_partitions"):
+                call = f"{fn}('log_stats', '{lo}', '{hi}', {delta})"
+                with pytest.raises(InvalidArgument, match="positive"):
+                    eng.query(f"SELECT * FROM {call}")
+                with pytest.raises(InvalidArgument, match="positive"):
+                    getattr(local, fn)("log_stats", lo, hi, delta)
+                # streamed (selected whole), then planned
+                for sql in (f"SELECT * FROM {call}", f"SELECT msg FROM {call}"):
+                    with pytest.raises(pa.lib.ArrowInvalid, match="positive"):
+                        c._client.do_get(flight.Ticket(sql.encode())).read_all()
+                with pytest.raises(pa.lib.ArrowInvalid, match="positive") as e:
+                    getattr(c, fn)("log_stats", lo, hi, delta)
+                assert "query_id=" in str(e.value)
+    assert buckets == []
+    assert eng.lakehouse.list_partitions("log_stats") == []
+
     non = Engine(spark, warehouse=wh + "_na", admin=False)
     with FlightSQLServer(non) as srv, flight.FlightClient(srv.uri) as raw:
         with pytest.raises(flight.FlightError, match="not found"):
